@@ -1,486 +1,30 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the PySpark engine.
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` /
-``oracle_sql()`` expose every implemented operator from SURVEY.md §2 with
-its DuckDB oracle twin. Column names are aliased identically on both
-sides; aggregate arithmetic goes through exact decimal sums cast to
-double, and all content hashing uses a shared md5 construct, so value
-hashes match across engines bit-for-bit (including LSH candidate
-generation).
+``oracle_sql()`` expose every registered operator with its DuckDB oracle
+twin. Column names are aliased identically on both sides; aggregate
+arithmetic goes through exact decimal sums cast to double, and all content
+hashing uses a shared md5 construct, so value hashes match across engines
+bit-for-bit (including LSH candidate generation).
+
+Registering a key: bind it in a module-level ``FOO_QUERIES`` dict (key ->
+``fn(spark, sf_dir) -> DataFrame``) and its oracle in a ``FOO_ORACLES``
+dict (key -> DuckDB SQL), in any module under ``operators/``, ``plans/``
+or ``streaming/``. ``discover`` imports those modules in sorted order and
+merges every such dict, so no list needs editing. A key bound to two
+different values is an error. ``_DEMOTED`` hides a key from both maps;
+``_REGISTER_FIRST`` puts keys first.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
+import pkgutil
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_example_spark.operators import (
-    BOILERSTRIP_ORACLES,
-    BOILERSTRIP_QUERIES,
-    BPE_ORACLES,
-    BPE_QUERIES,
-    C4_ORACLES,
-    C4_QUERIES,
-    CALIBRATION_ORACLES,
-    CALIBRATION_QUERIES,
-    CONTAINMENT_ORACLES,
-    CONTAINMENT_QUERIES,
-    PMI_ORACLES,
-    PMI_QUERIES,
-    DOMAINSHIFT_ORACLES,
-    DOMAINSHIFT_QUERIES,
-    DSIR_ORACLES,
-    DSIR_QUERIES,
-    EVALUATION_ORACLES,
-    EVALUATION_QUERIES,
-    INCREMENTAL_ORACLES,
-    INCREMENTAL_QUERIES,
-    EMBEDNORM_ORACLES,
-    EMBEDNORM_QUERIES,
-    FUNNEL_ORACLES,
-    FUNNEL_QUERIES,
-    CHARLM_ORACLES,
-    CHARLM_QUERIES,
-    CLUSTER_ORACLES,
-    CLUSTER_QUERIES,
-    CLUSTERTOPICS_ORACLES,
-    CLUSTERTOPICS_QUERIES,
-    CORPUS_ORACLES,
-    CORPUS_QUERIES,
-    CORPUSSTATS_ORACLES,
-    CORPUSSTATS_QUERIES,
-    DECONTAM_FUZZY_ORACLES,
-    DECONTAM_FUZZY_QUERIES,
-    DIAGNOSTICS_ORACLES,
-    DIAGNOSTICS_QUERIES,
-    DOMAIN_ORACLES,
-    DOMAIN_QUERIES,
-    DECONTAM_ORACLES,
-    DECONTAM_QUERIES,
-    DEDUP_ORACLES,
-    DEDUP_QUERIES,
-    MEDIAHDR_ORACLES,
-    MEDIAHDR_QUERIES,
-    MM_ORACLES,
-    MM_QUERIES,
-    NORMALIZE_ORACLES,
-    NORMALIZE_QUERIES,
-    NOVELTY_ORACLES,
-    NOVELTY_QUERIES,
-    PCA_ORACLES,
-    PCA_QUERIES,
-    RP_ORACLES,
-    RP_QUERIES,
-    SAVINGS_ORACLES,
-    SAVINGS_QUERIES,
-    RPRERANK_ORACLES,
-    RPRERANK_QUERIES,
-    SHARD_ORACLES,
-    SHARD_QUERIES,
-    SIM_ORACLES,
-    SIM_QUERIES,
-    SOURCEQUALITY_ORACLES,
-    SOURCEQUALITY_QUERIES,
-    SPANDUP_ORACLES,
-    SPANDUP_QUERIES,
-    QLINEAR_ORACLES,
-    QLINEAR_QUERIES,
-    QTRAIN_ORACLES,
-    QTRAIN_QUERIES,
-    ANNRADIUS_ORACLES,
-    ANNRADIUS_QUERIES,
-    AUDIOCLIP_ORACLES,
-    AUDIOCLIP_QUERIES,
-    SPLITLEAK_ORACLES,
-    SPLITLEAK_QUERIES,
-    LANGMARGIN_ORACLES,
-    LANGMARGIN_QUERIES,
-    BLOCKLIST_ORACLES,
-    BLOCKLIST_QUERIES,
-    BM25_ORACLES,
-    BM25_QUERIES,
-    CMSKETCH_ORACLES,
-    CMSKETCH_QUERIES,
-    EDITDIST_ORACLES,
-    EDITDIST_QUERIES,
-    HLL_ORACLES,
-    HLL_QUERIES,
-    JPEGDCHASH_ORACLES,
-    JPEGDCHASH_QUERIES,
-    RRF_ORACLES,
-    RRF_QUERIES,
-    RETRAGREE_ORACLES,
-    RETRAGREE_QUERIES,
-    JPEGDECODE_ORACLES,
-    JPEGDECODE_QUERIES,
-    JPEGPROG_ORACLES,
-    JPEGPROG_QUERIES,
-    MP3_ORACLES,
-    MP3_QUERIES,
-    DPCLIP_ORACLES,
-    DPCLIP_QUERIES,
-    URLCANON_ORACLES,
-    URLCANON_QUERIES,
-    KMV_ORACLES,
-    KMV_QUERIES,
-    BURST_ORACLES,
-    BURST_QUERIES,
-    TFCOS_ORACLES,
-    TFCOS_QUERIES,
-    SHUFFLEAUDIT_ORACLES,
-    SHUFFLEAUDIT_QUERIES,
-    BM25PRF_ORACLES,
-    BM25PRF_QUERIES,
-    MOMENTS_ORACLES,
-    MOMENTS_QUERIES,
-    KANON_ORACLES,
-    KANON_QUERIES,
-    WINNOW_ORACLES,
-    WINNOW_QUERIES,
-    CUSUM_ORACLES,
-    CUSUM_QUERIES,
-    SHARDBALANCE_ORACLES,
-    SHARDBALANCE_QUERIES,
-    ALLOCATION_ORACLES,
-    ALLOCATION_QUERIES,
-    CHARSTATS_ORACLES,
-    CHARSTATS_QUERIES,
-    RETRIEVAL_ORACLES,
-    RETRIEVAL_QUERIES,
-    PIIREPORT_ORACLES,
-    PIIREPORT_QUERIES,
-    NEARINCREMENTAL_ORACLES,
-    NEARINCREMENTAL_QUERIES,
-    TRUNCTUNE_ORACLES,
-    TRUNCTUNE_QUERIES,
-    COMPRESSQ_ORACLES,
-    COMPRESSQ_QUERIES,
-    SLIDING_ORACLES,
-    SLIDING_QUERIES,
-    PACKSTATS_ORACLES,
-    PACKSTATS_QUERIES,
-    MIXTEMP_ORACLES,
-    MIXTEMP_QUERIES,
-    DQRULES_ORACLES,
-    DQRULES_QUERIES,
-    SKEWPROFILE_ORACLES,
-    SKEWPROFILE_QUERIES,
-    LENGTHKS_ORACLES,
-    LENGTHKS_QUERIES,
-    ANNRECALL_ORACLES,
-    ANNRECALL_QUERIES,
-    QUALITYENSEMBLE_ORACLES,
-    PREFIXDUP_ORACLES,
-    LEXICON_ORACLES,
-    BLOOMGATE_ORACLES,
-    WSAMPLE_ORACLES,
-    QUALITYENSEMBLE_QUERIES,
-    PREFIXDUP_QUERIES,
-    LEXICON_QUERIES,
-    BLOOMGATE_QUERIES,
-    WSAMPLE_QUERIES,
-    SHARDMANIFEST_ORACLES,
-    SHARDMANIFEST_QUERIES,
-    TEXT_ORACLES,
-    TEXT_QUERIES,
-    TUNING_ORACLES,
-    TUNING_QUERIES,
-    ZIPF_ORACLES,
-    ZIPF_QUERIES,
-)
-from etl_pipeline_example_spark.plans import (
-    ANALYTIC_ORACLES,
-    ANALYTIC_QUERIES,
-    BASKET_ORACLES,
-    BASKET_QUERIES,
-    ENGAGEMENT_ORACLES,
-    ENGAGEMENT_QUERIES,
-    LOGISTICS_ORACLES,
-    LOGISTICS_QUERIES,
-    BEHAVIOR_ORACLES,
-    BEHAVIOR_QUERIES,
-    CONCENTRATION_ORACLES,
-    CONCENTRATION_QUERIES,
-    PATTERN_ORACLES,
-    PATTERN_QUERIES,
-    PROFILE_ORACLES,
-    PROFILE_QUERIES,
-    RELATIONAL_ORACLES,
-    RELATIONAL_QUERIES,
-    SCALE_ORACLES,
-    SCALE_QUERIES,
-    RECON_ORACLES,
-    RECON_QUERIES,
-    SCD2_ORACLES,
-    SCD2_QUERIES,
-    SEASONAL_ORACLES,
-    SEASONAL_QUERIES,
-    DRIFT_ORACLES,
-    DRIFT_QUERIES,
-)
-from etl_pipeline_example_spark.plans.parity import PARITY_ORACLES, PARITY_QUERIES
-from etl_pipeline_example_spark.plans.tpch_extra import (
-    TPCH_EXTRA_ORACLES,
-    TPCH_EXTRA_QUERIES,
-)
-from etl_pipeline_example_spark.operators import (
-    BIGRAMCOV_ORACLES,
-    BIGRAMCOV_QUERIES,
-    CLUSTERSIZES_ORACLES,
-    CLUSTERSIZES_QUERIES,
-    BANDSTATS_ORACLES,
-    BANDSTATS_QUERIES,
-    BUDGETCURVE_ORACLES,
-    BUDGETCURVE_QUERIES,
-    HAMMINGHIST_ORACLES,
-    HAMMINGHIST_QUERIES,
-    LENGINI_ORACLES,
-    LENGINI_QUERIES,
-    READABILITY_ORACLES,
-    READABILITY_QUERIES,
-    SOURCEOVERLAP_ORACLES,
-    SOURCEOVERLAP_QUERIES,
-    MEDIAPIXELS_ORACLES,
-    MEDIAPIXELS_QUERIES,
-    SURVIVOR_ORACLES,
-    SURVIVOR_QUERIES,
-    LANGEVAL_ORACLES,
-    LANGEVAL_QUERIES,
-    CHARTRIGRAM_ORACLES,
-    CHARTRIGRAM_QUERIES,
-    FERTILITY_ORACLES,
-    FERTILITY_QUERIES,
-    BPEINDEX_ORACLES,
-    BPEINDEX_QUERIES,
-    EPOCHS_ORACLES,
-    EPOCHS_QUERIES,
-    SPANCORRUPT_ORACLES,
-    SPANCORRUPT_QUERIES,
-    ANNFILTERED_ORACLES,
-    ANNFILTERED_QUERIES,
-    DATACARD_ORACLES,
-    DATACARD_QUERIES,
-    CARDDIFF_ORACLES,
-    CARDDIFF_QUERIES,
-    CDCHUNK_ORACLES,
-    CDCHUNK_QUERIES,
-    OOV_ORACLES,
-    OOV_QUERIES,
-    PIXELDIVERSITY_ORACLES,
-    PIXELDIVERSITY_QUERIES,
-    PHASH_ORACLES,
-    PHASH_QUERIES,
-    PHASHDUP_ORACLES,
-    PHASHDUP_QUERIES,
-    VOCABGROWTH_ORACLES,
-    VOCABGROWTH_QUERIES,
-    MEDIARESIZE_ORACLES,
-    MEDIARESIZE_QUERIES,
-    AUDIOFEAT_ORACLES,
-    AUDIOFEAT_QUERIES,
-    CHARSIMPSON_ORACLES,
-    CHARSIMPSON_QUERIES,
-    HASHFEAT_ORACLES,
-    HASHFEAT_QUERIES,
-    KNNJOIN_ORACLES,
-    KNNJOIN_QUERIES,
-    AUDIOZCR_ORACLES,
-    AUDIOZCR_QUERIES,
-    GOPHER_ORACLES,
-    GOPHER_QUERIES,
-    CURRICULUM_ORACLES,
-    CURRICULUM_QUERIES,
-    RANKSHIFT_ORACLES,
-    RANKSHIFT_QUERIES,
-    SIGNSKETCH_ORACLES,
-    SIGNSKETCH_QUERIES,
-    MULTIPROBE_ORACLES,
-    MULTIPROBE_QUERIES,
-    IVFBALANCE_ORACLES,
-    IVFBALANCE_QUERIES,
-    COSINEHIST_ORACLES,
-    COSINEHIST_QUERIES,
-)
-from etl_pipeline_example_spark.plans import (
-    LATEST_ORACLES,
-    FRAMES_ORACLES,
-    COHORT_ORACLES,
-    QUANTILES_ORACLES,
-    SQLFACADE_ORACLES,
-    INTERVALS_ORACLES,
-    GROWTH_ORACLES,
-    BENFORD_ORACLES,
-    SALTEDAGG_ORACLES,
-    ABTEST_ORACLES,
-    ROLLING_ORACLES,
-    SCD2ASOF_ORACLES,
-    BALANCE_ORACLES,
-    DIMLIFT_ORACLES,
-    ATTRIBUTION_ORACLES,
-    LATEST_QUERIES,
-    BFS_ORACLES,
-    BFS_QUERIES,
-    ASOF_ORACLES,
-    ASOF_QUERIES,
-    FRAMES_QUERIES,
-    COHORT_QUERIES,
-    QUANTILES_QUERIES,
-    SQLFACADE_QUERIES,
-    INTERVALS_QUERIES,
-    GROWTH_QUERIES,
-    BENFORD_QUERIES,
-    SALTEDAGG_QUERIES,
-    ABTEST_QUERIES,
-    ROLLING_QUERIES,
-    SCD2ASOF_QUERIES,
-    BALANCE_QUERIES,
-    DIMLIFT_QUERIES,
-    ATTRIBUTION_QUERIES,
-    RANKFAMILY_ORACLES,
-    RANKFAMILY_QUERIES,
-    TIMEROLLUP_ORACLES,
-    TIMEROLLUP_QUERIES,
-    CDC_ORACLES,
-    CDC_QUERIES,
-    PARTIALAGG_ORACLES,
-    PARTIALAGG_QUERIES,
-    ORDERGAP_ORACLES,
-    ORDERGAP_QUERIES,
-    YOY_ORACLES,
-    YOY_QUERIES,
-    SKYLINE_ORACLES,
-    SKYLINE_QUERIES,
-    MODEAGG_ORACLES,
-    MODEAGG_QUERIES,
-    SEGMENTS_ORACLES,
-    SEGMENTS_QUERIES,
-    FRESHNESS_ORACLES,
-    FRESHNESS_QUERIES,
-    DECILE_ORACLES,
-    DECILE_QUERIES,
-    STREAKS_ORACLES,
-    STREAKS_QUERIES,
-    DISTINCTCUBE_ORACLES,
-    DISTINCTCUBE_QUERIES,
-    GROUPPCT_ORACLES,
-    GROUPPCT_QUERIES,
-    NUMCORR_ORACLES,
-    NUMCORR_QUERIES,
-    TRANSITIONS_ORACLES,
-    TRANSITIONS_QUERIES,
-    GROUPREG_ORACLES,
-    GROUPREG_QUERIES,
-    DIVERSITY_ORACLES,
-    DIVERSITY_QUERIES,
-    VOLUMEZ_ORACLES,
-    VOLUMEZ_QUERIES,
-    NULLSAFE_ORACLES,
-    NULLSAFE_QUERIES,
-    REFERENTIAL_ORACLES,
-    REFERENTIAL_QUERIES,
-    RANGEJOIN_ORACLES,
-    RANGEJOIN_QUERIES,
-    IQR_ORACLES,
-    IQR_QUERIES,
-    WMEDIAN_ORACLES,
-    WMEDIAN_QUERIES,
-    PKAUDIT_ORACLES,
-    PKAUDIT_QUERIES,
-    SPINE_ORACLES,
-    SPINE_QUERIES,
-    INTERP_ORACLES,
-    INTERP_QUERIES,
-    CHECKSUM_ORACLES,
-    CHECKSUM_QUERIES,
-    GRAPH_ORACLES,
-    GRAPH_QUERIES,
-    WILSON_ORACLES,
-    WILSON_QUERIES,
-    DECAY_ORACLES,
-    DECAY_QUERIES,
-    BACKLOG_ORACLES,
-    BACKLOG_QUERIES,
-    DRAWDOWN_ORACLES,
-    DRAWDOWN_QUERIES,
-    BANDJOIN_ORACLES,
-    BANDJOIN_QUERIES,
-    EQUIDEPTH_ORACLES,
-    EQUIDEPTH_QUERIES,
-    HHI_ORACLES,
-    HHI_QUERIES,
-    GRAPHITER_ORACLES,
-    GRAPHITER_QUERIES,
-    ROLLMED_ORACLES,
-    ROLLMED_QUERIES,
-    FIFO_ORACLES,
-    FIFO_QUERIES,
-    BITMAPDOW_ORACLES,
-    BITMAPDOW_QUERIES,
-    FUNCDEP_ORACLES,
-    FUNCDEP_QUERIES,
-    OHLC_ORACLES,
-    OHLC_QUERIES,
-    BOLLINGER_ORACLES,
-    BOLLINGER_QUERIES,
-    LINKPRED_ORACLES,
-    LINKPRED_QUERIES,
-    CONCURRENCY_ORACLES,
-    CONCURRENCY_QUERIES,
-    SEQGAPS_ORACLES,
-    SEQGAPS_QUERIES,
-    CUMDISTINCT_ORACLES,
-    CUMDISTINCT_QUERIES,
-    STICKINESS_ORACLES,
-    STICKINESS_QUERIES,
-    RUNS_ORACLES,
-    RUNS_QUERIES,
-    PRORATION_ORACLES,
-    PRORATION_QUERIES,
-    TVD_ORACLES,
-    TVD_QUERIES,
-    ASSORT_ORACLES,
-    ASSORT_QUERIES,
-    BASKETLIFT_ORACLES,
-    BASKETLIFT_QUERIES,
-    MOVERS_ORACLES,
-    MOVERS_QUERIES,
-    KEYCOLLISION_ORACLES,
-    KEYCOLLISION_QUERIES,
-    CLUSTERCOEFF_ORACLES,
-    CLUSTERCOEFF_QUERIES,
-    BOUNCE_ORACLES,
-    BOUNCE_QUERIES,
-    AUDIENCE_ORACLES,
-    AUDIENCE_QUERIES,
-    IVM_ORACLES,
-    IVM_QUERIES,
-    SESSIONDEPTH_ORACLES,
-    SESSIONDEPTH_QUERIES,
-    NULLCENSUS_ORACLES,
-    NULLCENSUS_QUERIES,
-    MUTUALTOP_ORACLES,
-    MUTUALTOP_QUERIES,
-    DUPROWS_ORACLES,
-    DUPROWS_QUERIES,
-    LAGSPEARMAN_ORACLES,
-    LAGSPEARMAN_QUERIES,
-    DISTINCTCENSUS_ORACLES,
-    DISTINCTCENSUS_QUERIES,
-    FANO_ORACLES,
-    FANO_QUERIES,
-    PARTCHECKSUM_ORACLES,
-    PARTCHECKSUM_QUERIES,
-    KCORE_ORACLES,
-    KCORE_QUERIES,
-    NODEJACCARD_ORACLES,
-    NODEJACCARD_QUERIES,
-    TRIPLES_ORACLES,
-    TRIPLES_QUERIES,
-    DECILEMIG_ORACLES,
-    DECILEMIG_QUERIES,
-)
-from etl_pipeline_example_spark.streaming import STREAM_ORACLES, STREAM_QUERIES
+from etl_pipeline_example_spark.plans.queries import ANALYTIC_QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -488,599 +32,119 @@ def entry(spark: SparkSession) -> DataFrame:
     return ANALYTIC_QUERIES["q_calculated"](spark, "/root/testdata/sf0.001")
 
 
-# Registration order matters: the driver grades queries in insertion order
-# under a ~50-row budget cap, so each round the window rotates to the
-# entries that most need fresh evidence. ROUND 16 executes the rotation
-# committed at round-15 end (pre-verified 50/50 strict at the round-15
-# final tree, and the 12 first-evidence entries independently
-# re-verified strict bit-exact by the round-15 judge — no no-oracle
-# entries in the window, every slot gradable):
-#
-#   (1) first evidence — the 12 round-15 additions, registration order
-#       (bm25_rank ... stream_hll_registers);
-#   (2) 38 oldest-stale entries (r9/r10 evidence), oldest first,
-#       registration order within a round (q_rank_family ...
-#       ann_int8_rerank), filling to exactly 50 (12 + 38).
-#       ann_pq_adc, ann_ivfpq, multimodal_meta and
-#       multimodal_framesample are the next four stale and roll to
-#       r17; the rows-only dq_profile_approx/embed_pca stay out per
-#       the full-oracle window rule; quality_compress remains the
-#       documented no-oracle pytest-contract entry.
-#
-# Everything else rides the freeze manifest (tools/frozen_hashes.json,
-# enforced by tests/test_freeze.py): previously-green entries keep their
-# prior-round evidence because their backing closures are byte-identical.
-#
-# ROUND-18 PLAN (committed at round-17 end, execute next round):
-# _REGISTER_FIRST := exactly these 50, in this order —
-#   1. first evidence — the 7 round-17 additions, registration order:
-#      multimodal_decode_mp3, multimodal_mp3_subband,
-#      privacy_contribution_bound, dedup_url_canonical,
-#      graph_bfs_layers, q_asof_nearest, stream_cusum_shift
-#   2. fill to exactly 50 with the 43 oldest-stale entries (r11/r12
-#      evidence), oldest first, registration order within a round:
-#      agg_merge_states, q_order_gap_dist, q_yoy_growth, q_skyline_2d,
-#      q_mode_per_group, q_behavior_segments, dq_freshness,
-#      q_decile_lift, q_active_streak, q_distinct_cube,
-#      q_group_percentiles, q_numeric_corr, q_event_transitions,
-#      multimodal_phash, multimodal_phash_dups, vocab_growth,
-#      multimodal_resize, multimodal_audio_energy, text_char_simpson,
-#      q_group_regression, q_user_diversity, dq_volume_zscore,
-#      q_null_safe_join, dedup_survivor_policy, lang_confusion,
-#      ngram_lang_profile, stream_topk, q17_small_quantity,
-#      q18_large_orders, q22_idle_rich, q8_mktshare, q9_profit,
-#      q10_returns, q11_part_value, q15_top_supplier, q16_supplier_cnt,
-#      q19_disjunctive, q21_sole_fault, quality_buckets, text_normalize,
-#      dedup_containment, ann_rp_rerank, cluster_topics
-#      — 43 fill slots (7 + 43 = 50).
-#      (corpus_stats, dup_rate_by_source, dedup_incremental and
-#      embed_outliers are the next four stale and roll to r19; the
-#      rows-only dq_profile_approx/embed_pca stay out per the
-#      full-oracle window rule; quality_compress remains the
-#      documented no-oracle pytest-contract entry.)
+PACKAGES = (
+    "etl_pipeline_example_spark.operators",
+    "etl_pipeline_example_spark.plans",
+    "etl_pipeline_example_spark.streaming",
+)
+
+# Grading scores only the first <=50 keys of queries(); the rest keep the
+# evidence of the round that last graded them, which holds only while the
+# code behind them is byte-identical (tools/frozen_hashes.json, enforced by
+# tests/test_freeze.py). A key whose backing closure changed must rotate
+# into this window before ``python tools/freeze.py`` is rerun.
 _REGISTER_FIRST = [
-    # --- (1) first evidence: the 14 round-16 additions, registration order
-    "multimodal_decode_jpeg2",
-    "sketch_kmv_distinct",
-    "stream_kmv_registers",
-    "events_burst_topk",
-    "dedup_tfidf_cosine",
-    "shuffle_run_audit",
-    "bm25_prf",
+    # backed by operators/{cluster,dedup,pq,semdedup}.py or
+    # plans/{bfs,graph,graphiter,kcore,linkpred,nodejaccard}.py
+    "contamination_minhash",
+    "minhash_calibration",
+    "dedup_savings",
+    "minhash_tune",
+    "ann_radius",
+    "split_leakage",
+    "dedup_editdist",
+    "neardup_incremental",
+    "ann_recall_matrix",
+    "dedup_exact",
+    "dedup_minhash",
+    "dedup_simhash",
+    "ngram_jaccard",
+    "dedup_cluster",
+    "ann_bruteforce",
+    "ann_lsh",
+    "ann_ivf",
+    "dedup_embedding_lsh",
+    "embed_quantize",
+    "semdedup_prune_2l",
+    "semdedup_canonical",
+    "ann_int8_rerank",
+    "simhash_hamming_hist",
+    "source_overlap_matrix",
+    "minhash_band_occupancy",
+    "graph_bfs_layers",
+    "graph_degree_hist",
+    "graph_triangles",
+    "graph_cc",
+    "graph_pagerank",
+    "graph_common_neighbors",
+    "graph_assortativity",
+    "graph_clustering_coeff",
+    "graph_kcore2",
+    "graph_node_jaccard",
+    "ann_knn_join",
+    "ann_multiprobe",
+    "embed_cosine_hist",
+    "stream_neardup_gate",
+    "stream_neardup_gate_indexed",
+    # never graded yet
+    "multimodal_decode_mp3",
+    "multimodal_mp3_subband",
+    "privacy_contribution_bound",
+    "dedup_url_canonical",
+    "q_asof_nearest",
+    "stream_cusum_shift",
+    # still failing the graded hash check
     "sketch_moments",
-    "privacy_k_anonymity",
-    "privacy_l_diversity",
-    "privacy_t_closeness",
     "stream_moments",
-    "dedup_winnow_pairs",
-    "events_cusum_shift",
-    # --- (2) 36 oldest-stale (r10/r11 evidence), oldest first
-    "ann_pq_adc",
-    "ann_ivfpq",
-    "multimodal_meta",
-    "multimodal_framesample",
-    "q_range_frame",
-    "q_unpivot_measures",
-    "q_value_window",
-    "q_cohort_ltv",
-    "q_quantile_counting",
-    "q_interval_merge",
-    "q_growth_accounting",
-    "dq_benford",
-    "agg_salted",
-    "q_ab_chi2",
-    "q_rolling_actives",
-    "q_scd2_asof",
-    "q_period_balance",
-    "q_dim_lift",
-    "q_attribution",
-    "stream_dq_quarantine",
-    "stream_sliding",
-    "q_distinct_agg",
-    "q_percentiles",
-    "q2_argmin",
-    "q7_volume",
-    "q_window_funnel",
-    "q_retention",
-    "q_event_path",
-    "scd2_merge",
-    "q_full_outer_recon",
-    "q_rfm",
-    "q_sequence_match",
-    "anomaly_mad",
-    "q_basket_pairs",
-    "q_sql_shared_dialect",
-    "cdc_apply",
+    # oldest evidence
+    "agg_merge_states",
+    "q_order_gap_dist",
 ]
 
-
-def _ordered(full: dict) -> dict:
-    out = {k: full[k] for k in _REGISTER_FIRST if k in full}
-    out.update({k: v for k, v in full.items() if k not in out})
-    return out
-
-
-
-# Demoted to pytest-only (round-11 verdict ask #3, the dedup_embedding/
-# semdedup_prune precedent): the in-op-RETRAINING bpe_encode/
-# bpe_fertility forms re-learn the merge table on every run — the
-# registry grades the production shape, which is the persisted-artifact
-# bpe_encode_indexed/bpe_fertility_indexed pair (operators/bpeindex.py,
-# in the round-12 grading window). The retraining forms stay fully
-# oracle-tested in tests/test_operators_oracle.py and equality-pinned
-# against the indexed twins in the bpeindex pytests.
+# The retraining bpe_encode/bpe_fertility forms re-learn the merge table on
+# every run; the registry grades the persisted-artifact pair in
+# operators/bpeindex.py instead. tests/test_operators_oracle.py keeps the
+# retraining forms oracle-tested.
 _DEMOTED = ("bpe_encode", "bpe_fertility")
 
 
-def _finalize(out: dict) -> dict:
-    for k in _DEMOTED:
-        out.pop(k, None)
-    return _ordered(out)
+def discover(packages: Iterable[str]) -> dict[str, dict]:
+    """Merge the module-level ``*_QUERIES`` and ``*_ORACLES`` dicts of every
+    module in ``packages`` (sorted module order; a key keeps its first
+    position) into ``{"_QUERIES": {...}, "_ORACLES": {...}}``.
+
+    Raises ``ValueError`` when one key is bound to two different values."""
+    found: dict[str, dict] = {"_QUERIES": {}, "_ORACLES": {}}
+    owner: dict[tuple[str, str], str] = {}
+    for package in packages:
+        path = importlib.import_module(package).__path__
+        for name in sorted(m.name for m in pkgutil.iter_modules(path)):
+            module = importlib.import_module(f"{package}.{name}")
+            for attr, table in vars(module).items():
+                suffix = attr[attr.rfind("_") :]
+                if suffix not in found or not isinstance(table, dict):
+                    continue
+                where = f"{module.__name__}.{attr}"
+                for key, value in table.items():
+                    first = owner.setdefault((suffix, key), where)
+                    if found[suffix].setdefault(key, value) != value:
+                        raise ValueError(
+                            f"registry key {key!r} is bound to different values "
+                            f"by {first} and {where}"
+                        )
+    return found
+
+
+def _registry(suffix: str) -> dict:
+    found = discover(PACKAGES)[suffix]
+    for key in _DEMOTED:
+        found.pop(key, None)
+    return {**{k: found[k] for k in _REGISTER_FIRST if k in found}, **found}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(PARITY_QUERIES)
-    out.update(TEXT_QUERIES)
-    out.update(BPE_QUERIES)
-    out.update(CHARLM_QUERIES)
-    out.update(CORPUS_QUERIES)
-    out.update(DOMAIN_QUERIES)
-    out.update(DECONTAM_QUERIES)
-    out.update(DECONTAM_FUZZY_QUERIES)
-    out.update(DSIR_QUERIES)
-    out.update(C4_QUERIES)
-    out.update(PMI_QUERIES)
-    out.update(BOILERSTRIP_QUERIES)
-    out.update(PROFILE_QUERIES)
-    out.update(RP_QUERIES)
-    out.update(PCA_QUERIES)
-    out.update(FUNNEL_QUERIES)
-    out.update(BEHAVIOR_QUERIES)
-    out.update(NORMALIZE_QUERIES)
-    out.update(SHARD_QUERIES)
-    out.update(MEDIAHDR_QUERIES)
-    out.update(DOMAINSHIFT_QUERIES)
-    out.update(CONTAINMENT_QUERIES)
-    out.update(EMBEDNORM_QUERIES)
-    out.update(RPRERANK_QUERIES)
-    out.update(CLUSTERTOPICS_QUERIES)
-    out.update(CORPUSSTATS_QUERIES)
-    out.update(INCREMENTAL_QUERIES)
-    out.update(SCD2_QUERIES)
-    out.update(NOVELTY_QUERIES)
-    out.update(ENGAGEMENT_QUERIES)
-    out.update(LOGISTICS_QUERIES)
-    out.update(CONCENTRATION_QUERIES)
-    out.update(DIAGNOSTICS_QUERIES)
-    out.update(CALIBRATION_QUERIES)
-    out.update(ZIPF_QUERIES)
-    out.update(SAVINGS_QUERIES)
-    out.update(EVALUATION_QUERIES)
-    out.update(TUNING_QUERIES)
-    out.update(SOURCEQUALITY_QUERIES)
-    out.update(SPANDUP_QUERIES)
-    out.update(QLINEAR_QUERIES)
-    out.update(QTRAIN_QUERIES)
-    out.update(ANNRADIUS_QUERIES)
-    out.update(AUDIOCLIP_QUERIES)
-    out.update(SPLITLEAK_QUERIES)
-    out.update(LANGMARGIN_QUERIES)
-    out.update(BLOCKLIST_QUERIES)
-    out.update(BM25_QUERIES)
-    out.update(JPEGDECODE_QUERIES)
-    out.update(JPEGPROG_QUERIES)
-    out.update(MP3_QUERIES)
-    out.update(DPCLIP_QUERIES)
-    out.update(URLCANON_QUERIES)
-    out.update(KMV_QUERIES)
-    out.update(BURST_QUERIES)
-    out.update(TFCOS_QUERIES)
-    out.update(SHUFFLEAUDIT_QUERIES)
-    out.update(BM25PRF_QUERIES)
-    out.update(MOMENTS_QUERIES)
-    out.update(KANON_QUERIES)
-    out.update(WINNOW_QUERIES)
-    out.update(CUSUM_QUERIES)
-    out.update(CMSKETCH_QUERIES)
-    out.update(RETRAGREE_QUERIES)
-    out.update(EDITDIST_QUERIES)
-    out.update(RRF_QUERIES)
-    out.update(HLL_QUERIES)
-    out.update(JPEGDCHASH_QUERIES)
-    out.update(SHARDBALANCE_QUERIES)
-    out.update(ALLOCATION_QUERIES)
-    out.update(CHARSTATS_QUERIES)
-    out.update(RETRIEVAL_QUERIES)
-    out.update(PIIREPORT_QUERIES)
-    out.update(NEARINCREMENTAL_QUERIES)
-    out.update(TRUNCTUNE_QUERIES)
-    out.update(COMPRESSQ_QUERIES)
-    out.update(SLIDING_QUERIES)
-    out.update(PACKSTATS_QUERIES)
-    out.update(MIXTEMP_QUERIES)
-    out.update(DQRULES_QUERIES)
-    out.update(SKEWPROFILE_QUERIES)
-    out.update(LENGTHKS_QUERIES)
-    out.update(ANNRECALL_QUERIES)
-    out.update(QUALITYENSEMBLE_QUERIES)
-    out.update(PREFIXDUP_QUERIES)
-    out.update(LEXICON_QUERIES)
-    out.update(BLOOMGATE_QUERIES)
-    out.update(WSAMPLE_QUERIES)
-    out.update(SHARDMANIFEST_QUERIES)
-    out.update(RECON_QUERIES)
-    out.update(SEASONAL_QUERIES)
-    out.update(DRIFT_QUERIES)
-    out.update(PATTERN_QUERIES)
-    out.update(BASKET_QUERIES)
-    out.update(DEDUP_QUERIES)
-    out.update(CLUSTER_QUERIES)
-    out.update(SIM_QUERIES)
-    out.update(MM_QUERIES)
-    out.update(MEDIAPIXELS_QUERIES)
-    out.update(CLUSTERSIZES_QUERIES)
-    out.update(BIGRAMCOV_QUERIES)
-    out.update(HAMMINGHIST_QUERIES)
-    out.update(LENGINI_QUERIES)
-    out.update(SOURCEOVERLAP_QUERIES)
-    out.update(READABILITY_QUERIES)
-    out.update(BANDSTATS_QUERIES)
-    out.update(BUDGETCURVE_QUERIES)
-    out.update(RANKFAMILY_QUERIES)
-    out.update(LATEST_QUERIES)
-    out.update(BFS_QUERIES)
-    out.update(ASOF_QUERIES)
-    out.update(FRAMES_QUERIES)
-    out.update(COHORT_QUERIES)
-    out.update(QUANTILES_QUERIES)
-    out.update(SQLFACADE_QUERIES)
-    out.update(INTERVALS_QUERIES)
-    out.update(GROWTH_QUERIES)
-    out.update(BENFORD_QUERIES)
-    out.update(SALTEDAGG_QUERIES)
-    out.update(ABTEST_QUERIES)
-    out.update(ROLLING_QUERIES)
-    out.update(SCD2ASOF_QUERIES)
-    out.update(BALANCE_QUERIES)
-    out.update(DIMLIFT_QUERIES)
-    out.update(ATTRIBUTION_QUERIES)
-    out.update(TIMEROLLUP_QUERIES)
-    out.update(CDC_QUERIES)
-    out.update(PARTIALAGG_QUERIES)
-    out.update(ORDERGAP_QUERIES)
-    out.update(YOY_QUERIES)
-    out.update(SKYLINE_QUERIES)
-    out.update(MODEAGG_QUERIES)
-    out.update(SEGMENTS_QUERIES)
-    out.update(FRESHNESS_QUERIES)
-    out.update(DECILE_QUERIES)
-    out.update(STREAKS_QUERIES)
-    out.update(DISTINCTCUBE_QUERIES)
-    out.update(GROUPPCT_QUERIES)
-    out.update(NUMCORR_QUERIES)
-    out.update(TRANSITIONS_QUERIES)
-    out.update(PHASH_QUERIES)
-    out.update(PHASHDUP_QUERIES)
-    out.update(VOCABGROWTH_QUERIES)
-    out.update(MEDIARESIZE_QUERIES)
-    out.update(AUDIOFEAT_QUERIES)
-    out.update(CHARSIMPSON_QUERIES)
-    out.update(GROUPREG_QUERIES)
-    out.update(DIVERSITY_QUERIES)
-    out.update(VOLUMEZ_QUERIES)
-    out.update(NULLSAFE_QUERIES)
-    out.update(REFERENTIAL_QUERIES)
-    out.update(RANGEJOIN_QUERIES)
-    out.update(IQR_QUERIES)
-    out.update(WMEDIAN_QUERIES)
-    out.update(PKAUDIT_QUERIES)
-    out.update(SPINE_QUERIES)
-    out.update(INTERP_QUERIES)
-    out.update(CHECKSUM_QUERIES)
-    out.update(GRAPH_QUERIES)
-    out.update(WILSON_QUERIES)
-    out.update(DECAY_QUERIES)
-    out.update(BACKLOG_QUERIES)
-    out.update(DRAWDOWN_QUERIES)
-    out.update(BANDJOIN_QUERIES)
-    out.update(EQUIDEPTH_QUERIES)
-    out.update(HHI_QUERIES)
-    out.update(GRAPHITER_QUERIES)
-    out.update(ROLLMED_QUERIES)
-    out.update(FIFO_QUERIES)
-    out.update(BITMAPDOW_QUERIES)
-    out.update(FUNCDEP_QUERIES)
-    out.update(OHLC_QUERIES)
-    out.update(BOLLINGER_QUERIES)
-    out.update(LINKPRED_QUERIES)
-    out.update(CONCURRENCY_QUERIES)
-    out.update(SEQGAPS_QUERIES)
-    out.update(CUMDISTINCT_QUERIES)
-    out.update(STICKINESS_QUERIES)
-    out.update(RUNS_QUERIES)
-    out.update(PRORATION_QUERIES)
-    out.update(TVD_QUERIES)
-    out.update(ASSORT_QUERIES)
-    out.update(BASKETLIFT_QUERIES)
-    out.update(MOVERS_QUERIES)
-    out.update(KEYCOLLISION_QUERIES)
-    out.update(CLUSTERCOEFF_QUERIES)
-    out.update(BOUNCE_QUERIES)
-    out.update(AUDIENCE_QUERIES)
-    out.update(IVM_QUERIES)
-    out.update(SESSIONDEPTH_QUERIES)
-    out.update(NULLCENSUS_QUERIES)
-    out.update(MUTUALTOP_QUERIES)
-    out.update(DUPROWS_QUERIES)
-    out.update(LAGSPEARMAN_QUERIES)
-    out.update(DISTINCTCENSUS_QUERIES)
-    out.update(FANO_QUERIES)
-    out.update(PARTCHECKSUM_QUERIES)
-    out.update(KCORE_QUERIES)
-    out.update(TRIPLES_QUERIES)
-    out.update(NODEJACCARD_QUERIES)
-    out.update(DECILEMIG_QUERIES)
-    out.update(HASHFEAT_QUERIES)
-    out.update(KNNJOIN_QUERIES)
-    out.update(AUDIOZCR_QUERIES)
-    out.update(GOPHER_QUERIES)
-    out.update(CURRICULUM_QUERIES)
-    out.update(RANKSHIFT_QUERIES)
-    out.update(SIGNSKETCH_QUERIES)
-    out.update(MULTIPROBE_QUERIES)
-    out.update(IVFBALANCE_QUERIES)
-    out.update(COSINEHIST_QUERIES)
-    out.update(SURVIVOR_QUERIES)
-    out.update(LANGEVAL_QUERIES)
-    out.update(CHARTRIGRAM_QUERIES)
-    out.update(FERTILITY_QUERIES)
-    out.update(BPEINDEX_QUERIES)
-    out.update(EPOCHS_QUERIES)
-    out.update(SPANCORRUPT_QUERIES)
-    out.update(ANNFILTERED_QUERIES)
-    out.update(DATACARD_QUERIES)
-    out.update(CARDDIFF_QUERIES)
-    out.update(CDCHUNK_QUERIES)
-    out.update(OOV_QUERIES)
-    out.update(PIXELDIVERSITY_QUERIES)
-    out.update(STREAM_QUERIES)
-    out.update(ANALYTIC_QUERIES)
-    out.update(SCALE_QUERIES)
-    out.update(RELATIONAL_QUERIES)
-    out.update(TPCH_EXTRA_QUERIES)
-    return _finalize(out)
+    return _registry("_QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    out.update(PARITY_ORACLES)
-    out.update(TEXT_ORACLES)
-    out.update(BPE_ORACLES)
-    out.update(CHARLM_ORACLES)
-    out.update(CORPUS_ORACLES)
-    out.update(DOMAIN_ORACLES)
-    out.update(DECONTAM_ORACLES)
-    out.update(DECONTAM_FUZZY_ORACLES)
-    out.update(DSIR_ORACLES)
-    out.update(C4_ORACLES)
-    out.update(PMI_ORACLES)
-    out.update(BOILERSTRIP_ORACLES)
-    out.update(PROFILE_ORACLES)
-    out.update(RP_ORACLES)
-    out.update(PCA_ORACLES)
-    out.update(FUNNEL_ORACLES)
-    out.update(BEHAVIOR_ORACLES)
-    out.update(NORMALIZE_ORACLES)
-    out.update(SHARD_ORACLES)
-    out.update(MEDIAHDR_ORACLES)
-    out.update(DOMAINSHIFT_ORACLES)
-    out.update(CONTAINMENT_ORACLES)
-    out.update(EMBEDNORM_ORACLES)
-    out.update(RPRERANK_ORACLES)
-    out.update(CLUSTERTOPICS_ORACLES)
-    out.update(CORPUSSTATS_ORACLES)
-    out.update(INCREMENTAL_ORACLES)
-    out.update(SCD2_ORACLES)
-    out.update(NOVELTY_ORACLES)
-    out.update(ENGAGEMENT_ORACLES)
-    out.update(LOGISTICS_ORACLES)
-    out.update(CONCENTRATION_ORACLES)
-    out.update(DIAGNOSTICS_ORACLES)
-    out.update(CALIBRATION_ORACLES)
-    out.update(ZIPF_ORACLES)
-    out.update(SAVINGS_ORACLES)
-    out.update(EVALUATION_ORACLES)
-    out.update(TUNING_ORACLES)
-    out.update(SOURCEQUALITY_ORACLES)
-    out.update(SPANDUP_ORACLES)
-    out.update(QLINEAR_ORACLES)
-    out.update(QTRAIN_ORACLES)
-    out.update(ANNRADIUS_ORACLES)
-    out.update(AUDIOCLIP_ORACLES)
-    out.update(SPLITLEAK_ORACLES)
-    out.update(LANGMARGIN_ORACLES)
-    out.update(BLOCKLIST_ORACLES)
-    out.update(BM25_ORACLES)
-    out.update(JPEGDECODE_ORACLES)
-    out.update(JPEGPROG_ORACLES)
-    out.update(MP3_ORACLES)
-    out.update(DPCLIP_ORACLES)
-    out.update(URLCANON_ORACLES)
-    out.update(KMV_ORACLES)
-    out.update(BURST_ORACLES)
-    out.update(TFCOS_ORACLES)
-    out.update(SHUFFLEAUDIT_ORACLES)
-    out.update(BM25PRF_ORACLES)
-    out.update(MOMENTS_ORACLES)
-    out.update(KANON_ORACLES)
-    out.update(WINNOW_ORACLES)
-    out.update(CUSUM_ORACLES)
-    out.update(CMSKETCH_ORACLES)
-    out.update(RETRAGREE_ORACLES)
-    out.update(EDITDIST_ORACLES)
-    out.update(RRF_ORACLES)
-    out.update(HLL_ORACLES)
-    out.update(JPEGDCHASH_ORACLES)
-    out.update(SHARDBALANCE_ORACLES)
-    out.update(ALLOCATION_ORACLES)
-    out.update(CHARSTATS_ORACLES)
-    out.update(RETRIEVAL_ORACLES)
-    out.update(PIIREPORT_ORACLES)
-    out.update(NEARINCREMENTAL_ORACLES)
-    out.update(TRUNCTUNE_ORACLES)
-    out.update(COMPRESSQ_ORACLES)
-    out.update(SLIDING_ORACLES)
-    out.update(PACKSTATS_ORACLES)
-    out.update(MIXTEMP_ORACLES)
-    out.update(DQRULES_ORACLES)
-    out.update(SKEWPROFILE_ORACLES)
-    out.update(LENGTHKS_ORACLES)
-    out.update(ANNRECALL_ORACLES)
-    out.update(QUALITYENSEMBLE_ORACLES)
-    out.update(PREFIXDUP_ORACLES)
-    out.update(LEXICON_ORACLES)
-    out.update(BLOOMGATE_ORACLES)
-    out.update(WSAMPLE_ORACLES)
-    out.update(SHARDMANIFEST_ORACLES)
-    out.update(RECON_ORACLES)
-    out.update(SEASONAL_ORACLES)
-    out.update(DRIFT_ORACLES)
-    out.update(PATTERN_ORACLES)
-    out.update(BASKET_ORACLES)
-    out.update(DEDUP_ORACLES)
-    out.update(CLUSTER_ORACLES)
-    out.update(SIM_ORACLES)
-    out.update(MM_ORACLES)
-    out.update(MEDIAPIXELS_ORACLES)
-    out.update(CLUSTERSIZES_ORACLES)
-    out.update(BIGRAMCOV_ORACLES)
-    out.update(HAMMINGHIST_ORACLES)
-    out.update(LENGINI_ORACLES)
-    out.update(SOURCEOVERLAP_ORACLES)
-    out.update(READABILITY_ORACLES)
-    out.update(BANDSTATS_ORACLES)
-    out.update(BUDGETCURVE_ORACLES)
-    out.update(RANKFAMILY_ORACLES)
-    out.update(LATEST_ORACLES)
-    out.update(BFS_ORACLES)
-    out.update(ASOF_ORACLES)
-    out.update(FRAMES_ORACLES)
-    out.update(COHORT_ORACLES)
-    out.update(QUANTILES_ORACLES)
-    out.update(SQLFACADE_ORACLES)
-    out.update(INTERVALS_ORACLES)
-    out.update(GROWTH_ORACLES)
-    out.update(BENFORD_ORACLES)
-    out.update(SALTEDAGG_ORACLES)
-    out.update(ABTEST_ORACLES)
-    out.update(ROLLING_ORACLES)
-    out.update(SCD2ASOF_ORACLES)
-    out.update(BALANCE_ORACLES)
-    out.update(DIMLIFT_ORACLES)
-    out.update(ATTRIBUTION_ORACLES)
-    out.update(TIMEROLLUP_ORACLES)
-    out.update(CDC_ORACLES)
-    out.update(PARTIALAGG_ORACLES)
-    out.update(ORDERGAP_ORACLES)
-    out.update(YOY_ORACLES)
-    out.update(SKYLINE_ORACLES)
-    out.update(MODEAGG_ORACLES)
-    out.update(SEGMENTS_ORACLES)
-    out.update(FRESHNESS_ORACLES)
-    out.update(DECILE_ORACLES)
-    out.update(STREAKS_ORACLES)
-    out.update(DISTINCTCUBE_ORACLES)
-    out.update(GROUPPCT_ORACLES)
-    out.update(NUMCORR_ORACLES)
-    out.update(TRANSITIONS_ORACLES)
-    out.update(PHASH_ORACLES)
-    out.update(PHASHDUP_ORACLES)
-    out.update(VOCABGROWTH_ORACLES)
-    out.update(MEDIARESIZE_ORACLES)
-    out.update(AUDIOFEAT_ORACLES)
-    out.update(CHARSIMPSON_ORACLES)
-    out.update(GROUPREG_ORACLES)
-    out.update(DIVERSITY_ORACLES)
-    out.update(VOLUMEZ_ORACLES)
-    out.update(NULLSAFE_ORACLES)
-    out.update(REFERENTIAL_ORACLES)
-    out.update(RANGEJOIN_ORACLES)
-    out.update(IQR_ORACLES)
-    out.update(WMEDIAN_ORACLES)
-    out.update(PKAUDIT_ORACLES)
-    out.update(SPINE_ORACLES)
-    out.update(INTERP_ORACLES)
-    out.update(CHECKSUM_ORACLES)
-    out.update(GRAPH_ORACLES)
-    out.update(WILSON_ORACLES)
-    out.update(DECAY_ORACLES)
-    out.update(BACKLOG_ORACLES)
-    out.update(DRAWDOWN_ORACLES)
-    out.update(BANDJOIN_ORACLES)
-    out.update(EQUIDEPTH_ORACLES)
-    out.update(HHI_ORACLES)
-    out.update(GRAPHITER_ORACLES)
-    out.update(ROLLMED_ORACLES)
-    out.update(FIFO_ORACLES)
-    out.update(BITMAPDOW_ORACLES)
-    out.update(FUNCDEP_ORACLES)
-    out.update(OHLC_ORACLES)
-    out.update(BOLLINGER_ORACLES)
-    out.update(LINKPRED_ORACLES)
-    out.update(CONCURRENCY_ORACLES)
-    out.update(SEQGAPS_ORACLES)
-    out.update(CUMDISTINCT_ORACLES)
-    out.update(STICKINESS_ORACLES)
-    out.update(RUNS_ORACLES)
-    out.update(PRORATION_ORACLES)
-    out.update(TVD_ORACLES)
-    out.update(ASSORT_ORACLES)
-    out.update(BASKETLIFT_ORACLES)
-    out.update(MOVERS_ORACLES)
-    out.update(KEYCOLLISION_ORACLES)
-    out.update(CLUSTERCOEFF_ORACLES)
-    out.update(BOUNCE_ORACLES)
-    out.update(AUDIENCE_ORACLES)
-    out.update(IVM_ORACLES)
-    out.update(SESSIONDEPTH_ORACLES)
-    out.update(NULLCENSUS_ORACLES)
-    out.update(MUTUALTOP_ORACLES)
-    out.update(DUPROWS_ORACLES)
-    out.update(LAGSPEARMAN_ORACLES)
-    out.update(DISTINCTCENSUS_ORACLES)
-    out.update(FANO_ORACLES)
-    out.update(PARTCHECKSUM_ORACLES)
-    out.update(KCORE_ORACLES)
-    out.update(TRIPLES_ORACLES)
-    out.update(NODEJACCARD_ORACLES)
-    out.update(DECILEMIG_ORACLES)
-    out.update(HASHFEAT_ORACLES)
-    out.update(KNNJOIN_ORACLES)
-    out.update(AUDIOZCR_ORACLES)
-    out.update(GOPHER_ORACLES)
-    out.update(CURRICULUM_ORACLES)
-    out.update(RANKSHIFT_ORACLES)
-    out.update(SIGNSKETCH_ORACLES)
-    out.update(MULTIPROBE_ORACLES)
-    out.update(IVFBALANCE_ORACLES)
-    out.update(COSINEHIST_ORACLES)
-    out.update(SURVIVOR_ORACLES)
-    out.update(LANGEVAL_ORACLES)
-    out.update(CHARTRIGRAM_ORACLES)
-    out.update(FERTILITY_ORACLES)
-    out.update(BPEINDEX_ORACLES)
-    out.update(EPOCHS_ORACLES)
-    out.update(SPANCORRUPT_ORACLES)
-    out.update(ANNFILTERED_ORACLES)
-    out.update(DATACARD_ORACLES)
-    out.update(CARDDIFF_ORACLES)
-    out.update(CDCHUNK_ORACLES)
-    out.update(OOV_ORACLES)
-    out.update(PIXELDIVERSITY_ORACLES)
-    out.update(STREAM_ORACLES)
-    out.update(ANALYTIC_ORACLES)
-    out.update(SCALE_ORACLES)
-    out.update(RELATIONAL_ORACLES)
-    out.update(TPCH_EXTRA_ORACLES)
-    return _finalize(out)
+    return _registry("_ORACLES")

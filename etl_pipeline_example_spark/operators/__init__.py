@@ -1,693 +1,5 @@
-from etl_pipeline_example_spark.operators.text import TEXT_QUERIES, TEXT_ORACLES
-from etl_pipeline_example_spark.operators.dedup import DEDUP_QUERIES, DEDUP_ORACLES
-from etl_pipeline_example_spark.operators.similarity import SIM_QUERIES, SIM_ORACLES
-from etl_pipeline_example_spark.operators.multimodal import MM_QUERIES, MM_ORACLES
-from etl_pipeline_example_spark.operators.corpus import CORPUS_QUERIES, CORPUS_ORACLES
-from etl_pipeline_example_spark.operators.cluster import CLUSTER_QUERIES, CLUSTER_ORACLES
-from etl_pipeline_example_spark.operators.bpe import BPE_QUERIES, BPE_ORACLES
-from etl_pipeline_example_spark.operators.charlm import CHARLM_QUERIES, CHARLM_ORACLES
-from etl_pipeline_example_spark.operators.domain import DOMAIN_QUERIES, DOMAIN_ORACLES
-from etl_pipeline_example_spark.operators.decontam import (
-    DECONTAM_QUERIES,
-    DECONTAM_ORACLES,
-)
-from etl_pipeline_example_spark.operators.decontam_fuzzy import (
-    DECONTAM_FUZZY_QUERIES,
-    DECONTAM_FUZZY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.dsir import DSIR_QUERIES, DSIR_ORACLES
-from etl_pipeline_example_spark.operators.c4 import C4_QUERIES, C4_ORACLES
-from etl_pipeline_example_spark.operators.pmi import PMI_QUERIES, PMI_ORACLES
-from etl_pipeline_example_spark.operators.rp import RP_QUERIES, RP_ORACLES
-from etl_pipeline_example_spark.operators.pca import PCA_QUERIES, PCA_ORACLES
-from etl_pipeline_example_spark.operators.funnel import FUNNEL_QUERIES, FUNNEL_ORACLES
-from etl_pipeline_example_spark.operators.shard import SHARD_QUERIES, SHARD_ORACLES
-from etl_pipeline_example_spark.operators.zipf import ZIPF_QUERIES, ZIPF_ORACLES
-from etl_pipeline_example_spark.operators.tuning import TUNING_QUERIES, TUNING_ORACLES
-from etl_pipeline_example_spark.operators.sourcequality import (
-    SOURCEQUALITY_QUERIES,
-    SOURCEQUALITY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.evaluation import (
-    EVALUATION_QUERIES,
-    EVALUATION_ORACLES,
-)
-from etl_pipeline_example_spark.operators.savings import (
-    SAVINGS_QUERIES,
-    SAVINGS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.calibration import (
-    CALIBRATION_QUERIES,
-    CALIBRATION_ORACLES,
-)
-from etl_pipeline_example_spark.operators.diagnostics import (
-    DIAGNOSTICS_QUERIES,
-    DIAGNOSTICS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.novelty import (
-    NOVELTY_QUERIES,
-    NOVELTY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.incremental import (
-    INCREMENTAL_QUERIES,
-    INCREMENTAL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.corpusstats import (
-    CORPUSSTATS_QUERIES,
-    CORPUSSTATS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.spandup import (
-    SPANDUP_QUERIES,
-    SPANDUP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.qlinear import (
-    QLINEAR_QUERIES,
-    QLINEAR_ORACLES,
-)
-from etl_pipeline_example_spark.operators.qtrain import (
-    QTRAIN_QUERIES,
-    QTRAIN_ORACLES,
-)
-from etl_pipeline_example_spark.operators.annradius import (
-    ANNRADIUS_QUERIES,
-    ANNRADIUS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.audioclip import (
-    AUDIOCLIP_QUERIES,
-    AUDIOCLIP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.splitleak import (
-    SPLITLEAK_QUERIES,
-    SPLITLEAK_ORACLES,
-)
-from etl_pipeline_example_spark.operators.langmargin import (
-    LANGMARGIN_QUERIES,
-    LANGMARGIN_ORACLES,
-)
-from etl_pipeline_example_spark.operators.blocklist import (
-    BLOCKLIST_QUERIES,
-    BLOCKLIST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bm25 import (
-    BM25_QUERIES,
-    BM25_ORACLES,
-)
-from etl_pipeline_example_spark.operators.jpegdecode import (
-    JPEGDECODE_QUERIES,
-    JPEGDECODE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.jpegprog import (
-    JPEGPROG_QUERIES,
-    JPEGPROG_ORACLES,
-)
-from etl_pipeline_example_spark.operators.mp3 import (
-    MP3_QUERIES,
-    MP3_ORACLES,
-)
-from etl_pipeline_example_spark.operators.dpclip import (
-    DPCLIP_QUERIES,
-    DPCLIP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.urlcanon import (
-    URLCANON_QUERIES,
-    URLCANON_ORACLES,
-)
-from etl_pipeline_example_spark.operators.kmv import (
-    KMV_QUERIES,
-    KMV_ORACLES,
-)
-from etl_pipeline_example_spark.operators.burst import (
-    BURST_QUERIES,
-    BURST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.tfcos import (
-    TFCOS_QUERIES,
-    TFCOS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.shuffleaudit import (
-    SHUFFLEAUDIT_QUERIES,
-    SHUFFLEAUDIT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bm25prf import (
-    BM25PRF_QUERIES,
-    BM25PRF_ORACLES,
-)
-from etl_pipeline_example_spark.operators.moments import (
-    MOMENTS_QUERIES,
-    MOMENTS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.kanon import (
-    KANON_QUERIES,
-    KANON_ORACLES,
-)
-from etl_pipeline_example_spark.operators.winnow import (
-    WINNOW_QUERIES,
-    WINNOW_ORACLES,
-)
-from etl_pipeline_example_spark.operators.cusum import (
-    CUSUM_QUERIES,
-    CUSUM_ORACLES,
-)
-from etl_pipeline_example_spark.operators.cmsketch import (
-    CMSKETCH_QUERIES,
-    CMSKETCH_ORACLES,
-)
-from etl_pipeline_example_spark.operators.retragree import (
-    RETRAGREE_QUERIES,
-    RETRAGREE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.editdist import (
-    EDITDIST_QUERIES,
-    EDITDIST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.rrf import (
-    RRF_QUERIES,
-    RRF_ORACLES,
-)
-from etl_pipeline_example_spark.operators.hll import (
-    HLL_QUERIES,
-    HLL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.jpegdchash import (
-    JPEGDCHASH_QUERIES,
-    JPEGDCHASH_ORACLES,
-)
-from etl_pipeline_example_spark.operators.shardbalance import (
-    SHARDBALANCE_QUERIES,
-    SHARDBALANCE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.allocation import (
-    ALLOCATION_QUERIES,
-    ALLOCATION_ORACLES,
-)
-from etl_pipeline_example_spark.operators.charstats import (
-    CHARSTATS_QUERIES,
-    CHARSTATS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.retrieval import (
-    RETRIEVAL_QUERIES,
-    RETRIEVAL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.piireport import (
-    PIIREPORT_QUERIES,
-    PIIREPORT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.nearincremental import (
-    NEARINCREMENTAL_QUERIES,
-    NEARINCREMENTAL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.trunctune import (
-    TRUNCTUNE_QUERIES,
-    TRUNCTUNE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.compressq import (
-    COMPRESSQ_QUERIES,
-    COMPRESSQ_ORACLES,
-)
-from etl_pipeline_example_spark.operators.sliding import (
-    SLIDING_QUERIES,
-    SLIDING_ORACLES,
-)
-from etl_pipeline_example_spark.operators.shardmanifest import (
-    SHARDMANIFEST_QUERIES,
-    SHARDMANIFEST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.packstats import (
-    PACKSTATS_QUERIES,
-    PACKSTATS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.mixtemp import (
-    MIXTEMP_QUERIES,
-    MIXTEMP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.dqrules import (
-    DQRULES_QUERIES,
-    DQRULES_ORACLES,
-)
-from etl_pipeline_example_spark.operators.skewprofile import (
-    SKEWPROFILE_QUERIES,
-    SKEWPROFILE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.lengthks import (
-    LENGTHKS_QUERIES,
-    LENGTHKS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.annrecall import (
-    ANNRECALL_QUERIES,
-    ANNRECALL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.qualityensemble import (
-    QUALITYENSEMBLE_QUERIES,
-    QUALITYENSEMBLE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.prefixdup import (
-    PREFIXDUP_QUERIES,
-    PREFIXDUP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.lexicon import (
-    LEXICON_QUERIES,
-    LEXICON_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bloomgate import (
-    BLOOMGATE_QUERIES,
-    BLOOMGATE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.wsample import (
-    WSAMPLE_QUERIES,
-    WSAMPLE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.survivor import (
-    SURVIVOR_QUERIES,
-    SURVIVOR_ORACLES,
-)
-from etl_pipeline_example_spark.operators.langeval import (
-    LANGEVAL_QUERIES,
-    LANGEVAL_ORACLES,
-)
-from etl_pipeline_example_spark.operators.chartrigram import (
-    CHARTRIGRAM_QUERIES,
-    CHARTRIGRAM_ORACLES,
-)
-from etl_pipeline_example_spark.operators.fertility import (
-    FERTILITY_QUERIES,
-    FERTILITY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bpeindex import (
-    BPEINDEX_QUERIES,
-    BPEINDEX_ORACLES,
-)
-from etl_pipeline_example_spark.operators.epochs import (
-    EPOCHS_QUERIES,
-    EPOCHS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.spancorrupt import (
-    SPANCORRUPT_QUERIES,
-    SPANCORRUPT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.annfiltered import (
-    ANNFILTERED_QUERIES,
-    ANNFILTERED_ORACLES,
-)
-from etl_pipeline_example_spark.operators.datacard import (
-    DATACARD_QUERIES,
-    DATACARD_ORACLES,
-)
-from etl_pipeline_example_spark.operators.carddiff import (
-    CARDDIFF_QUERIES,
-    CARDDIFF_ORACLES,
-)
-from etl_pipeline_example_spark.operators.cdchunk import (
-    CDCHUNK_QUERIES,
-    CDCHUNK_ORACLES,
-)
-from etl_pipeline_example_spark.operators.oov import (
-    OOV_QUERIES,
-    OOV_ORACLES,
-)
-from etl_pipeline_example_spark.operators.pixeldiversity import (
-    PIXELDIVERSITY_QUERIES,
-    PIXELDIVERSITY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.phash import (
-    PHASH_QUERIES,
-    PHASH_ORACLES,
-)
-from etl_pipeline_example_spark.operators.phashdup import (
-    PHASHDUP_QUERIES,
-    PHASHDUP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.vocabgrowth import (
-    VOCABGROWTH_QUERIES,
-    VOCABGROWTH_ORACLES,
-)
-from etl_pipeline_example_spark.operators.mediaresize import (
-    MEDIARESIZE_QUERIES,
-    MEDIARESIZE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.audiofeat import (
-    AUDIOFEAT_QUERIES,
-    AUDIOFEAT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.charsimpson import (
-    CHARSIMPSON_QUERIES,
-    CHARSIMPSON_ORACLES,
-)
-from etl_pipeline_example_spark.operators.hashfeat import (
-    HASHFEAT_QUERIES,
-    HASHFEAT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.knnjoin import (
-    KNNJOIN_QUERIES,
-    KNNJOIN_ORACLES,
-)
-from etl_pipeline_example_spark.operators.audiozcr import (
-    AUDIOZCR_QUERIES,
-    AUDIOZCR_ORACLES,
-)
-from etl_pipeline_example_spark.operators.gopher import (
-    GOPHER_QUERIES,
-    GOPHER_ORACLES,
-)
-from etl_pipeline_example_spark.operators.curriculum import (
-    CURRICULUM_QUERIES,
-    CURRICULUM_ORACLES,
-)
-from etl_pipeline_example_spark.operators.rankshift import (
-    RANKSHIFT_QUERIES,
-    RANKSHIFT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.signsketch import (
-    SIGNSKETCH_QUERIES,
-    SIGNSKETCH_ORACLES,
-)
-from etl_pipeline_example_spark.operators.multiprobe import (
-    MULTIPROBE_QUERIES,
-    MULTIPROBE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.ivfbalance import (
-    IVFBALANCE_QUERIES,
-    IVFBALANCE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.cosinehist import (
-    COSINEHIST_QUERIES,
-    COSINEHIST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.clustertopics import (
-    CLUSTERTOPICS_QUERIES,
-    CLUSTERTOPICS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.embednorm import (
-    EMBEDNORM_QUERIES,
-    EMBEDNORM_ORACLES,
-)
-from etl_pipeline_example_spark.operators.rprerank import (
-    RPRERANK_QUERIES,
-    RPRERANK_ORACLES,
-)
-from etl_pipeline_example_spark.operators.containment import (
-    CONTAINMENT_QUERIES,
-    CONTAINMENT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.domainshift import (
-    DOMAINSHIFT_QUERIES,
-    DOMAINSHIFT_ORACLES,
-)
-from etl_pipeline_example_spark.operators.mediahdr import (
-    MEDIAHDR_QUERIES,
-    MEDIAHDR_ORACLES,
-)
-from etl_pipeline_example_spark.operators.mediapixels import (
-    MEDIAPIXELS_QUERIES,
-    MEDIAPIXELS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.clustersizes import (
-    CLUSTERSIZES_QUERIES,
-    CLUSTERSIZES_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bigramcov import (
-    BIGRAMCOV_QUERIES,
-    BIGRAMCOV_ORACLES,
-)
-from etl_pipeline_example_spark.operators.hamminghist import (
-    HAMMINGHIST_QUERIES,
-    HAMMINGHIST_ORACLES,
-)
-from etl_pipeline_example_spark.operators.lengini import (
-    LENGINI_QUERIES,
-    LENGINI_ORACLES,
-)
-from etl_pipeline_example_spark.operators.sourceoverlap import (
-    SOURCEOVERLAP_QUERIES,
-    SOURCEOVERLAP_ORACLES,
-)
-from etl_pipeline_example_spark.operators.readability import (
-    READABILITY_QUERIES,
-    READABILITY_ORACLES,
-)
-from etl_pipeline_example_spark.operators.bandstats import (
-    BANDSTATS_QUERIES,
-    BANDSTATS_ORACLES,
-)
-from etl_pipeline_example_spark.operators.budgetcurve import (
-    BUDGETCURVE_QUERIES,
-    BUDGETCURVE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.normalize import (
-    NORMALIZE_QUERIES,
-    NORMALIZE_ORACLES,
-)
-from etl_pipeline_example_spark.operators.boilerstrip import (
-    BOILERSTRIP_QUERIES,
-    BOILERSTRIP_ORACLES,
-)
+"""Corpus, text, dedup, similarity and multimodal operators.
 
-__all__ = [
-    "DECONTAM_QUERIES",
-    "DECONTAM_ORACLES",
-    "DECONTAM_FUZZY_QUERIES",
-    "DECONTAM_FUZZY_ORACLES",
-    "TEXT_QUERIES",
-    "TEXT_ORACLES",
-    "DEDUP_QUERIES",
-    "DEDUP_ORACLES",
-    "SIM_QUERIES",
-    "SIM_ORACLES",
-    "MM_QUERIES",
-    "MM_ORACLES",
-    "CORPUS_QUERIES",
-    "CORPUS_ORACLES",
-    "CLUSTER_QUERIES",
-    "CLUSTER_ORACLES",
-    "CHARLM_QUERIES",
-    "CHARLM_ORACLES",
-    "BPE_QUERIES",
-    "BPE_ORACLES",
-    "DOMAIN_QUERIES",
-    "DOMAIN_ORACLES",
-    "DSIR_QUERIES",
-    "DSIR_ORACLES",
-    "C4_QUERIES",
-    "C4_ORACLES",
-    "PMI_QUERIES",
-    "PMI_ORACLES",
-    "BOILERSTRIP_QUERIES",
-    "BOILERSTRIP_ORACLES",
-    "RP_QUERIES",
-    "RP_ORACLES",
-    "PCA_QUERIES",
-    "PCA_ORACLES",
-    "FUNNEL_QUERIES",
-    "FUNNEL_ORACLES",
-    "NORMALIZE_QUERIES",
-    "NORMALIZE_ORACLES",
-    "SHARD_QUERIES",
-    "SHARD_ORACLES",
-    "MEDIAHDR_QUERIES",
-    "MEDIAHDR_ORACLES",
-    "MEDIAPIXELS_QUERIES",
-    "MEDIAPIXELS_ORACLES",
-    "CLUSTERSIZES_QUERIES",
-    "CLUSTERSIZES_ORACLES",
-    "BIGRAMCOV_QUERIES",
-    "BIGRAMCOV_ORACLES",
-    "HAMMINGHIST_QUERIES",
-    "HAMMINGHIST_ORACLES",
-    "SOURCEOVERLAP_QUERIES",
-    "SOURCEOVERLAP_ORACLES",
-    "READABILITY_QUERIES",
-    "READABILITY_ORACLES",
-    "BANDSTATS_QUERIES",
-    "BANDSTATS_ORACLES",
-    "BUDGETCURVE_QUERIES",
-    "BUDGETCURVE_ORACLES",
-    "LENGINI_QUERIES",
-    "LENGINI_ORACLES",
-    "DOMAINSHIFT_QUERIES",
-    "DOMAINSHIFT_ORACLES",
-    "CONTAINMENT_QUERIES",
-    "CONTAINMENT_ORACLES",
-    "EMBEDNORM_QUERIES",
-    "EMBEDNORM_ORACLES",
-    "RPRERANK_QUERIES",
-    "RPRERANK_ORACLES",
-    "CLUSTERTOPICS_QUERIES",
-    "CLUSTERTOPICS_ORACLES",
-    "CORPUSSTATS_QUERIES",
-    "CORPUSSTATS_ORACLES",
-    "INCREMENTAL_QUERIES",
-    "INCREMENTAL_ORACLES",
-    "NOVELTY_QUERIES",
-    "NOVELTY_ORACLES",
-    "DIAGNOSTICS_QUERIES",
-    "DIAGNOSTICS_ORACLES",
-    "CALIBRATION_QUERIES",
-    "CALIBRATION_ORACLES",
-    "ZIPF_QUERIES",
-    "ZIPF_ORACLES",
-    "SAVINGS_QUERIES",
-    "SAVINGS_ORACLES",
-    "EVALUATION_QUERIES",
-    "EVALUATION_ORACLES",
-    "TUNING_QUERIES",
-    "TUNING_ORACLES",
-    "SOURCEQUALITY_QUERIES",
-    "SOURCEQUALITY_ORACLES",
-    "SPANDUP_QUERIES",
-    "SPANDUP_ORACLES",
-    "QLINEAR_QUERIES",
-    "QLINEAR_ORACLES",
-    "QTRAIN_QUERIES",
-    "QTRAIN_ORACLES",
-    "ANNRADIUS_QUERIES",
-    "ANNRADIUS_ORACLES",
-    "AUDIOCLIP_QUERIES",
-    "AUDIOCLIP_ORACLES",
-    "SPLITLEAK_QUERIES",
-    "SPLITLEAK_ORACLES",
-    "LANGMARGIN_QUERIES",
-    "LANGMARGIN_ORACLES",
-    "BLOCKLIST_QUERIES",
-    "BLOCKLIST_ORACLES",
-    "BM25_QUERIES",
-    "BM25_ORACLES",
-    "JPEGDECODE_QUERIES",
-    "JPEGDECODE_ORACLES",
-    "JPEGPROG_QUERIES",
-    "JPEGPROG_ORACLES",
-    "MP3_QUERIES",
-    "MP3_ORACLES",
-    "DPCLIP_QUERIES",
-    "DPCLIP_ORACLES",
-    "URLCANON_QUERIES",
-    "URLCANON_ORACLES",
-    "KMV_QUERIES",
-    "KMV_ORACLES",
-    "BURST_QUERIES",
-    "BURST_ORACLES",
-    "TFCOS_QUERIES",
-    "TFCOS_ORACLES",
-    "SHUFFLEAUDIT_QUERIES",
-    "SHUFFLEAUDIT_ORACLES",
-    "BM25PRF_QUERIES",
-    "BM25PRF_ORACLES",
-    "MOMENTS_QUERIES",
-    "MOMENTS_ORACLES",
-    "KANON_QUERIES",
-    "KANON_ORACLES",
-    "WINNOW_QUERIES",
-    "WINNOW_ORACLES",
-    "CUSUM_QUERIES",
-    "CUSUM_ORACLES",
-    "CMSKETCH_QUERIES",
-    "CMSKETCH_ORACLES",
-    "RETRAGREE_QUERIES",
-    "RETRAGREE_ORACLES",
-    "EDITDIST_QUERIES",
-    "EDITDIST_ORACLES",
-    "RRF_QUERIES",
-    "RRF_ORACLES",
-    "HLL_QUERIES",
-    "HLL_ORACLES",
-    "JPEGDCHASH_QUERIES",
-    "JPEGDCHASH_ORACLES",
-    "SHARDBALANCE_QUERIES",
-    "SHARDBALANCE_ORACLES",
-    "ALLOCATION_QUERIES",
-    "ALLOCATION_ORACLES",
-    "CHARSTATS_QUERIES",
-    "CHARSTATS_ORACLES",
-    "RETRIEVAL_QUERIES",
-    "RETRIEVAL_ORACLES",
-    "PIIREPORT_QUERIES",
-    "PIIREPORT_ORACLES",
-    "NEARINCREMENTAL_QUERIES",
-    "NEARINCREMENTAL_ORACLES",
-    "TRUNCTUNE_QUERIES",
-    "TRUNCTUNE_ORACLES",
-    "COMPRESSQ_QUERIES",
-    "COMPRESSQ_ORACLES",
-    "SLIDING_QUERIES",
-    "SLIDING_ORACLES",
-    "SHARDMANIFEST_QUERIES",
-    "SHARDMANIFEST_ORACLES",
-    "PACKSTATS_QUERIES",
-    "PACKSTATS_ORACLES",
-    "MIXTEMP_QUERIES",
-    "MIXTEMP_ORACLES",
-    "DQRULES_QUERIES",
-    "DQRULES_ORACLES",
-    "SKEWPROFILE_QUERIES",
-    "SKEWPROFILE_ORACLES",
-    "LENGTHKS_QUERIES",
-    "LENGTHKS_ORACLES",
-    "ANNRECALL_QUERIES",
-    "ANNRECALL_ORACLES",
-    "QUALITYENSEMBLE_QUERIES",
-    "QUALITYENSEMBLE_ORACLES",
-    "PREFIXDUP_QUERIES",
-    "PREFIXDUP_ORACLES",
-    "LEXICON_QUERIES",
-    "LEXICON_ORACLES",
-    "BLOOMGATE_QUERIES",
-    "BLOOMGATE_ORACLES",
-    "WSAMPLE_QUERIES",
-    "WSAMPLE_ORACLES",
-    "SURVIVOR_QUERIES",
-    "SURVIVOR_ORACLES",
-    "LANGEVAL_QUERIES",
-    "LANGEVAL_ORACLES",
-    "CHARTRIGRAM_QUERIES",
-    "CHARTRIGRAM_ORACLES",
-    "FERTILITY_QUERIES",
-    "FERTILITY_ORACLES",
-    "BPEINDEX_QUERIES",
-    "BPEINDEX_ORACLES",
-    "EPOCHS_QUERIES",
-    "EPOCHS_ORACLES",
-    "SPANCORRUPT_QUERIES",
-    "SPANCORRUPT_ORACLES",
-    "ANNFILTERED_QUERIES",
-    "ANNFILTERED_ORACLES",
-    "DATACARD_QUERIES",
-    "DATACARD_ORACLES",
-    "CARDDIFF_QUERIES",
-    "CARDDIFF_ORACLES",
-    "CDCHUNK_QUERIES",
-    "CDCHUNK_ORACLES",
-    "OOV_QUERIES",
-    "OOV_ORACLES",
-    "PIXELDIVERSITY_QUERIES",
-    "PIXELDIVERSITY_ORACLES",
-    "PHASH_QUERIES",
-    "PHASH_ORACLES",
-    "PHASHDUP_QUERIES",
-    "PHASHDUP_ORACLES",
-    "VOCABGROWTH_QUERIES",
-    "VOCABGROWTH_ORACLES",
-    "MEDIARESIZE_QUERIES",
-    "MEDIARESIZE_ORACLES",
-    "AUDIOFEAT_QUERIES",
-    "AUDIOFEAT_ORACLES",
-    "CHARSIMPSON_QUERIES",
-    "CHARSIMPSON_ORACLES",
-    "HASHFEAT_QUERIES",
-    "HASHFEAT_ORACLES",
-    "KNNJOIN_QUERIES",
-    "KNNJOIN_ORACLES",
-    "AUDIOZCR_QUERIES",
-    "AUDIOZCR_ORACLES",
-    "GOPHER_QUERIES",
-    "GOPHER_ORACLES",
-    "CURRICULUM_QUERIES",
-    "CURRICULUM_ORACLES",
-    "RANKSHIFT_QUERIES",
-    "RANKSHIFT_ORACLES",
-    "SIGNSKETCH_QUERIES",
-    "SIGNSKETCH_ORACLES",
-    "MULTIPROBE_QUERIES",
-    "MULTIPROBE_ORACLES",
-    "IVFBALANCE_QUERIES",
-    "IVFBALANCE_ORACLES",
-    "COSINEHIST_QUERIES",
-    "COSINEHIST_ORACLES",
-]
+Each module exports its registry keys as module-level ``*_QUERIES`` /
+``*_ORACLES`` dicts; ``__spark_entry__.discover`` collects them.
+"""

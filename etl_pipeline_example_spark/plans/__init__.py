@@ -1,610 +1,5 @@
-from etl_pipeline_example_spark.plans.queries import ANALYTIC_QUERIES, ANALYTIC_ORACLES
-from etl_pipeline_example_spark.plans.scale import SCALE_ORACLES, SCALE_QUERIES
-from etl_pipeline_example_spark.plans.concentration import (
-    CONCENTRATION_QUERIES,
-    CONCENTRATION_ORACLES,
-)
-from etl_pipeline_example_spark.plans.logistics import (
-    LOGISTICS_QUERIES,
-    LOGISTICS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.engagement import (
-    ENGAGEMENT_QUERIES,
-    ENGAGEMENT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.seasonal import (
-    SEASONAL_QUERIES,
-    SEASONAL_ORACLES,
-)
-from etl_pipeline_example_spark.plans.recon import (
-    RECON_QUERIES,
-    RECON_ORACLES,
-)
-from etl_pipeline_example_spark.plans.scd2 import (
-    SCD2_QUERIES,
-    SCD2_ORACLES,
-)
-from etl_pipeline_example_spark.plans.basket import (
-    BASKET_QUERIES,
-    BASKET_ORACLES,
-)
-from etl_pipeline_example_spark.plans.patterns import (
-    PATTERN_QUERIES,
-    PATTERN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.behavior import (
-    BEHAVIOR_QUERIES,
-    BEHAVIOR_ORACLES,
-)
-from etl_pipeline_example_spark.plans.rankfamily import (
-    RANKFAMILY_QUERIES,
-    RANKFAMILY_ORACLES,
-)
-from etl_pipeline_example_spark.plans.latest import (
-    LATEST_QUERIES,
-    LATEST_ORACLES,
-)
-from etl_pipeline_example_spark.plans.bfs import (
-    BFS_QUERIES,
-    BFS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.asofjoin import (
-    ASOF_QUERIES,
-    ASOF_ORACLES,
-)
-from etl_pipeline_example_spark.plans.frames import (
-    FRAMES_QUERIES,
-    FRAMES_ORACLES,
-)
-from etl_pipeline_example_spark.plans.cohort import (
-    COHORT_QUERIES,
-    COHORT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.quantiles import (
-    QUANTILES_QUERIES,
-    QUANTILES_ORACLES,
-)
-from etl_pipeline_example_spark.plans.sqlfacade import (
-    SQLFACADE_QUERIES,
-    SQLFACADE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.intervals import (
-    INTERVALS_QUERIES,
-    INTERVALS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.growth import (
-    GROWTH_QUERIES,
-    GROWTH_ORACLES,
-)
-from etl_pipeline_example_spark.plans.benford import (
-    BENFORD_QUERIES,
-    BENFORD_ORACLES,
-)
-from etl_pipeline_example_spark.plans.saltedagg import (
-    SALTEDAGG_QUERIES,
-    SALTEDAGG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.abtest import (
-    ABTEST_QUERIES,
-    ABTEST_ORACLES,
-)
-from etl_pipeline_example_spark.plans.rolling import (
-    ROLLING_QUERIES,
-    ROLLING_ORACLES,
-)
-from etl_pipeline_example_spark.plans.scd2asof import (
-    SCD2ASOF_QUERIES,
-    SCD2ASOF_ORACLES,
-)
-from etl_pipeline_example_spark.plans.balance import (
-    BALANCE_QUERIES,
-    BALANCE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.dimlift import (
-    DIMLIFT_QUERIES,
-    DIMLIFT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.attribution import (
-    ATTRIBUTION_QUERIES,
-    ATTRIBUTION_ORACLES,
-)
-from etl_pipeline_example_spark.plans.timerollup import (
-    TIMEROLLUP_QUERIES,
-    TIMEROLLUP_ORACLES,
-)
-from etl_pipeline_example_spark.plans.cdc import (
-    CDC_QUERIES,
-    CDC_ORACLES,
-)
-from etl_pipeline_example_spark.plans.partialagg import (
-    PARTIALAGG_QUERIES,
-    PARTIALAGG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.ordergap import (
-    ORDERGAP_QUERIES,
-    ORDERGAP_ORACLES,
-)
-from etl_pipeline_example_spark.plans.yoy import (
-    YOY_QUERIES,
-    YOY_ORACLES,
-)
-from etl_pipeline_example_spark.plans.skyline import (
-    SKYLINE_QUERIES,
-    SKYLINE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.modeagg import (
-    MODEAGG_QUERIES,
-    MODEAGG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.segments import (
-    SEGMENTS_QUERIES,
-    SEGMENTS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.freshness import (
-    FRESHNESS_QUERIES,
-    FRESHNESS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.decile import (
-    DECILE_QUERIES,
-    DECILE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.streaks import (
-    STREAKS_QUERIES,
-    STREAKS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.distinctcube import (
-    DISTINCTCUBE_QUERIES,
-    DISTINCTCUBE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.grouppct import (
-    GROUPPCT_QUERIES,
-    GROUPPCT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.numcorr import (
-    NUMCORR_QUERIES,
-    NUMCORR_ORACLES,
-)
-from etl_pipeline_example_spark.plans.transitions import (
-    TRANSITIONS_QUERIES,
-    TRANSITIONS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.groupreg import (
-    GROUPREG_QUERIES,
-    GROUPREG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.diversity import (
-    DIVERSITY_QUERIES,
-    DIVERSITY_ORACLES,
-)
-from etl_pipeline_example_spark.plans.volumez import (
-    VOLUMEZ_QUERIES,
-    VOLUMEZ_ORACLES,
-)
-from etl_pipeline_example_spark.plans.nullsafe import (
-    NULLSAFE_QUERIES,
-    NULLSAFE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.referential import (
-    REFERENTIAL_QUERIES,
-    REFERENTIAL_ORACLES,
-)
-from etl_pipeline_example_spark.plans.rangejoin import (
-    RANGEJOIN_QUERIES,
-    RANGEJOIN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.iqr import (
-    IQR_QUERIES,
-    IQR_ORACLES,
-)
-from etl_pipeline_example_spark.plans.wmedian import (
-    WMEDIAN_QUERIES,
-    WMEDIAN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.pkaudit import (
-    PKAUDIT_QUERIES,
-    PKAUDIT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.spine import (
-    SPINE_QUERIES,
-    SPINE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.interp import (
-    INTERP_QUERIES,
-    INTERP_ORACLES,
-)
-from etl_pipeline_example_spark.plans.checksum import (
-    CHECKSUM_QUERIES,
-    CHECKSUM_ORACLES,
-)
-from etl_pipeline_example_spark.plans.graph import (
-    GRAPH_QUERIES,
-    GRAPH_ORACLES,
-)
-from etl_pipeline_example_spark.plans.wilson import (
-    WILSON_QUERIES,
-    WILSON_ORACLES,
-)
-from etl_pipeline_example_spark.plans.decay import (
-    DECAY_QUERIES,
-    DECAY_ORACLES,
-)
-from etl_pipeline_example_spark.plans.backlog import (
-    BACKLOG_QUERIES,
-    BACKLOG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.drawdown import (
-    DRAWDOWN_QUERIES,
-    DRAWDOWN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.bandjoin import (
-    BANDJOIN_QUERIES,
-    BANDJOIN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.equidepth import (
-    EQUIDEPTH_QUERIES,
-    EQUIDEPTH_ORACLES,
-)
-from etl_pipeline_example_spark.plans.hhi import (
-    HHI_QUERIES,
-    HHI_ORACLES,
-)
-from etl_pipeline_example_spark.plans.graphiter import (
-    GRAPHITER_QUERIES,
-    GRAPHITER_ORACLES,
-)
-from etl_pipeline_example_spark.plans.rollmed import (
-    ROLLMED_QUERIES,
-    ROLLMED_ORACLES,
-)
-from etl_pipeline_example_spark.plans.fifo import (
-    FIFO_QUERIES,
-    FIFO_ORACLES,
-)
-from etl_pipeline_example_spark.plans.bitmapdow import (
-    BITMAPDOW_QUERIES,
-    BITMAPDOW_ORACLES,
-)
-from etl_pipeline_example_spark.plans.funcdep import (
-    FUNCDEP_QUERIES,
-    FUNCDEP_ORACLES,
-)
-from etl_pipeline_example_spark.plans.ohlc import (
-    OHLC_QUERIES,
-    OHLC_ORACLES,
-)
-from etl_pipeline_example_spark.plans.bollinger import (
-    BOLLINGER_QUERIES,
-    BOLLINGER_ORACLES,
-)
-from etl_pipeline_example_spark.plans.linkpred import (
-    LINKPRED_QUERIES,
-    LINKPRED_ORACLES,
-)
-from etl_pipeline_example_spark.plans.concurrency import (
-    CONCURRENCY_QUERIES,
-    CONCURRENCY_ORACLES,
-)
-from etl_pipeline_example_spark.plans.seqgaps import (
-    SEQGAPS_QUERIES,
-    SEQGAPS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.cumdistinct import (
-    CUMDISTINCT_QUERIES,
-    CUMDISTINCT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.stickiness import (
-    STICKINESS_QUERIES,
-    STICKINESS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.runs import (
-    RUNS_QUERIES,
-    RUNS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.proration import (
-    PRORATION_QUERIES,
-    PRORATION_ORACLES,
-)
-from etl_pipeline_example_spark.plans.tvd import (
-    TVD_QUERIES,
-    TVD_ORACLES,
-)
-from etl_pipeline_example_spark.plans.assort import (
-    ASSORT_QUERIES,
-    ASSORT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.basketlift import (
-    BASKETLIFT_QUERIES,
-    BASKETLIFT_ORACLES,
-)
-from etl_pipeline_example_spark.plans.movers import (
-    MOVERS_QUERIES,
-    MOVERS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.keycollision import (
-    KEYCOLLISION_QUERIES,
-    KEYCOLLISION_ORACLES,
-)
-from etl_pipeline_example_spark.plans.clustercoeff import (
-    CLUSTERCOEFF_QUERIES,
-    CLUSTERCOEFF_ORACLES,
-)
-from etl_pipeline_example_spark.plans.bounce import (
-    BOUNCE_QUERIES,
-    BOUNCE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.audience import (
-    AUDIENCE_QUERIES,
-    AUDIENCE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.ivm import (
-    IVM_QUERIES,
-    IVM_ORACLES,
-)
-from etl_pipeline_example_spark.plans.sessiondepth import (
-    SESSIONDEPTH_QUERIES,
-    SESSIONDEPTH_ORACLES,
-)
-from etl_pipeline_example_spark.plans.nullcensus import (
-    NULLCENSUS_QUERIES,
-    NULLCENSUS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.mutualtop import (
-    MUTUALTOP_QUERIES,
-    MUTUALTOP_ORACLES,
-)
-from etl_pipeline_example_spark.plans.duprows import (
-    DUPROWS_QUERIES,
-    DUPROWS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.lagspearman import (
-    LAGSPEARMAN_QUERIES,
-    LAGSPEARMAN_ORACLES,
-)
-from etl_pipeline_example_spark.plans.distinctcensus import (
-    DISTINCTCENSUS_QUERIES,
-    DISTINCTCENSUS_ORACLES,
-)
-from etl_pipeline_example_spark.plans.fano import (
-    FANO_QUERIES,
-    FANO_ORACLES,
-)
-from etl_pipeline_example_spark.plans.partchecksum import (
-    PARTCHECKSUM_QUERIES,
-    PARTCHECKSUM_ORACLES,
-)
-from etl_pipeline_example_spark.plans.kcore import (
-    KCORE_QUERIES,
-    KCORE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.triples import (
-    TRIPLES_QUERIES,
-    TRIPLES_ORACLES,
-)
-from etl_pipeline_example_spark.plans.nodejaccard import (
-    NODEJACCARD_QUERIES,
-    NODEJACCARD_ORACLES,
-)
-from etl_pipeline_example_spark.plans.decilemig import (
-    DECILEMIG_QUERIES,
-    DECILEMIG_ORACLES,
-)
-from etl_pipeline_example_spark.plans.profiling import (
-    PROFILE_QUERIES,
-    PROFILE_ORACLES,
-)
-from etl_pipeline_example_spark.plans.relational import (
-    RELATIONAL_QUERIES,
-    RELATIONAL_ORACLES,
-)
+"""Relational, analytic, data-quality and graph query plans.
 
-from etl_pipeline_example_spark.plans.drift import (
-    DRIFT_QUERIES,
-    DRIFT_ORACLES,
-)
-
-__all__ = [
-    "ANALYTIC_QUERIES",
-    "ANALYTIC_ORACLES",
-    "RELATIONAL_QUERIES",
-    "RELATIONAL_ORACLES",
-    "SCALE_QUERIES",
-    "SCALE_ORACLES",
-    "PROFILE_QUERIES",
-    "PROFILE_ORACLES",
-    "BEHAVIOR_QUERIES",
-    "RANKFAMILY_QUERIES",
-    "RANKFAMILY_ORACLES",
-    "LATEST_QUERIES",
-    "LATEST_ORACLES",
-    "FRAMES_QUERIES",
-    "FRAMES_ORACLES",
-    "COHORT_QUERIES",
-    "COHORT_ORACLES",
-    "QUANTILES_QUERIES",
-    "QUANTILES_ORACLES",
-    "SQLFACADE_QUERIES",
-    "SQLFACADE_ORACLES",
-    "INTERVALS_QUERIES",
-    "INTERVALS_ORACLES",
-    "GROWTH_QUERIES",
-    "GROWTH_ORACLES",
-    "BENFORD_QUERIES",
-    "BENFORD_ORACLES",
-    "SALTEDAGG_QUERIES",
-    "SALTEDAGG_ORACLES",
-    "ABTEST_QUERIES",
-    "ABTEST_ORACLES",
-    "ROLLING_QUERIES",
-    "ROLLING_ORACLES",
-    "SCD2ASOF_QUERIES",
-    "SCD2ASOF_ORACLES",
-    "BALANCE_QUERIES",
-    "BALANCE_ORACLES",
-    "DIMLIFT_QUERIES",
-    "DIMLIFT_ORACLES",
-    "ATTRIBUTION_QUERIES",
-    "ATTRIBUTION_ORACLES",
-    "TIMEROLLUP_QUERIES",
-    "TIMEROLLUP_ORACLES",
-    "CDC_QUERIES",
-    "CDC_ORACLES",
-    "PARTIALAGG_QUERIES",
-    "PARTIALAGG_ORACLES",
-    "ORDERGAP_QUERIES",
-    "ORDERGAP_ORACLES",
-    "YOY_QUERIES",
-    "YOY_ORACLES",
-    "SKYLINE_QUERIES",
-    "SKYLINE_ORACLES",
-    "MODEAGG_QUERIES",
-    "MODEAGG_ORACLES",
-    "SEGMENTS_QUERIES",
-    "SEGMENTS_ORACLES",
-    "FRESHNESS_QUERIES",
-    "FRESHNESS_ORACLES",
-    "DECILE_QUERIES",
-    "DECILE_ORACLES",
-    "STREAKS_QUERIES",
-    "STREAKS_ORACLES",
-    "DISTINCTCUBE_QUERIES",
-    "DISTINCTCUBE_ORACLES",
-    "GROUPPCT_QUERIES",
-    "GROUPPCT_ORACLES",
-    "NUMCORR_QUERIES",
-    "NUMCORR_ORACLES",
-    "TRANSITIONS_QUERIES",
-    "TRANSITIONS_ORACLES",
-    "GROUPREG_QUERIES",
-    "GROUPREG_ORACLES",
-    "DIVERSITY_QUERIES",
-    "DIVERSITY_ORACLES",
-    "VOLUMEZ_QUERIES",
-    "VOLUMEZ_ORACLES",
-    "NULLSAFE_QUERIES",
-    "NULLSAFE_ORACLES",
-    "REFERENTIAL_QUERIES",
-    "REFERENTIAL_ORACLES",
-    "RANGEJOIN_QUERIES",
-    "RANGEJOIN_ORACLES",
-    "IQR_QUERIES",
-    "IQR_ORACLES",
-    "WMEDIAN_QUERIES",
-    "WMEDIAN_ORACLES",
-    "PKAUDIT_QUERIES",
-    "PKAUDIT_ORACLES",
-    "SPINE_QUERIES",
-    "SPINE_ORACLES",
-    "INTERP_QUERIES",
-    "INTERP_ORACLES",
-    "CHECKSUM_QUERIES",
-    "CHECKSUM_ORACLES",
-    "GRAPH_QUERIES",
-    "GRAPH_ORACLES",
-    "WILSON_QUERIES",
-    "WILSON_ORACLES",
-    "DECAY_QUERIES",
-    "DECAY_ORACLES",
-    "BACKLOG_QUERIES",
-    "BACKLOG_ORACLES",
-    "DRAWDOWN_QUERIES",
-    "DRAWDOWN_ORACLES",
-    "BANDJOIN_QUERIES",
-    "BANDJOIN_ORACLES",
-    "EQUIDEPTH_QUERIES",
-    "EQUIDEPTH_ORACLES",
-    "HHI_QUERIES",
-    "GRAPHITER_QUERIES",
-    "GRAPHITER_ORACLES",
-    "ROLLMED_QUERIES",
-    "ROLLMED_ORACLES",
-    "FIFO_QUERIES",
-    "FIFO_ORACLES",
-    "BITMAPDOW_QUERIES",
-    "BITMAPDOW_ORACLES",
-    "FUNCDEP_QUERIES",
-    "FUNCDEP_ORACLES",
-    "OHLC_QUERIES",
-    "OHLC_ORACLES",
-    "BOLLINGER_QUERIES",
-    "BOLLINGER_ORACLES",
-    "LINKPRED_QUERIES",
-    "LINKPRED_ORACLES",
-    "CONCURRENCY_QUERIES",
-    "CONCURRENCY_ORACLES",
-    "SEQGAPS_QUERIES",
-    "SEQGAPS_ORACLES",
-    "CUMDISTINCT_QUERIES",
-    "CUMDISTINCT_ORACLES",
-    "STICKINESS_QUERIES",
-    "STICKINESS_ORACLES",
-    "RUNS_QUERIES",
-    "RUNS_ORACLES",
-    "PRORATION_QUERIES",
-    "PRORATION_ORACLES",
-    "TVD_QUERIES",
-    "TVD_ORACLES",
-    "ASSORT_QUERIES",
-    "ASSORT_ORACLES",
-    "BASKETLIFT_QUERIES",
-    "BASKETLIFT_ORACLES",
-    "MOVERS_QUERIES",
-    "MOVERS_ORACLES",
-    "KEYCOLLISION_QUERIES",
-    "KEYCOLLISION_ORACLES",
-    "CLUSTERCOEFF_QUERIES",
-    "CLUSTERCOEFF_ORACLES",
-    "BOUNCE_QUERIES",
-    "BOUNCE_ORACLES",
-    "AUDIENCE_QUERIES",
-    "AUDIENCE_ORACLES",
-    "IVM_QUERIES",
-    "IVM_ORACLES",
-    "SESSIONDEPTH_QUERIES",
-    "SESSIONDEPTH_ORACLES",
-    "NULLCENSUS_QUERIES",
-    "MUTUALTOP_QUERIES",
-    "MUTUALTOP_ORACLES",
-    "DUPROWS_QUERIES",
-    "DUPROWS_ORACLES",
-    "LAGSPEARMAN_QUERIES",
-    "LAGSPEARMAN_ORACLES",
-    "DISTINCTCENSUS_QUERIES",
-    "DISTINCTCENSUS_ORACLES",
-    "FANO_QUERIES",
-    "FANO_ORACLES",
-    "PARTCHECKSUM_QUERIES",
-    "PARTCHECKSUM_ORACLES",
-    "KCORE_QUERIES",
-    "KCORE_ORACLES",
-    "TRIPLES_QUERIES",
-    "TRIPLES_ORACLES",
-    "NODEJACCARD_QUERIES",
-    "NODEJACCARD_ORACLES",
-    "DECILEMIG_QUERIES",
-    "DECILEMIG_ORACLES",
-    "NULLCENSUS_ORACLES",
-    "HHI_ORACLES",
-    "BEHAVIOR_ORACLES",
-    "PATTERN_QUERIES",
-    "PATTERN_ORACLES",
-    "BASKET_QUERIES",
-    "BASKET_ORACLES",
-    "SCD2_QUERIES",
-    "SCD2_ORACLES",
-    "RECON_QUERIES",
-    "RECON_ORACLES",
-    "SEASONAL_QUERIES",
-    "SEASONAL_ORACLES",
-    "ENGAGEMENT_QUERIES",
-    "ENGAGEMENT_ORACLES",
-    "LOGISTICS_QUERIES",
-    "LOGISTICS_ORACLES",
-    "CONCENTRATION_QUERIES",
-    "CONCENTRATION_ORACLES",
-    "DRIFT_QUERIES",
-    "DRIFT_ORACLES",
-    "BFS_QUERIES",
-    "BFS_ORACLES",
-    "ASOF_QUERIES",
-    "ASOF_ORACLES",
-]
+Each module exports its registry keys as module-level ``*_QUERIES`` /
+``*_ORACLES`` dicts; ``__spark_entry__.discover`` collects them.
+"""

@@ -198,12 +198,11 @@ def _triangles_from(
         # operator — no wedge rows, no probe per wedge. adj is |E|
         # longs grouped into ≤ √|E|-long arrays, bounded by the same
         # input gate that already bounds broadcasting the edge list.
-        # ONE broadcast adjacency, joined twice under aliases (r17
-        # ADVICE): the per-side renamed projections made the two
-        # broadcast subtrees non-identical, so the collect_list
-        # aggregation ran and broadcast TWICE; with identical subtrees
-        # the second side is a ReusedExchange — one build, one copy in
-        # executor memory
+        # ONE broadcast adjacency, joined twice under aliases. Spark
+        # does not reuse its exchange: explain("formatted") at sf0.001
+        # shows two BroadcastExchange nodes, each over its own
+        # collect_list aggregation, and no ReusedExchange, so the
+        # adjacency is built and shipped once per side
         adj = F.broadcast(
             oriented.groupBy("src").agg(F.collect_list("dst").alias("nb"))
         )

@@ -1,110 +1,5 @@
-from etl_pipeline_example_spark.streaming.events import (
-    STREAM_QUERIES,
-    STREAM_ORACLES,
-    stream_events_tumbling,
-)
-from etl_pipeline_example_spark.streaming.stateful import (
-    STATEFUL_ORACLES,
-    STATEFUL_QUERIES,
-    stream_user_stats,
-)
-from etl_pipeline_example_spark.streaming.curation import (
-    CURATION_STREAM_ORACLES,
-    CURATION_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.blockgate import (
-    BLOCKGATE_STREAM_ORACLES,
-    BLOCKGATE_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.cmsfeed import (
-    CMSFEED_STREAM_ORACLES,
-    CMSFEED_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.kmvfeed import (
-    KMVFEED_STREAM_ORACLES,
-    KMVFEED_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.momentsfeed import (
-    MOMENTSFEED_STREAM_ORACLES,
-    MOMENTSFEED_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.cusumfeed import (
-    CUSUMFEED_STREAM_ORACLES,
-    CUSUMFEED_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.hllfeed import (
-    HLLFEED_STREAM_ORACLES,
-    HLLFEED_STREAM_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.shardfeed import (
-    SHARDFEED_ORACLES,
-    SHARDFEED_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.neargate import (
-    NEARGATE_ORACLES,
-    NEARGATE_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.neargate_index import (
-    NEARGATE_INDEX_ORACLES,
-    NEARGATE_INDEX_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.dqgate import (
-    DQGATE_ORACLES,
-    DQGATE_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.slidingwin import (
-    SLIDINGWIN_ORACLES,
-    SLIDINGWIN_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.topk import (
-    TOPK_ORACLES,
-    TOPK_QUERIES,
-)
-from etl_pipeline_example_spark.streaming.ohlc import (
-    OHLC_STREAM_QUERIES,
-    OHLC_STREAM_ORACLES,
-)
-from etl_pipeline_example_spark.streaming.firstseen import (
-    FIRSTSEEN_STREAM_QUERIES,
-    FIRSTSEEN_STREAM_ORACLES,
-)
+"""Structured Streaming operators, each drained to a batch result.
 
-STREAM_QUERIES.update(STATEFUL_QUERIES)
-STREAM_ORACLES.update(STATEFUL_ORACLES)
-STREAM_QUERIES.update(CURATION_STREAM_QUERIES)
-STREAM_ORACLES.update(CURATION_STREAM_ORACLES)
-STREAM_QUERIES.update(BLOCKGATE_STREAM_QUERIES)
-STREAM_ORACLES.update(BLOCKGATE_STREAM_ORACLES)
-STREAM_QUERIES.update(CMSFEED_STREAM_QUERIES)
-STREAM_ORACLES.update(CMSFEED_STREAM_ORACLES)
-STREAM_QUERIES.update(KMVFEED_STREAM_QUERIES)
-STREAM_ORACLES.update(KMVFEED_STREAM_ORACLES)
-STREAM_QUERIES.update(MOMENTSFEED_STREAM_QUERIES)
-STREAM_ORACLES.update(MOMENTSFEED_STREAM_ORACLES)
-STREAM_QUERIES.update(CUSUMFEED_STREAM_QUERIES)
-STREAM_ORACLES.update(CUSUMFEED_STREAM_ORACLES)
-STREAM_QUERIES.update(HLLFEED_STREAM_QUERIES)
-STREAM_ORACLES.update(HLLFEED_STREAM_ORACLES)
-STREAM_QUERIES.update(SHARDFEED_QUERIES)
-STREAM_ORACLES.update(SHARDFEED_ORACLES)
-STREAM_QUERIES.update(NEARGATE_QUERIES)
-STREAM_ORACLES.update(NEARGATE_ORACLES)
-STREAM_QUERIES.update(NEARGATE_INDEX_QUERIES)
-STREAM_ORACLES.update(NEARGATE_INDEX_ORACLES)
-STREAM_QUERIES.update(DQGATE_QUERIES)
-STREAM_ORACLES.update(DQGATE_ORACLES)
-STREAM_QUERIES.update(SLIDINGWIN_QUERIES)
-STREAM_ORACLES.update(SLIDINGWIN_ORACLES)
-STREAM_QUERIES.update(TOPK_QUERIES)
-STREAM_ORACLES.update(TOPK_ORACLES)
-STREAM_QUERIES.update(OHLC_STREAM_QUERIES)
-STREAM_ORACLES.update(OHLC_STREAM_ORACLES)
-STREAM_QUERIES.update(FIRSTSEEN_STREAM_QUERIES)
-STREAM_ORACLES.update(FIRSTSEEN_STREAM_ORACLES)
-
-__all__ = [
-    "STREAM_QUERIES",
-    "STREAM_ORACLES",
-    "stream_events_tumbling",
-    "stream_user_stats",
-]
+Each module exports its registry keys as module-level ``*_QUERIES`` /
+``*_ORACLES`` dicts; ``__spark_entry__.discover`` collects them.
+"""

@@ -5,150 +5,143 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.plans import (
-    BASKET_ORACLES,
-    BASKET_QUERIES,
-    CONCENTRATION_ORACLES,
-    CONCENTRATION_QUERIES,
-    ENGAGEMENT_ORACLES,
-    ENGAGEMENT_QUERIES,
-    LOGISTICS_ORACLES,
-    LOGISTICS_QUERIES,
-    SCD2_ORACLES,
-    SCD2_QUERIES,
-    BEHAVIOR_ORACLES,
-    BEHAVIOR_QUERIES,
-    PATTERN_ORACLES,
-    PATTERN_QUERIES,
-    RECON_ORACLES,
-    RECON_QUERIES,
-    SEASONAL_ORACLES,
-    SEASONAL_QUERIES,
-    DRIFT_ORACLES,
-    DRIFT_QUERIES,
-    LATEST_ORACLES,
-    LATEST_QUERIES,
-    FRAMES_ORACLES,
-    FRAMES_QUERIES,
-    COHORT_ORACLES,
-    COHORT_QUERIES,
-    QUANTILES_ORACLES,
-    QUANTILES_QUERIES,
-    SQLFACADE_ORACLES,
-    SQLFACADE_QUERIES,
-    REFERENTIAL_ORACLES,
-    REFERENTIAL_QUERIES,
-    RANGEJOIN_ORACLES,
-    RANGEJOIN_QUERIES,
-    IQR_ORACLES,
-    IQR_QUERIES,
-    WMEDIAN_ORACLES,
-    WMEDIAN_QUERIES,
-    PKAUDIT_ORACLES,
-    PKAUDIT_QUERIES,
-    SPINE_ORACLES,
-    SPINE_QUERIES,
-    INTERP_ORACLES,
-    INTERP_QUERIES,
-    CHECKSUM_ORACLES,
-    CHECKSUM_QUERIES,
-    GRAPH_ORACLES,
-    GRAPH_QUERIES,
-    WILSON_ORACLES,
-    WILSON_QUERIES,
-    DECAY_ORACLES,
-    DECAY_QUERIES,
-    BACKLOG_ORACLES,
-    BACKLOG_QUERIES,
-    DRAWDOWN_ORACLES,
-    DRAWDOWN_QUERIES,
-    BANDJOIN_ORACLES,
-    BANDJOIN_QUERIES,
-    EQUIDEPTH_ORACLES,
-    EQUIDEPTH_QUERIES,
-    HHI_ORACLES,
-    HHI_QUERIES,
-    GRAPHITER_QUERIES,
-    GRAPHITER_ORACLES,
-    ROLLMED_ORACLES,
-    ROLLMED_QUERIES,
-    FIFO_ORACLES,
-    FIFO_QUERIES,
+from etl_pipeline_example_spark.plans.abtest import ABTEST_ORACLES, ABTEST_QUERIES
+from etl_pipeline_example_spark.plans.attribution import (
+    ATTRIBUTION_ORACLES,
+    ATTRIBUTION_QUERIES,
+)
+from etl_pipeline_example_spark.plans.backlog import BACKLOG_ORACLES, BACKLOG_QUERIES
+from etl_pipeline_example_spark.plans.balance import BALANCE_ORACLES, BALANCE_QUERIES
+from etl_pipeline_example_spark.plans.bandjoin import BANDJOIN_ORACLES, BANDJOIN_QUERIES
+from etl_pipeline_example_spark.plans.basket import BASKET_ORACLES, BASKET_QUERIES
+from etl_pipeline_example_spark.plans.behavior import BEHAVIOR_ORACLES, BEHAVIOR_QUERIES
+from etl_pipeline_example_spark.plans.benford import BENFORD_ORACLES, BENFORD_QUERIES
+from etl_pipeline_example_spark.plans.bitmapdow import (
     BITMAPDOW_ORACLES,
     BITMAPDOW_QUERIES,
-    FUNCDEP_ORACLES,
-    FUNCDEP_QUERIES,
-    OHLC_ORACLES,
-    OHLC_QUERIES,
+)
+from etl_pipeline_example_spark.plans.bollinger import (
     BOLLINGER_ORACLES,
     BOLLINGER_QUERIES,
-    LINKPRED_ORACLES,
-    LINKPRED_QUERIES,
+)
+from etl_pipeline_example_spark.plans.cdc import CDC_ORACLES, CDC_QUERIES
+from etl_pipeline_example_spark.plans.checksum import CHECKSUM_ORACLES, CHECKSUM_QUERIES
+from etl_pipeline_example_spark.plans.cohort import COHORT_ORACLES, COHORT_QUERIES
+from etl_pipeline_example_spark.plans.concentration import (
+    CONCENTRATION_ORACLES,
+    CONCENTRATION_QUERIES,
+)
+from etl_pipeline_example_spark.plans.concurrency import (
     CONCURRENCY_ORACLES,
     CONCURRENCY_QUERIES,
-    SEQGAPS_ORACLES,
-    SEQGAPS_QUERIES,
-    INTERVALS_ORACLES,
-    INTERVALS_QUERIES,
-    GROWTH_ORACLES,
-    BENFORD_ORACLES,
-    SALTEDAGG_ORACLES,
-    ABTEST_ORACLES,
-    ROLLING_ORACLES,
-    SCD2ASOF_ORACLES,
-    BALANCE_ORACLES,
-    DIMLIFT_ORACLES,
-    ATTRIBUTION_ORACLES,
-    GROWTH_QUERIES,
-    BENFORD_QUERIES,
-    SALTEDAGG_QUERIES,
-    ABTEST_QUERIES,
-    ROLLING_QUERIES,
-    SCD2ASOF_QUERIES,
-    BALANCE_QUERIES,
-    DIMLIFT_QUERIES,
-    ATTRIBUTION_QUERIES,
-    RANKFAMILY_ORACLES,
-    RANKFAMILY_QUERIES,
-    TIMEROLLUP_ORACLES,
-    TIMEROLLUP_QUERIES,
-    CDC_ORACLES,
-    CDC_QUERIES,
-    PARTIALAGG_ORACLES,
-    PARTIALAGG_QUERIES,
-    ORDERGAP_ORACLES,
-    ORDERGAP_QUERIES,
-    YOY_ORACLES,
-    YOY_QUERIES,
-    SKYLINE_ORACLES,
-    SKYLINE_QUERIES,
-    MODEAGG_ORACLES,
-    MODEAGG_QUERIES,
-    SEGMENTS_ORACLES,
-    SEGMENTS_QUERIES,
-    FRESHNESS_ORACLES,
-    FRESHNESS_QUERIES,
-    DECILE_ORACLES,
-    DECILE_QUERIES,
-    STREAKS_ORACLES,
-    STREAKS_QUERIES,
+)
+from etl_pipeline_example_spark.plans.decay import DECAY_ORACLES, DECAY_QUERIES
+from etl_pipeline_example_spark.plans.decile import DECILE_ORACLES, DECILE_QUERIES
+from etl_pipeline_example_spark.plans.dimlift import DIMLIFT_ORACLES, DIMLIFT_QUERIES
+from etl_pipeline_example_spark.plans.distinctcube import (
     DISTINCTCUBE_ORACLES,
     DISTINCTCUBE_QUERIES,
-    GROUPPCT_ORACLES,
-    GROUPPCT_QUERIES,
-    NUMCORR_ORACLES,
-    NUMCORR_QUERIES,
-    TRANSITIONS_ORACLES,
-    TRANSITIONS_QUERIES,
-    GROUPREG_ORACLES,
-    GROUPREG_QUERIES,
+)
+from etl_pipeline_example_spark.plans.diversity import (
     DIVERSITY_ORACLES,
     DIVERSITY_QUERIES,
-    VOLUMEZ_ORACLES,
-    VOLUMEZ_QUERIES,
-    NULLSAFE_ORACLES,
-    NULLSAFE_QUERIES,
 )
+from etl_pipeline_example_spark.plans.drawdown import DRAWDOWN_ORACLES, DRAWDOWN_QUERIES
+from etl_pipeline_example_spark.plans.drift import DRIFT_ORACLES, DRIFT_QUERIES
+from etl_pipeline_example_spark.plans.engagement import (
+    ENGAGEMENT_ORACLES,
+    ENGAGEMENT_QUERIES,
+)
+from etl_pipeline_example_spark.plans.equidepth import (
+    EQUIDEPTH_ORACLES,
+    EQUIDEPTH_QUERIES,
+)
+from etl_pipeline_example_spark.plans.fifo import FIFO_ORACLES, FIFO_QUERIES
+from etl_pipeline_example_spark.plans.frames import FRAMES_ORACLES, FRAMES_QUERIES
+from etl_pipeline_example_spark.plans.freshness import (
+    FRESHNESS_ORACLES,
+    FRESHNESS_QUERIES,
+)
+from etl_pipeline_example_spark.plans.funcdep import FUNCDEP_ORACLES, FUNCDEP_QUERIES
+from etl_pipeline_example_spark.plans.graph import GRAPH_ORACLES, GRAPH_QUERIES
+from etl_pipeline_example_spark.plans.graphiter import (
+    GRAPHITER_ORACLES,
+    GRAPHITER_QUERIES,
+)
+from etl_pipeline_example_spark.plans.grouppct import GROUPPCT_ORACLES, GROUPPCT_QUERIES
+from etl_pipeline_example_spark.plans.groupreg import GROUPREG_ORACLES, GROUPREG_QUERIES
+from etl_pipeline_example_spark.plans.growth import GROWTH_ORACLES, GROWTH_QUERIES
+from etl_pipeline_example_spark.plans.hhi import HHI_ORACLES, HHI_QUERIES
+from etl_pipeline_example_spark.plans.interp import INTERP_ORACLES, INTERP_QUERIES
+from etl_pipeline_example_spark.plans.intervals import (
+    INTERVALS_ORACLES,
+    INTERVALS_QUERIES,
+)
+from etl_pipeline_example_spark.plans.iqr import IQR_ORACLES, IQR_QUERIES
+from etl_pipeline_example_spark.plans.latest import LATEST_ORACLES, LATEST_QUERIES
+from etl_pipeline_example_spark.plans.linkpred import LINKPRED_ORACLES, LINKPRED_QUERIES
+from etl_pipeline_example_spark.plans.logistics import (
+    LOGISTICS_ORACLES,
+    LOGISTICS_QUERIES,
+)
+from etl_pipeline_example_spark.plans.modeagg import MODEAGG_ORACLES, MODEAGG_QUERIES
+from etl_pipeline_example_spark.plans.nullsafe import NULLSAFE_ORACLES, NULLSAFE_QUERIES
+from etl_pipeline_example_spark.plans.numcorr import NUMCORR_ORACLES, NUMCORR_QUERIES
+from etl_pipeline_example_spark.plans.ohlc import OHLC_ORACLES, OHLC_QUERIES
+from etl_pipeline_example_spark.plans.ordergap import ORDERGAP_ORACLES, ORDERGAP_QUERIES
+from etl_pipeline_example_spark.plans.partialagg import (
+    PARTIALAGG_ORACLES,
+    PARTIALAGG_QUERIES,
+)
+from etl_pipeline_example_spark.plans.patterns import PATTERN_ORACLES, PATTERN_QUERIES
+from etl_pipeline_example_spark.plans.pkaudit import PKAUDIT_ORACLES, PKAUDIT_QUERIES
+from etl_pipeline_example_spark.plans.quantiles import (
+    QUANTILES_ORACLES,
+    QUANTILES_QUERIES,
+)
+from etl_pipeline_example_spark.plans.rangejoin import (
+    RANGEJOIN_ORACLES,
+    RANGEJOIN_QUERIES,
+)
+from etl_pipeline_example_spark.plans.rankfamily import (
+    RANKFAMILY_ORACLES,
+    RANKFAMILY_QUERIES,
+)
+from etl_pipeline_example_spark.plans.recon import RECON_ORACLES, RECON_QUERIES
+from etl_pipeline_example_spark.plans.referential import (
+    REFERENTIAL_ORACLES,
+    REFERENTIAL_QUERIES,
+)
+from etl_pipeline_example_spark.plans.rolling import ROLLING_ORACLES, ROLLING_QUERIES
+from etl_pipeline_example_spark.plans.rollmed import ROLLMED_ORACLES, ROLLMED_QUERIES
+from etl_pipeline_example_spark.plans.saltedagg import (
+    SALTEDAGG_ORACLES,
+    SALTEDAGG_QUERIES,
+)
+from etl_pipeline_example_spark.plans.scd2 import SCD2_ORACLES, SCD2_QUERIES
+from etl_pipeline_example_spark.plans.scd2asof import SCD2ASOF_ORACLES, SCD2ASOF_QUERIES
+from etl_pipeline_example_spark.plans.seasonal import SEASONAL_ORACLES, SEASONAL_QUERIES
+from etl_pipeline_example_spark.plans.segments import SEGMENTS_ORACLES, SEGMENTS_QUERIES
+from etl_pipeline_example_spark.plans.seqgaps import SEQGAPS_ORACLES, SEQGAPS_QUERIES
+from etl_pipeline_example_spark.plans.skyline import SKYLINE_ORACLES, SKYLINE_QUERIES
+from etl_pipeline_example_spark.plans.spine import SPINE_ORACLES, SPINE_QUERIES
+from etl_pipeline_example_spark.plans.sqlfacade import (
+    SQLFACADE_ORACLES,
+    SQLFACADE_QUERIES,
+)
+from etl_pipeline_example_spark.plans.streaks import STREAKS_ORACLES, STREAKS_QUERIES
+from etl_pipeline_example_spark.plans.timerollup import (
+    TIMEROLLUP_ORACLES,
+    TIMEROLLUP_QUERIES,
+)
+from etl_pipeline_example_spark.plans.transitions import (
+    TRANSITIONS_ORACLES,
+    TRANSITIONS_QUERIES,
+)
+from etl_pipeline_example_spark.plans.volumez import VOLUMEZ_ORACLES, VOLUMEZ_QUERIES
+from etl_pipeline_example_spark.plans.wilson import WILSON_ORACLES, WILSON_QUERIES
+from etl_pipeline_example_spark.plans.wmedian import WMEDIAN_ORACLES, WMEDIAN_QUERIES
+from etl_pipeline_example_spark.plans.yoy import YOY_ORACLES, YOY_QUERIES
 
 from tests.oracle_util import assert_matches_oracle
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.operators import CORPUS_ORACLES, CORPUS_QUERIES
+from etl_pipeline_example_spark.operators.corpus import CORPUS_ORACLES, CORPUS_QUERIES
 
 from tests.oracle_util import assert_matches_oracle
 

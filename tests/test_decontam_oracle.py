@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.operators import (
-    DECONTAM_FUZZY_ORACLES,
-    DECONTAM_FUZZY_QUERIES,
+from etl_pipeline_example_spark.operators.decontam import (
     DECONTAM_ORACLES,
     DECONTAM_QUERIES,
+)
+from etl_pipeline_example_spark.operators.decontam_fuzzy import (
+    DECONTAM_FUZZY_ORACLES,
+    DECONTAM_FUZZY_QUERIES,
 )
 
 from tests.oracle_util import assert_matches_oracle

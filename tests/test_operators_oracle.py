@@ -4,174 +4,284 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.operators import (
-    BOILERSTRIP_ORACLES,
-    BOILERSTRIP_QUERIES,
-    BPE_ORACLES,
-    BPE_QUERIES,
-    CHARLM_ORACLES,
-    CHARLM_QUERIES,
-    DEDUP_ORACLES,
-    DEDUP_QUERIES,
-    DOMAIN_ORACLES,
-    DOMAIN_QUERIES,
-    CLUSTERTOPICS_ORACLES,
-    CLUSTERTOPICS_QUERIES,
-    CORPUSSTATS_ORACLES,
-    CORPUSSTATS_QUERIES,
-    CONTAINMENT_ORACLES,
-    CONTAINMENT_QUERIES,
-    DIAGNOSTICS_ORACLES,
-    DIAGNOSTICS_QUERIES,
-    EMBEDNORM_ORACLES,
-    EMBEDNORM_QUERIES,
-    RPRERANK_ORACLES,
-    RPRERANK_QUERIES,
-    SAVINGS_ORACLES,
-    SAVINGS_QUERIES,
-    DOMAINSHIFT_ORACLES,
-    DOMAINSHIFT_QUERIES,
-    C4_ORACLES,
-    C4_QUERIES,
-    CALIBRATION_ORACLES,
-    CALIBRATION_QUERIES,
-    DSIR_ORACLES,
-    DSIR_QUERIES,
-    EVALUATION_ORACLES,
-    EVALUATION_QUERIES,
-    INCREMENTAL_ORACLES,
-    INCREMENTAL_QUERIES,
-    NOVELTY_ORACLES,
-    NOVELTY_QUERIES,
-    FUNNEL_ORACLES,
-    FUNNEL_QUERIES,
-    PMI_ORACLES,
-    PMI_QUERIES,
-    MEDIAHDR_ORACLES,
-    MEDIAHDR_QUERIES,
-    MEDIAPIXELS_ORACLES,
-    MEDIAPIXELS_QUERIES,
-    SOURCEOVERLAP_ORACLES,
-    SOURCEOVERLAP_QUERIES,
-    READABILITY_ORACLES,
-    READABILITY_QUERIES,
-    BANDSTATS_ORACLES,
-    BANDSTATS_QUERIES,
-    BUDGETCURVE_ORACLES,
-    BUDGETCURVE_QUERIES,
-    CLUSTERSIZES_ORACLES,
-    CLUSTERSIZES_QUERIES,
-    BIGRAMCOV_ORACLES,
-    BIGRAMCOV_QUERIES,
-    HAMMINGHIST_ORACLES,
-    HAMMINGHIST_QUERIES,
-    LENGINI_ORACLES,
-    LENGINI_QUERIES,
-    MM_ORACLES,
-    MM_QUERIES,
-    NORMALIZE_ORACLES,
-    NORMALIZE_QUERIES,
-    RP_ORACLES,
-    RP_QUERIES,
-    SHARD_ORACLES,
-    SHARD_QUERIES,
-    SIM_ORACLES,
-    SIM_QUERIES,
-    SOURCEQUALITY_ORACLES,
-    SOURCEQUALITY_QUERIES,
-    SPANDUP_ORACLES,
-    SPANDUP_QUERIES,
-    QLINEAR_ORACLES,
-    QLINEAR_QUERIES,
+from etl_pipeline_example_spark.operators.allocation import (
     ALLOCATION_ORACLES,
     ALLOCATION_QUERIES,
-    CHARSTATS_ORACLES,
-    CHARSTATS_QUERIES,
-    RETRIEVAL_ORACLES,
-    RETRIEVAL_QUERIES,
-    PIIREPORT_ORACLES,
-    PIIREPORT_QUERIES,
-    NEARINCREMENTAL_ORACLES,
-    NEARINCREMENTAL_QUERIES,
-    TRUNCTUNE_ORACLES,
-    TRUNCTUNE_QUERIES,
-    SLIDING_ORACLES,
-    SLIDING_QUERIES,
-    PACKSTATS_ORACLES,
-    PACKSTATS_QUERIES,
-    MIXTEMP_ORACLES,
-    MIXTEMP_QUERIES,
-    DQRULES_ORACLES,
-    DQRULES_QUERIES,
-    SKEWPROFILE_ORACLES,
-    SKEWPROFILE_QUERIES,
-    LENGTHKS_ORACLES,
-    LENGTHKS_QUERIES,
-    ANNRECALL_ORACLES,
-    ANNRECALL_QUERIES,
-    QUALITYENSEMBLE_ORACLES,
-    QUALITYENSEMBLE_QUERIES,
-    PREFIXDUP_ORACLES,
-    PREFIXDUP_QUERIES,
-    LEXICON_ORACLES,
-    LEXICON_QUERIES,
-    BLOOMGATE_ORACLES,
-    BLOOMGATE_QUERIES,
-    WSAMPLE_ORACLES,
-    WSAMPLE_QUERIES,
-    SURVIVOR_ORACLES,
-    SURVIVOR_QUERIES,
-    LANGEVAL_ORACLES,
-    LANGEVAL_QUERIES,
-    CHARTRIGRAM_ORACLES,
-    CHARTRIGRAM_QUERIES,
-    FERTILITY_ORACLES,
-    FERTILITY_QUERIES,
-    BPEINDEX_ORACLES,
-    BPEINDEX_QUERIES,
-    EPOCHS_ORACLES,
-    EPOCHS_QUERIES,
-    SPANCORRUPT_ORACLES,
-    SPANCORRUPT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.annfiltered import (
     ANNFILTERED_ORACLES,
     ANNFILTERED_QUERIES,
-    DATACARD_ORACLES,
-    DATACARD_QUERIES,
-    CARDDIFF_ORACLES,
-    CARDDIFF_QUERIES,
-    CDCHUNK_ORACLES,
-    CDCHUNK_QUERIES,
-    OOV_ORACLES,
-    OOV_QUERIES,
-    PIXELDIVERSITY_ORACLES,
-    PIXELDIVERSITY_QUERIES,
-    PHASH_ORACLES,
-    PHASH_QUERIES,
-    PHASHDUP_ORACLES,
-    PHASHDUP_QUERIES,
-    VOCABGROWTH_ORACLES,
-    VOCABGROWTH_QUERIES,
-    MEDIARESIZE_ORACLES,
-    MEDIARESIZE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.annrecall import (
+    ANNRECALL_ORACLES,
+    ANNRECALL_QUERIES,
+)
+from etl_pipeline_example_spark.operators.audiofeat import (
     AUDIOFEAT_ORACLES,
     AUDIOFEAT_QUERIES,
-    CHARSIMPSON_ORACLES,
-    CHARSIMPSON_QUERIES,
-    HASHFEAT_ORACLES,
-    HASHFEAT_QUERIES,
-    KNNJOIN_ORACLES,
-    KNNJOIN_QUERIES,
+)
+from etl_pipeline_example_spark.operators.audiozcr import (
     AUDIOZCR_ORACLES,
     AUDIOZCR_QUERIES,
+)
+from etl_pipeline_example_spark.operators.bandstats import (
+    BANDSTATS_ORACLES,
+    BANDSTATS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.bigramcov import (
+    BIGRAMCOV_ORACLES,
+    BIGRAMCOV_QUERIES,
+)
+from etl_pipeline_example_spark.operators.bloomgate import (
+    BLOOMGATE_ORACLES,
+    BLOOMGATE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.boilerstrip import (
+    BOILERSTRIP_ORACLES,
+    BOILERSTRIP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.bpe import BPE_ORACLES, BPE_QUERIES
+from etl_pipeline_example_spark.operators.bpeindex import (
+    BPEINDEX_ORACLES,
+    BPEINDEX_QUERIES,
+)
+from etl_pipeline_example_spark.operators.budgetcurve import (
+    BUDGETCURVE_ORACLES,
+    BUDGETCURVE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.c4 import C4_ORACLES, C4_QUERIES
+from etl_pipeline_example_spark.operators.calibration import (
+    CALIBRATION_ORACLES,
+    CALIBRATION_QUERIES,
+)
+from etl_pipeline_example_spark.operators.carddiff import (
+    CARDDIFF_ORACLES,
+    CARDDIFF_QUERIES,
+)
+from etl_pipeline_example_spark.operators.cdchunk import (
+    CDCHUNK_ORACLES,
+    CDCHUNK_QUERIES,
+)
+from etl_pipeline_example_spark.operators.charlm import CHARLM_ORACLES, CHARLM_QUERIES
+from etl_pipeline_example_spark.operators.charsimpson import (
+    CHARSIMPSON_ORACLES,
+    CHARSIMPSON_QUERIES,
+)
+from etl_pipeline_example_spark.operators.charstats import (
+    CHARSTATS_ORACLES,
+    CHARSTATS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.chartrigram import (
+    CHARTRIGRAM_ORACLES,
+    CHARTRIGRAM_QUERIES,
+)
+from etl_pipeline_example_spark.operators.clustersizes import (
+    CLUSTERSIZES_ORACLES,
+    CLUSTERSIZES_QUERIES,
+)
+from etl_pipeline_example_spark.operators.clustertopics import (
+    CLUSTERTOPICS_ORACLES,
+    CLUSTERTOPICS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.containment import (
+    CONTAINMENT_ORACLES,
+    CONTAINMENT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.corpusstats import (
+    CORPUSSTATS_ORACLES,
+    CORPUSSTATS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.datacard import (
+    DATACARD_ORACLES,
+    DATACARD_QUERIES,
+)
+from etl_pipeline_example_spark.operators.dedup import DEDUP_ORACLES, DEDUP_QUERIES
+from etl_pipeline_example_spark.operators.diagnostics import (
+    DIAGNOSTICS_ORACLES,
+    DIAGNOSTICS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.domain import DOMAIN_ORACLES, DOMAIN_QUERIES
+from etl_pipeline_example_spark.operators.domainshift import (
+    DOMAINSHIFT_ORACLES,
+    DOMAINSHIFT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.dqrules import (
+    DQRULES_ORACLES,
+    DQRULES_QUERIES,
+)
+from etl_pipeline_example_spark.operators.dsir import DSIR_ORACLES, DSIR_QUERIES
+from etl_pipeline_example_spark.operators.embednorm import (
+    EMBEDNORM_ORACLES,
+    EMBEDNORM_QUERIES,
+)
+from etl_pipeline_example_spark.operators.epochs import EPOCHS_ORACLES, EPOCHS_QUERIES
+from etl_pipeline_example_spark.operators.evaluation import (
+    EVALUATION_ORACLES,
+    EVALUATION_QUERIES,
+)
+from etl_pipeline_example_spark.operators.fertility import (
+    FERTILITY_ORACLES,
+    FERTILITY_QUERIES,
+)
+from etl_pipeline_example_spark.operators.funnel import FUNNEL_ORACLES, FUNNEL_QUERIES
+from etl_pipeline_example_spark.operators.hamminghist import (
+    HAMMINGHIST_ORACLES,
+    HAMMINGHIST_QUERIES,
+)
+from etl_pipeline_example_spark.operators.hashfeat import (
+    HASHFEAT_ORACLES,
+    HASHFEAT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.incremental import (
+    INCREMENTAL_ORACLES,
+    INCREMENTAL_QUERIES,
+)
+from etl_pipeline_example_spark.operators.knnjoin import (
+    KNNJOIN_ORACLES,
+    KNNJOIN_QUERIES,
+)
+from etl_pipeline_example_spark.operators.langeval import (
+    LANGEVAL_ORACLES,
+    LANGEVAL_QUERIES,
+)
+from etl_pipeline_example_spark.operators.lengini import (
+    LENGINI_ORACLES,
+    LENGINI_QUERIES,
+)
+from etl_pipeline_example_spark.operators.lengthks import (
+    LENGTHKS_ORACLES,
+    LENGTHKS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.lexicon import (
+    LEXICON_ORACLES,
+    LEXICON_QUERIES,
+)
+from etl_pipeline_example_spark.operators.mediahdr import (
+    MEDIAHDR_ORACLES,
+    MEDIAHDR_QUERIES,
+)
+from etl_pipeline_example_spark.operators.mediapixels import (
+    MEDIAPIXELS_ORACLES,
+    MEDIAPIXELS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.mediaresize import (
+    MEDIARESIZE_ORACLES,
+    MEDIARESIZE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.mixtemp import (
+    MIXTEMP_ORACLES,
+    MIXTEMP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.multimodal import MM_ORACLES, MM_QUERIES
+from etl_pipeline_example_spark.operators.nearincremental import (
+    NEARINCREMENTAL_ORACLES,
+    NEARINCREMENTAL_QUERIES,
+)
+from etl_pipeline_example_spark.operators.normalize import (
+    NORMALIZE_ORACLES,
+    NORMALIZE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.novelty import (
+    NOVELTY_ORACLES,
+    NOVELTY_QUERIES,
+)
+from etl_pipeline_example_spark.operators.oov import OOV_ORACLES, OOV_QUERIES
+from etl_pipeline_example_spark.operators.packstats import (
+    PACKSTATS_ORACLES,
+    PACKSTATS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.phash import PHASH_ORACLES, PHASH_QUERIES
+from etl_pipeline_example_spark.operators.phashdup import (
+    PHASHDUP_ORACLES,
+    PHASHDUP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.piireport import (
+    PIIREPORT_ORACLES,
+    PIIREPORT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.pixeldiversity import (
+    PIXELDIVERSITY_ORACLES,
+    PIXELDIVERSITY_QUERIES,
+)
+from etl_pipeline_example_spark.operators.pmi import PMI_ORACLES, PMI_QUERIES
+from etl_pipeline_example_spark.operators.prefixdup import (
+    PREFIXDUP_ORACLES,
+    PREFIXDUP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.qlinear import (
+    QLINEAR_ORACLES,
+    QLINEAR_QUERIES,
+)
+from etl_pipeline_example_spark.operators.qualityensemble import (
+    QUALITYENSEMBLE_ORACLES,
+    QUALITYENSEMBLE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.readability import (
+    READABILITY_ORACLES,
+    READABILITY_QUERIES,
+)
+from etl_pipeline_example_spark.operators.retrieval import (
+    RETRIEVAL_ORACLES,
+    RETRIEVAL_QUERIES,
+)
+from etl_pipeline_example_spark.operators.rp import RP_ORACLES, RP_QUERIES
+from etl_pipeline_example_spark.operators.rprerank import (
+    RPRERANK_ORACLES,
+    RPRERANK_QUERIES,
+)
+from etl_pipeline_example_spark.operators.savings import (
+    SAVINGS_ORACLES,
+    SAVINGS_QUERIES,
+)
+from etl_pipeline_example_spark.operators.shard import SHARD_ORACLES, SHARD_QUERIES
+from etl_pipeline_example_spark.operators.shardmanifest import (
     SHARDMANIFEST_ORACLES,
     SHARDMANIFEST_QUERIES,
-    TEXT_ORACLES,
-    TEXT_QUERIES,
-    TUNING_ORACLES,
-    TUNING_QUERIES,
-    ZIPF_ORACLES,
-    ZIPF_QUERIES,
 )
+from etl_pipeline_example_spark.operators.similarity import SIM_ORACLES, SIM_QUERIES
+from etl_pipeline_example_spark.operators.skewprofile import (
+    SKEWPROFILE_ORACLES,
+    SKEWPROFILE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.sliding import (
+    SLIDING_ORACLES,
+    SLIDING_QUERIES,
+)
+from etl_pipeline_example_spark.operators.sourceoverlap import (
+    SOURCEOVERLAP_ORACLES,
+    SOURCEOVERLAP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.sourcequality import (
+    SOURCEQUALITY_ORACLES,
+    SOURCEQUALITY_QUERIES,
+)
+from etl_pipeline_example_spark.operators.spancorrupt import (
+    SPANCORRUPT_ORACLES,
+    SPANCORRUPT_QUERIES,
+)
+from etl_pipeline_example_spark.operators.spandup import (
+    SPANDUP_ORACLES,
+    SPANDUP_QUERIES,
+)
+from etl_pipeline_example_spark.operators.survivor import (
+    SURVIVOR_ORACLES,
+    SURVIVOR_QUERIES,
+)
+from etl_pipeline_example_spark.operators.text import TEXT_ORACLES, TEXT_QUERIES
+from etl_pipeline_example_spark.operators.trunctune import (
+    TRUNCTUNE_ORACLES,
+    TRUNCTUNE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.tuning import TUNING_ORACLES, TUNING_QUERIES
+from etl_pipeline_example_spark.operators.vocabgrowth import (
+    VOCABGROWTH_ORACLES,
+    VOCABGROWTH_QUERIES,
+)
+from etl_pipeline_example_spark.operators.wsample import (
+    WSAMPLE_ORACLES,
+    WSAMPLE_QUERIES,
+)
+from etl_pipeline_example_spark.operators.zipf import ZIPF_ORACLES, ZIPF_QUERIES
 
 from tests.oracle_util import assert_matches_oracle
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.plans import ANALYTIC_ORACLES, ANALYTIC_QUERIES
+from etl_pipeline_example_spark.plans.queries import ANALYTIC_ORACLES, ANALYTIC_QUERIES
 
 from tests.oracle_util import assert_matches_oracle
 

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.plans import RELATIONAL_ORACLES, RELATIONAL_QUERIES
+from etl_pipeline_example_spark.plans.relational import (
+    RELATIONAL_ORACLES,
+    RELATIONAL_QUERIES,
+)
 
 from tests.oracle_util import assert_matches_oracle
 

@@ -376,16 +376,13 @@ def test_shuffle_run_audit_matches_python_replay(spark, tmp_path):
 def test_round16_batch_ops_match_oracle(spark, duck, sf_dir):
     """Every round-16 batch operator vs its DuckDB oracle at sf0.001
     (the driver compare, in-tree)."""
-    from etl_pipeline_example_spark.operators import (
-        BURST_ORACLES,
-        BURST_QUERIES,
-        KMV_ORACLES,
-        KMV_QUERIES,
+    from etl_pipeline_example_spark.operators.burst import BURST_ORACLES, BURST_QUERIES
+    from etl_pipeline_example_spark.operators.kmv import KMV_ORACLES, KMV_QUERIES
+    from etl_pipeline_example_spark.operators.shuffleaudit import (
         SHUFFLEAUDIT_ORACLES,
         SHUFFLEAUDIT_QUERIES,
-        TFCOS_ORACLES,
-        TFCOS_QUERIES,
     )
+    from etl_pipeline_example_spark.operators.tfcos import TFCOS_ORACLES, TFCOS_QUERIES
     from tests.oracle_util import assert_matches_oracle
 
     q = {**KMV_QUERIES, **BURST_QUERIES, **TFCOS_QUERIES, **SHUFFLEAUDIT_QUERIES}

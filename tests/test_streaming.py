@@ -3,7 +3,22 @@ and the DuckDB oracle."""
 
 from __future__ import annotations
 
-from etl_pipeline_example_spark.streaming import STREAM_ORACLES, STREAM_QUERIES
+from etl_pipeline_example_spark.streaming.dqgate import DQGATE_ORACLES, DQGATE_QUERIES
+from etl_pipeline_example_spark.streaming.events import STREAM_ORACLES, STREAM_QUERIES
+from etl_pipeline_example_spark.streaming.firstseen import (
+    FIRSTSEEN_STREAM_ORACLES,
+    FIRSTSEEN_STREAM_QUERIES,
+)
+from etl_pipeline_example_spark.streaming.neargate import NEARGATE_ORACLES
+from etl_pipeline_example_spark.streaming.neargate_index import NEARGATE_INDEX_ORACLES
+from etl_pipeline_example_spark.streaming.ohlc import OHLC_STREAM_ORACLES, OHLC_STREAM_QUERIES
+from etl_pipeline_example_spark.streaming.shardfeed import SHARDFEED_ORACLES
+from etl_pipeline_example_spark.streaming.slidingwin import (
+    SLIDINGWIN_ORACLES,
+    SLIDINGWIN_QUERIES,
+)
+from etl_pipeline_example_spark.streaming.stateful import STATEFUL_ORACLES, STATEFUL_QUERIES
+from etl_pipeline_example_spark.streaming.topk import TOPK_ORACLES, TOPK_QUERIES
 
 from tests.oracle_util import assert_matches_oracle
 
@@ -24,8 +39,8 @@ def test_stream_sessions_matches_batch_oracle(spark, duck, sf_dir):
 
 
 def test_stream_user_stats_matches_batch_oracle(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_user_stats"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_user_stats"])
+    df = STATEFUL_QUERIES["stream_user_stats"](spark, sf_dir)
+    assert_matches_oracle(df, duck, STATEFUL_ORACLES["stream_user_stats"])
 
 
 def test_stream_c4_gate_matches_batch_keep_set(spark, duck, sf_dir):
@@ -48,7 +63,7 @@ def test_stream_shard_feed_matches_batch_prefix_sum(spark, duck, sf_dir):
     from etl_pipeline_example_spark.streaming.shardfeed import stream_shard_feed
 
     df = stream_shard_feed(spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_shard_feed"])
+    assert_matches_oracle(df, duck, SHARDFEED_ORACLES["stream_shard_feed"])
 
 
 def test_stream_neardup_gate_matches_batch_history_half(spark, duck, sf_dir):
@@ -58,7 +73,7 @@ def test_stream_neardup_gate_matches_batch_history_half(spark, duck, sf_dir):
     from etl_pipeline_example_spark.streaming.neargate import stream_neardup_gate
 
     df = stream_neardup_gate(spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_neardup_gate"])
+    assert_matches_oracle(df, duck, NEARGATE_ORACLES["stream_neardup_gate"])
 
 
 def test_stream_neardup_gate_indexed_entry_matches_oracle(spark, duck, sf_dir):
@@ -72,12 +87,12 @@ def test_stream_neardup_gate_indexed_entry_matches_oracle(spark, duck, sf_dir):
     )
 
     df = stream_neardup_gate_indexed_entry(spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_neardup_gate_indexed"])
+    assert_matches_oracle(df, duck, NEARGATE_INDEX_ORACLES["stream_neardup_gate_indexed"])
 
 
 def test_stream_dq_quarantine_matches_batch(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_dq_quarantine"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_dq_quarantine"])
+    df = DQGATE_QUERIES["stream_dq_quarantine"](spark, sf_dir)
+    assert_matches_oracle(df, duck, DQGATE_ORACLES["stream_dq_quarantine"])
 
 
 def test_stream_dq_quarantine_flags_every_violated_rule(spark, tmp_path):
@@ -206,13 +221,13 @@ def test_stream_versioned_sink_commits_versions_exactly_once(
 
 
 def test_stream_sliding_matches_batch_oracle(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_sliding"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_sliding"])
+    df = SLIDINGWIN_QUERIES["stream_sliding"](spark, sf_dir)
+    assert_matches_oracle(df, duck, SLIDINGWIN_ORACLES["stream_sliding"])
 
 
 def test_stream_topk_matches_batch_oracle(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_topk"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_topk"])
+    df = TOPK_QUERIES["stream_topk"](spark, sf_dir)
+    assert_matches_oracle(df, duck, TOPK_ORACLES["stream_topk"])
 
 
 def test_stream_sliding_double_counts_each_event(spark, tmp_path):
@@ -248,13 +263,13 @@ def test_stream_sliding_double_counts_each_event(spark, tmp_path):
 
 
 def test_stream_ohlc_matches_batch_oracle(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_ohlc"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_ohlc"])
+    df = OHLC_STREAM_QUERIES["stream_ohlc"](spark, sf_dir)
+    assert_matches_oracle(df, duck, OHLC_STREAM_ORACLES["stream_ohlc"])
 
 
 def test_stream_first_seen_matches_batch_oracle(spark, duck, sf_dir):
-    df = STREAM_QUERIES["stream_first_seen"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_first_seen"])
+    df = FIRSTSEEN_STREAM_QUERIES["stream_first_seen"](spark, sf_dir)
+    assert_matches_oracle(df, duck, FIRSTSEEN_STREAM_ORACLES["stream_first_seen"])
 
 
 def test_stream_first_seen_hand_computed(spark, tmp_path):
