@@ -21,8 +21,9 @@ Reference-parity semantics beyond ordering (dags/example_etl_dag.py:19-33):
   (``depends_on_past=False``), so every task must tolerate re-execution.
   Tasks may declare a ``done`` probe (skip-if-output-exists); tasks
   without one must be overwrite-atomic themselves, which every sink in
-  this engine is (``write_curated`` dynamic-overwrites partitions,
-  ``promote_to_raw`` replaces the target partition). ``run()`` on an
+  this engine is (``write_curated`` dynamic-overwrites partitions; both
+  promotion entry points delete any stale raw-hist copy of a partition,
+  then rename the landed partition into its place). ``run()`` on an
   already-complete pipeline is therefore a no-op for probed tasks and a
   clean overwrite for the rest.
 

@@ -5,9 +5,9 @@ loops an API 1000× on one machine, flattens each nested record with
 ``unpack_data`` (reference: python_scripts/custom_functions.py:10-17), and
 writes one jsonl.gz under ``land/<table>/file_land_timestamp=<ts>/``.
 
-Spark-first, the fetch itself distributes: ``spark.range(n)`` enumerates
-record indices, ``mapInPandas`` runs the pluggable ``fetch(index)``
-callable on the EXECUTORS (Arrow-batched, one network client per task,
+Spark-first, the fetch itself distributes: ``spark.range`` enumerates
+record indices in n_tasks contiguous slices (no shuffle), ``mapInPandas``
+runs the pluggable ``fetch(index)`` callable on the EXECUTORS (Arrow-batched, one network client per task,
 not per row), records flatten with the same parent_child naming the
 struct flattener uses, and the landed output is written by Spark's text
 sink with gzip codec — n_tasks concurrent fetchers and no driver-side
@@ -79,10 +79,8 @@ def extract_to_land(
                 lines.append(json.dumps(rec, sort_keys=True))
             yield pd.DataFrame({"value": lines})
 
-    lines = (
-        spark.range(n_records)
-        .repartition(min(n_tasks, n_records) or 1)
-        .mapInPandas(fetch_partition, "value string")
+    lines = spark.range(0, n_records, 1, min(n_tasks, n_records) or 1).mapInPandas(
+        fetch_partition, "value string"
     )
     lines.write.mode("overwrite").option("compression", "gzip").text(target)
     return target

@@ -3,18 +3,26 @@
 The reference's storage contract (reference: README.md "Data Storage Best
 Practice"; python_scripts/constants.py:1-2): data lands under
 ``land/<dataset>/<table>/file_land_timestamp=<ts>/``, is promoted verbatim
-to ``raw-hist`` after validation (copy then delete — land is transient,
-raw-hist is immutable history; reference: python_scripts/test_data.py:50-53),
-and transforms write to ``curated``. Paths are plain strings so the same
-code runs on ``s3://`` URIs on a cluster and local dirs in tests — Spark's
-Hadoop filesystem layer abstracts the scheme.
+to ``raw-hist`` after validation (land is transient, raw-hist is immutable
+history; reference: python_scripts/test_data.py:50-53), and transforms
+write to ``curated``. Paths are plain strings so the same code runs on
+``s3a://`` URIs on a cluster and local dirs in tests.
+
+Promotion moves whole partition directories: the reference copies and
+deletes each object, here each ``file_land_timestamp=`` directory is
+renamed into raw-hist after any stale copy of it is deleted. The rename
+is a metadata operation, atomic per partition on local FS and HDFS; on
+s3a Hadoop runs the server-side copy and delete itself.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 from dataclasses import dataclass
 from pathlib import Path
+
+from etl_pipeline_example_spark.fsutil import hadoop_fs
 
 
 @dataclass
@@ -46,12 +54,12 @@ class ZoneStore:
         return f"{self.curated}/{db_base}/{location}"
 
     def promote_to_raw(self, dataset: str, table: str) -> list[str]:
-        """Move every landed partition of ``table`` to raw-hist (copy+delete).
+        """Move every landed partition of ``table`` to raw-hist.
 
-        Driver-side local-FS implementation — right for tests and small
-        promotions. At lake scale use ``promote_to_raw_distributed``,
-        which fans the per-file copies out over the cluster. Partition
-        directories (``file_land_timestamp=...``) transfer verbatim so
+        Driver-side local-FS implementation of
+        ``promote_to_raw_distributed``, with the same semantics: each
+        partition directory (``file_land_timestamp=...``) replaces any
+        stale copy in raw-hist and is moved with one ``os.replace``, so
         raw-hist keeps full arrival history.
         """
         src = Path(self.land_path(dataset, table))
@@ -66,84 +74,39 @@ class ZoneStore:
             target.parent.mkdir(parents=True, exist_ok=True)
             if target.exists():
                 shutil.rmtree(target)
-            shutil.copytree(part, target)
-            shutil.rmtree(part)
+            os.replace(part, target)
             moved.append(str(target))
         return moved
 
 
 def promote_to_raw_distributed(spark, zones: ZoneStore, dataset: str, table: str) -> list[str]:
-    """Land → raw-hist promotion with the byte copies done on EXECUTORS.
+    """Land → raw-hist promotion through the session's Hadoop filesystem.
 
-    The reference's promotion is an object-store server-side copy per file
-    from the driver (reference: python_scripts/test_data.py:50-53) — fine
-    for a handful of files, a serial bottleneck for a 100 TB landing of
-    thousands of objects. Here the driver only LISTS the files (metadata),
-    then a ``mapInPandas`` pass copies each file on an executor via
-    PyArrow's filesystem layer (local paths and object stores alike), so
-    promotion bandwidth scales with the cluster. Deletion of the source
-    happens only after every copy reports success, preserving the
-    reference's validate-then-promote atomicity at the partition level.
+    The name is historical: promotion used to copy every file in a Spark
+    job. It is now a rename of each partition directory, run from the
+    driver and starting no Spark job. Partitions move in sorted order; a
+    stale raw-hist copy of a partition is deleted first, so a re-promoted
+    partition fully replaces the earlier landing, and an empty partition
+    still arrives as a directory. Paths are joined as strings on the zone
+    URIs, so any Hadoop scheme works.
 
-    Returns the promoted partition paths.
+    Returns the sorted promoted partition paths.
     """
-    import pandas as pd
-    from pyarrow import fs as pafs
-
-    src_root = Path(zones.land_path(dataset, table))
-    if not src_root.exists():
+    src = zones.land_path(dataset, table)
+    dst = zones.raw_hist_path(dataset, table)
+    fs, src_root = hadoop_fs(spark, src)
+    if not fs.exists(src_root):
         raise FileNotFoundError(
-            f"Was expecting data in land but nothing was found in the folder: {src_root}"
+            f"Was expecting data in land but nothing was found in the folder: {src}"
         )
-    parts = sorted(p for p in src_root.iterdir() if p.is_dir())
-    copies = []  # (src_file, dst_file)
-    for part in parts:
-        dst_dir = Path(zones.raw_hist_path(dataset, table)) / part.name
-        # same replace semantics as the local path: a re-promoted
-        # partition fully replaces any prior copy (stale files from an
-        # earlier landing must not merge in), and an empty partition
-        # still materializes as a directory (history preserved)
-        if dst_dir.exists():
-            shutil.rmtree(dst_dir)
-        dst_dir.mkdir(parents=True, exist_ok=True)
-        for f in sorted(part.rglob("*")):
-            if f.is_file():
-                copies.append((str(f), str(dst_dir / f.relative_to(part))))
-    if copies:
-        plan = spark.createDataFrame(copies, "src string, dst string")
-
-        def copy_files(batches):
-            for pdf in batches:
-                done = []
-                for src, dst in zip(pdf["src"], pdf["dst"]):
-                    src_fs, src_path = pafs.FileSystem.from_uri(src)
-                    dst_fs, dst_path = pafs.FileSystem.from_uri(dst)
-                    dst_fs.create_dir(str(Path(dst_path).parent), recursive=True)
-                    # compression=None: copy the raw bytes — PyArrow would
-                    # otherwise transparently gunzip/regzip by extension.
-                    # Chunked: a multi-GB landed object must not be
-                    # buffered whole in the Python worker.
-                    with src_fs.open_input_stream(src_path, compression=None) as r, \
-                            dst_fs.open_output_stream(dst_path, compression=None) as w:
-                        while True:
-                            chunk = r.read(8 * 1024 * 1024)
-                            if not chunk:
-                                break
-                            w.write(chunk)
-                    done.append(dst)
-                yield pd.DataFrame({"dst": done})
-
-        n_copied = (
-            plan.repartition(min(len(copies), spark.sparkContext.defaultParallelism))
-            .mapInPandas(copy_files, "dst string")
-            .count()
-        )
-        if n_copied != len(copies):
-            raise RuntimeError(
-                f"promotion incomplete: {n_copied}/{len(copies)} files copied"
-            )
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    names = sorted(st.getPath().getName() for st in fs.listStatus(src_root) if st.isDirectory())
     moved = []
-    for part in parts:
-        shutil.rmtree(part)
-        moved.append(str(Path(zones.raw_hist_path(dataset, table)) / part.name))
+    for name in names:
+        part, target = f"{src}/{name}", f"{dst}/{name}"
+        fs.delete(hpath(target), True)
+        fs.mkdirs(hpath(dst))
+        if not fs.rename(hpath(part), hpath(target)):
+            raise IOError(f"could not move {part} to {target}")
+        moved.append(target)
     return moved

@@ -148,3 +148,32 @@ def test_clone_over_viewfs_reads_upserts_and_compacts(spark, viewfs_path):
     assert {
         r["val"] for r in read_versioned(spark, src).collect()
     } == {f"s{k}" for k in range(40)}
+
+
+def test_zone_promotion_over_viewfs(spark, viewfs_path, tmp_path):
+    """extract → promote → read over a non-file scheme: promotion lists,
+    deletes and renames through the resolved FileSystem, and its returned
+    paths keep the URI's scheme and authority (``pathlib`` would collapse
+    ``viewfs://`` to ``viewfs:/``)."""
+    from etl_pipeline_example_spark.pipeline import (
+        ZoneStore,
+        extract_to_land,
+        promote_to_raw_distributed,
+    )
+    from etl_pipeline_example_spark.sources import read_jsonl
+
+    def fetch(i):
+        return {"name": f"rec{i}", "codes": {"a": f"A{i}"}}
+
+    zones = ZoneStore(viewfs_path)
+    for ts in (1700000002, 1700000001):
+        extract_to_land(spark, zones, "d", "t", fetch, 12, ts, tasks=2)
+    moved = promote_to_raw_distributed(spark, zones, "d", "t")
+    raw = f"{viewfs_path}/raw-hist/d/t"
+    assert moved == [f"{raw}/file_land_timestamp=1700000001",
+                     f"{raw}/file_land_timestamp=1700000002"]
+    rows = read_jsonl(spark, raw).collect()
+    assert sorted((r["index"], r["codes_a"]) for r in rows) == sorted(
+        [(i, f"A{i}") for i in range(12)] * 2
+    )
+    assert not list((tmp_path / "land" / "d" / "t").iterdir())

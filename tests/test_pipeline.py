@@ -219,3 +219,85 @@ def test_distributed_promotion_matches_local(spark, tmp_path):
     assert a == b and len(a) == 40
     for z in (z1, z2):
         assert not list(Path(z.land_path("open_data", "random_records")).glob("file_land_*"))
+
+
+def _partitions(root: str) -> list[str]:
+    return sorted(p.name for p in Path(root).glob("file_land_timestamp=*"))
+
+
+def test_repromoted_partition_drops_stale_files(spark, tmp_path):
+    """A re-promoted partition fully replaces the earlier landing: files
+    only the first landing had must not survive in raw-hist."""
+    zones = ZoneStore(str(tmp_path))
+    part = land_records(zones, n=10, ts=1700000001)
+    (Path(part) / "stale.jsonl.gz").write_bytes(b"")
+    promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+    land_records(zones, n=7, ts=1700000001)
+    promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+    target = Path(zones.raw_hist_path("open_data", "random_records"), "file_land_timestamp=1700000001")
+    assert sorted(f.name for f in target.iterdir()) == ["random_records_1700000001.jsonl.gz"]
+    assert read_jsonl(spark, str(target)).count() == 7
+
+
+def test_empty_partition_arrives_as_directory(spark, tmp_path):
+    zones = ZoneStore(str(tmp_path))
+    Path(zones.land_path("open_data", "random_records", 1700000001)).mkdir(parents=True)
+    moved = promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+    assert Path(moved[0]).is_dir() and not list(Path(moved[0]).iterdir())
+
+
+def test_promotion_clears_land_and_returns_sorted_paths(spark, tmp_path):
+    zones = ZoneStore(str(tmp_path))
+    for ts in (1700000003, 1700000001, 1700000002):
+        land_records(zones, n=5, ts=ts)
+    moved = promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+    raw = zones.raw_hist_path("open_data", "random_records")
+    assert moved == sorted(moved) == [f"{raw}/{name}" for name in _partitions(raw)]
+    assert len(moved) == 3
+    assert _partitions(zones.land_path("open_data", "random_records")) == []
+
+
+def test_promotion_starts_no_spark_job(spark, tmp_path):
+    """Promotion is filesystem metadata only; a tiny action in the same
+    job group shows the group does capture jobs."""
+    zones = ZoneStore(str(tmp_path))
+    land_records(zones, n=5, ts=1700000001)
+    sc = spark.sparkContext
+    group = f"promote-probe-{tmp_path.name}"
+    sc.setJobGroup(group, "promotion job count")
+    try:
+        promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+        promote_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(3).count()
+        probe_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert promote_jobs == [] and probe_jobs
+
+
+def test_extract_lands_one_file_per_task_without_exchange(spark, tmp_path, monkeypatch):
+    """``tasks`` sets the fetch tasks through range's partition count, so
+    the landing plan has no shuffle and each task writes one part file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    text = DataFrameWriter.text
+
+    def capture(self, path, *args, **kwargs):
+        written.append(self._df)
+        return text(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "text", capture)
+    zones = ZoneStore(str(tmp_path))
+    landed = {}
+    for tasks in (3, 1):
+        path = extract_to_land(
+            spark, zones, "open_data", f"recs{tasks}", fetch=make_synth_fetch(),
+            n_records=30, run_timestamp=1700009999, tasks=tasks,
+        )
+        landed[tasks] = sorted(tuple(r) for r in read_jsonl(spark, path).collect())
+        if tasks == 3:
+            assert len(list(Path(path).glob("part-*"))) == 3
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan
+    assert landed[3] == landed[1] and len(landed[3]) == 30
