@@ -24,10 +24,12 @@ every operator has a DuckDB oracle computing the identical result — LSH
 candidate generation included.
 
 Caching contract: multi-pass operators (``dedup_minhash``,
-``ngram_jaccard``) ``persist()`` their reused intermediate and leave it
+``ngram_jaccard``) persist their reused intermediate and leave it
 cached — the returned DataFrame is lazy, so the operator can't know when
-its consumer is done. Cached blocks are evicted LRU under memory
-pressure, but a long-lived session running many operators should call
+its consumer is done. ``ngram_jaccard`` registers its caches with
+``simcore.tracked_persist``, so the next similarity operator releases
+them. ``dedup_minhash``'s caches are evicted LRU under memory pressure,
+but a long-lived session running many operators should call
 ``spark.catalog.clearCache()`` between queries (bench.py and the test
 harness do).
 """
@@ -49,6 +51,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_norm_text,
     spark_tokens,
 )
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------- exact dedup
@@ -407,17 +410,19 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the capped shingle sets on both sides, so the metric is exact w.r.t.
     the capped representation and identical in the oracle.
     """
-    sh = _spark_shingle_table(spark, sf_dir).persist()
+    sh = tracked_persist(_spark_shingle_table(spark, sf_dir))
     df_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= NJ_DF_CAP
     )
-    capped = sh.join(F.broadcast(df_ok.select("shingle")), "shingle").persist()
+    capped = tracked_persist(sh.join(F.broadcast(df_ok.select("shingle")), "shingle"))
     # persisted (r18): both final joins broadcast `counts`, and the two
     # broadcast builds each re-ran the groupBy over the capped spine
     # (plan: two BroadcastExchange subtrees aggregating capped); cached,
     # the second build reads G tiny (doc_id, n_sh) rows. ~1 row per doc
     # at any scale — two longs per row, safe to hold at 100 TB.
-    counts = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")).persist()
+    counts = tracked_persist(
+        capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    )
     a, b = capped.alias("a"), capped.alias("b")
     common = (
         a.join(b, F.col("a.shingle") == F.col("b.shingle"))

@@ -8,17 +8,28 @@ collapse into Spark's native distributed readers — Spark's json source
 handles ``.gz`` transparently and scales out the decompression; there is no
 driver-side byte shuffling.
 
-All readers accept an optional ``TableSpec`` so the scan is schema-first:
-with an explicit schema Spark skips the inference pass entirely and the
-parquet reader prunes to exactly the requested columns (``ReadSchema`` in
-the plan).
+The spec-driven readers (``read_jsonl``, ``read_with_meta``) take a
+``TableSpec`` so the scan is schema-first: with an explicit schema Spark
+skips the inference pass entirely and the parquet reader prunes to exactly
+the requested columns (``ReadSchema`` in the plan).
+
+The testdata reader ``read_table`` has no spec; it is schema-first through
+``parquet_schema`` instead. That lookup asks Spark to infer a table's
+schema (a one-task footer job) only the first time it sees a file set,
+and keeps the answer in a process-level dict. An entry is valid while the
+``(file, length, mtime)`` of every file under the path and the session's
+footer-mapping confs (``_SCHEMA_CONFS``) are unchanged, so a rewritten
+table or a flipped conf is inferred again. The schema is the one Spark
+would infer, so results and plans match a plain ``spark.read.parquet``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from etl_pipeline_example_spark.fsutil import hadoop_fs
 from etl_pipeline_example_spark.metadata.spec import TableSpec, spark_schema_for
 
 _FORMAT_ALIASES = {
@@ -89,6 +100,63 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Session confs that change the schema Spark infers from the same files:
+# how footer types map (nanos, binary, INT96, NTZ), whether footers merge,
+# and whether k=v partition values get typed.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (path, conf values) -> (file set the schema was inferred from, schema)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_set(fs, hpath) -> tuple:
+    """Sorted ``(file, length, mtime)`` of the file, or of every file
+    under the directory, at ``hpath``."""
+    status = fs.getFileStatus(hpath)
+    if not status.isDirectory():
+        statuses = [status]
+    else:
+        statuses = []
+        it = fs.listFiles(hpath, True)
+        while it.hasNext():
+            statuses.append(it.next())
+    return tuple(
+        sorted(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            for st in statuses
+        )
+    )
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path).schema`` infers, inferred at
+    most once per file set and conf values in this process.
+
+    Inference is a one-task Spark job that reads a footer; the lookup
+    that replaces it lists files through Hadoop ``FileSystem`` (any
+    scheme) and starts no job. A path that does not exist (or a glob) is
+    handed straight to Spark, so callers see Spark's own error.
+    """
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return spark.read.parquet(path).schema
+    files = _file_set(fs, hpath)
+    key = (path, tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == files:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (files, schema)
+    return schema
+
+
 _EVENTS_TAIL = "user_id bigint, event_type string, value double, props string"
 
 
@@ -103,10 +171,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     isAdjustedToUTC=false). A hardcoded ``ts long`` schema silently reads
     raw micros as if they were nanos — every timestamp lands 1000× too
     early and windows/sessions collapse — so the batch reader's footer
-    schema (cheap: footer only) decides which declaration to stream with.
+    schema decides which declaration to stream with. It comes from
+    ``parquet_schema``: one inference job per file set, then a listing.
     """
     ensure_nanos_conf(spark)
-    ts_type = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
+    events = parquet_schema(spark, f"{sf_dir}/events.parquet")
+    ts_type = events["ts"].dataType.simpleString()
     if ts_type == "bigint":  # TIMESTAMP(NANOS) generation
         df = (
             spark.readStream.schema(f"event_id bigint, ts long, {_EVENTS_TAIL}")
@@ -141,7 +211,8 @@ def read_table(
     # session read first (a nanos-only pin would make orders-table
     # timestamps flip between host-local and UTC based on query order)
     ensure_nanos_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     for col in _NANO_TS_COLUMNS.get(name, []):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
