@@ -14,16 +14,22 @@ or ``streaming/``. ``discover`` imports those modules in sorted order and
 merges every such dict, so no list needs editing. A key bound to two
 different values is an error. ``_DEMOTED`` hides a key from both maps;
 ``_REGISTER_FIRST`` puts keys first.
+
+Cache lifecycle: each callable that ``queries()`` returns first releases
+the caches that earlier keys registered through ``simcore.tracked_persist``,
+then runs its key, so a key's caches live until the next key starts.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 import pkgutil
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_pipeline_example_spark.operators.simcore import release_similarity_caches
 from etl_pipeline_example_spark.plans.queries import ANALYTIC_QUERIES
 
 
@@ -142,8 +148,19 @@ def _registry(suffix: str) -> dict:
     return {**{k: found[k] for k in _REGISTER_FIRST if k in found}, **found}
 
 
+def _after_release(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` run after releasing the previous key's caches."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_similarity_caches()
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _registry("_QUERIES")
+    return {key: _after_release(fn) for key, fn in _registry("_QUERIES").items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -18,6 +18,17 @@ def hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def dataset_bytes(spark: SparkSession, path: str) -> int | None:
+    """Total bytes of the file or directory tree at ``path`` — part files
+    and ``k=v`` partitions included, checksum files not — from Hadoop's
+    ``getContentSummary``, so one driver-side call answers for any scheme
+    and starts no job. None when ``path`` does not exist."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return int(fs.getContentSummary(hpath).getLength())
+
+
 def swap_into_place(spark: SparkSession, tmp_path: str, dest_path: str) -> None:
     """Replace ``dest_path`` with ``tmp_path`` with crash-recoverable
     ordering: move the old dir ASIDE (rename), move tmp in, then delete

@@ -41,7 +41,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _DUCK_SELF_NORM,
     _SPARK_DOT,
     _with_norm,
-    release_similarity_caches,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
 
@@ -49,7 +48,6 @@ from etl_pipeline_example_spark.sources.readers import read_table
 def ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): exact cosine top-k among
     corpus vectors sharing the query's label."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True),
         "embedding",

@@ -50,7 +50,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _SPARK_DOT,
     _duck_cosine,
     _with_norm,
-    release_similarity_caches,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
 
@@ -60,7 +59,6 @@ RADIUS_TAU = 0.2
 def ann_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id, cosine): every LSH-candidate neighbor of
     each benchmark query with cosine ≥ τ — no top-k truncation."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True),
         "embedding",

@@ -17,10 +17,11 @@ Scale shape: inherited from the composed operators (bucket-blocked
 candidate generation, broadcast query sides); the evaluation itself
 joins narrow (query_id, neighbor_id) id-pair frames — k·|queries|
 rows, never vectors — and aggregates to one row per method.
-Composition note: each ANN operator releases the similarity caches on
-entry, so the ground-truth frame is deliberately NOT persisted across
-the method runs; it re-derives lazily at evaluation time (id-pair
-narrow plan), keeping the cache-accumulation discipline intact.
+Composition note: the composed operators are plain calls, so every
+sub-operator cache stays live until the panel's single materialization
+(simcore releases a key's caches when the next key starts). The
+ground-truth frame itself is not persisted; it re-derives lazily at
+evaluation time (id-pair narrow plan).
 
 No reference counterpart (the reference is a 305-LoC ETL example);
 LLM-pipeline evaluation surface, SURVEY.md §2. Registered beyond the
@@ -34,7 +35,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import hold_similarity_caches
 from etl_pipeline_example_spark.operators.similarity import (
     ANN_BRUTEFORCE_SQL,
     ANN_IVF_SQL,
@@ -54,17 +54,11 @@ def ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(method, n_queries, n_possible, n_hits, recall): recall@k of
     each approximate ANN method against the exact brute-force top-k.
 
-    COMPOSITE: holds sub-operator caches (simcore) so ann_lsh/ann_ivf's
-    entry release does not unpin ann_bruteforce's tracked frames before
-    the matrix materializes — each sub-pipeline's caches fill once and
-    serve every plan reference. LAZY hold only (r17: eager persists of
-    the top-K frames here measured SLOWER — the barrier serialized jobs
-    the scheduler previously overlapped — and were reverted)."""
-    with hold_similarity_caches():
-        return _ann_recall_matrix(spark, sf_dir)
-
-
-def _ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    COMPOSITE: each sub-pipeline's tracked caches fill once during the
+    matrix's single action and serve every plan reference. Lazy only
+    (r17: eager persists of the top-K frames here measured SLOWER — the
+    barrier serialized jobs the scheduler previously overlapped — and
+    were reverted)."""
     truth = ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     rows = None
     for method, fn in _METHODS:

@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.hashing import duck_tokens, spark_tokens
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 BG_TOP = 100
@@ -67,10 +64,9 @@ def bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions covered by the corpus top-``BG_TOP`` bigram list.
 
     The position stream has two consumers (top-K count + per-doc join),
-    so it is persisted (tracked; released by the next operator) —
+    so it is persisted (tracked; released when the next key starts) —
     without it the tokenize+explode chain would scan the corpus twice.
     """
-    release_similarity_caches()
     pos = tracked_persist(_spark_positions(spark, sf_dir))
     top = (
         pos.groupBy("bg")

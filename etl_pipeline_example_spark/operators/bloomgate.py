@@ -47,10 +47,7 @@ from etl_pipeline_example_spark.operators.decontam import (
     EVAL_SOURCE,
     _spark_grams,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 BLOOM_BITS = 65536  # 2^16 address space, one shared bit array
@@ -69,7 +66,6 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_bloom, n_exact, n_false_pos): per train
     source, docs flagged by the broadcast bloom gate vs the exact
     n-gram join — the measured FPR panel of the deployed filter."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     train = docs.filter(F.col("source") != EVAL_SOURCE)
     eval_docs = docs.filter(F.col("source") == EVAL_SOURCE)

@@ -66,10 +66,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     duck_tokens,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 BM25_DF_MAX = 32  # impact-pruning bound on posting-list length
@@ -83,7 +80,6 @@ def bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval query under fixed-point odds-IDF BM25 over impact-pruned
     bigram postings; rank 1 = best, integer tie-break, score =
     score_scaled / 10^6 as double."""
-    release_similarity_caches()
     par = spark.sparkContext.defaultParallelism
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     # per-OCCURRENCE bigram spine: tf needs occurrences, df/query side

@@ -55,10 +55,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     duck_tokens,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 PRF_R = BM25_K  # feedback docs per query (pass-1 top-K)
@@ -78,7 +75,6 @@ def bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, doc_id, n_terms, n_exp, score, rank): top-K results
     per eval query after one round of pseudo-relevance feedback over
     the fixed-point BM25 ranker."""
-    release_similarity_caches()
     par = spark.sparkContext.defaultParallelism
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     big = tracked_persist(

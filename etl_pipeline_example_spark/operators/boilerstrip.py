@@ -27,10 +27,7 @@ from etl_pipeline_example_spark.operators.corpus import (
     DOC_CHUNK_SQL,
     doc_chunk,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 
 def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,7 +46,6 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     since the output IS the cleaned text (hashed here to keep the
     driver-facing result narrow).
     """
-    release_similarity_caches()
     chunks = tracked_persist(
         doc_chunk(spark, sf_dir).select(
             "doc_id",

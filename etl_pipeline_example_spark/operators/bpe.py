@@ -39,10 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.hashing import duck_tokens, spark_tokens
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 BPE_ROUNDS = 3
@@ -61,9 +58,9 @@ def _train(
     base vocabulary, and the final vocabulary with all merges applied).
     The vocabulary persist is TRACKED (simcore discipline): bpe_train
     releases it eagerly once the merges are collected, and bpe_encode —
-    whose lazy result still reads it — leaves release to the next
-    cache-creating operator's ``release_similarity_caches()`` call, so
-    the frame never stays pinned for the rest of a long driver run."""
+    whose lazy result still reads it — leaves it to the release when the
+    next key starts, so the frame never stays pinned for the rest of a
+    long driver run."""
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     toks = spark_tokens("text")
     words = tracked_persist(
@@ -95,7 +92,6 @@ def _train(
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(round, merge_pair, merged, pair_cnt): the first ``BPE_ROUNDS``
     BPE merges learned from the corpus, in merge order."""
-    release_similarity_caches()
     merges, words, _ = _train(spark, sf_dir)
     words.unpersist()
     return spark.createDataFrame(
@@ -115,7 +111,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Heaps' law) and carries two narrow columns, the per-doc aggregate
     is map-side combined, and no merge ever touches a corpus-sized row.
     """
-    release_similarity_caches()
     _, words, final = _train(spark, sf_dir)
     vocab = final.select(
         "word", F.expr("size(split(sym, ' '))").alias("n_sym")

@@ -58,9 +58,6 @@ from etl_pipeline_example_spark.operators.bpe import (
 )
 from etl_pipeline_example_spark.operators.fertility import BPE_FERTILITY_SQL
 from etl_pipeline_example_spark.operators.hashing import spark_tokens
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-)
 from etl_pipeline_example_spark.sources.readers import read_table
 
 
@@ -74,7 +71,6 @@ def build_bpe_merges(spark: SparkSession, sf_dir: str, path: str) -> None:
       with all merges applied (the apply-side lookup).
 
     One training loop total; both outputs are vocabulary-bounded."""
-    release_similarity_caches()
     merges, words, final = _train(spark, sf_dir)
     spark.createDataFrame(
         merges, "round int, merge_pair string, merged string, pair_cnt bigint"
@@ -92,7 +88,6 @@ def bpe_encode_indexed(
 ) -> DataFrame:
     """(doc_id, n_words, n_bpe_tokens): row-identical to ``bpe_encode``,
     joining the persisted vocab instead of retraining in-op."""
-    release_similarity_caches()
     vocab = spark.read.parquet(f"{path}/vocab")
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     return (

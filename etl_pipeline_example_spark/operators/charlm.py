@@ -116,12 +116,8 @@ def quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan expression. Exact ``percentile`` shuffles the score list once;
     at 100 TB switch to ``approx_percentile`` (t-digest) unless the cut
     points are contractual."""
-    from etl_pipeline_example_spark.operators.simcore import (
-        release_similarity_caches,
-        tracked_persist,
-    )
+    from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
-    release_similarity_caches()
     scored = tracked_persist(quality_charlm(spark, sf_dir).select("doc_id", "lm_score"))
     cuts = scored.agg(
         F.expr("round(percentile(lm_score, 0.33), 6)").alias("p33"),

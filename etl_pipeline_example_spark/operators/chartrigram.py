@@ -36,10 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 TOP_N = 5
 
@@ -61,7 +58,6 @@ def ngram_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, trigram, n_occ, rnk, occ_share): the top-5 character
     trigrams per labeled language."""
     docs = read_table(spark, sf_dir, "documents", parallel=True)
-    release_similarity_caches()
     # persisted: the rank window AND the per-lang totals both consume
     # counts — one trigram-explode pass instead of two
     counts = tracked_persist(

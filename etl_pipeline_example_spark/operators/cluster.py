@@ -40,58 +40,42 @@ python_scripts/test_data.py) — data-driven, declaratively expressed.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.fsutil import dataset_bytes
 from etl_pipeline_example_spark.operators.dedup import MINHASH_PAIR_CTES, dedup_minhash
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
+from etl_pipeline_example_spark.session import scoped_confs
 
 ITER_CAP = 20
 
 # Static narrow planning for the per-round label jobs when the INPUT is
 # provably small (the graph.py broadcast-gate discipline: a driver-side
-# file stat, no job). Profiled (r18): each pointer-doubling round over
-# the tiny cached label/edge frames ran as ~5 separate AQE stage-jobs
-# (one per exchange materialization plus re-planning between them), so
-# ~half the operator's wall was driver scheduling gap, not compute.
+# ``fsutil.dataset_bytes`` call, no job). Profiled (r18): each
+# pointer-doubling round over the tiny cached label/edge frames ran as
+# ~5 separate AQE stage-jobs (one per exchange materialization plus
+# re-planning between them), so ~half the operator's wall was driver
+# scheduling gap, not compute.
 # Under the gate the loop runs with AQE off at a fixed narrow width —
 # one checkpoint job + one probe job per round. Size-adaptive, not a
-# local[32] constant: past the gate (or on an object store) the loop
-# keeps AQE's runtime sizing unchanged.
+# local[32] constant: past the gate (or when the input is missing) the
+# loop keeps AQE's runtime sizing unchanged.
 _TINY_LOOP_INPUT_BYTES = 256 * 1024 * 1024
 _TINY_LOOP_WIDTH = 4
 
 
-def _tiny_loop_width(sf_dir: str, table: str) -> int | None:
+def _tiny_loop_width(spark: SparkSession, sf_dir: str, table: str) -> int | None:
     """``_TINY_LOOP_WIDTH`` when ``<sf_dir>/<table>.parquet`` is small
     enough that the CC label frames are trivially narrow; None (keep
-    AQE) otherwise or when the input cannot be stat'ed (object store)."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                e.stat().st_size for e in os.scandir(path) if e.is_file()
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
+    AQE) otherwise or when the input is missing."""
+    size = dataset_bytes(spark, f"{sf_dir}/{table}.parquet")
+    if size is None or size > _TINY_LOOP_INPUT_BYTES:
         return None
-    return _TINY_LOOP_WIDTH if size <= _TINY_LOOP_INPUT_BYTES else None
-
-
-@contextmanager
-def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+    return _TINY_LOOP_WIDTH
 
 
 @contextmanager
@@ -103,7 +87,7 @@ def _static_narrow_planning(spark: SparkSession, width: int | None):
     if width is None:
         yield
         return
-    with _scoped_confs(
+    with scoped_confs(
         spark,
         {
             "spark.sql.adaptive.enabled": "false",
@@ -145,7 +129,7 @@ def connected_components(
             )
         ).alias("e")
     ).select("e.a", "e.b")
-    both = both.distinct().persist()
+    both = tracked_persist(both.distinct())
     # initialization folds the first propagation round in: every node
     # starts at min(self, min neighbour) — one groupBy instead of a full
     # join+double round
@@ -220,7 +204,10 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(
-        pairs, "doc_a", "doc_b", loop_width=_tiny_loop_width(sf_dir, "documents")
+        pairs,
+        "doc_a",
+        "doc_b",
+        loop_width=_tiny_loop_width(spark, sf_dir, "documents"),
     )
     return comp.select(
         F.col("node").alias("doc_id"),

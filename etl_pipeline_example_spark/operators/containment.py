@@ -36,10 +36,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_hexint,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 CONT_SHINGLE = 3  # word-3-gram shingles
@@ -63,7 +60,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes ≤ DF_MAX² pairs, min-seed filtered — and exact scoring
     joins the full shingle sets of CANDIDATE docs only.
     """
-    release_similarity_caches()
     sh_hash = spark_hexint(f"concat_ws(' ', slice(tk, j + 1, {CONT_SHINGLE}))")
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     par = spark.sparkContext.defaultParallelism

@@ -35,6 +35,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_hexint,
     spark_tokens,
 )
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 # ------------------------------------------------------------------ chunking
@@ -125,7 +126,9 @@ def tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     toks = spark_tokens("text")
     # persisted: tf, n_tok, df and N are four scans of the same explode
-    terms = docs.select("doc_id", F.explode(F.expr(toks)).alias("term")).persist()
+    terms = tracked_persist(
+        docs.select("doc_id", F.explode(F.expr(toks)).alias("term"))
+    )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_tok = terms.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     df_tbl = terms.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))

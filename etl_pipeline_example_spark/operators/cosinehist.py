@@ -35,7 +35,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _DUCK_SELF_NORM,
     _SPARK_DOT,
     _with_norm,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.operators.similarity import (
@@ -54,7 +53,6 @@ def embed_cosine_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bin, lo, n_pairs): 20-bin histogram of exact cosine similarity
     over the LSH candidate-pair space (bin k covers
     [−1 + k/10, −1 + (k+1)/10))."""
-    release_similarity_caches()
     emb = tracked_persist(
         _with_norm(
             read_table(spark, sf_dir, "embeddings", parallel=True),

@@ -30,10 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 _CUTS = [i / 10.0 for i in range(1, 10)]
@@ -46,7 +43,6 @@ def mix_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic training order (decile 10 = longest docs, leading
     each round-robin cycle)."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    release_similarity_caches()
     per = tracked_persist(docs)
     cuts = per.agg(
         *[

@@ -34,6 +34,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_hexint,
     spark_tokens,
 )
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 NGRAM_N = 5
@@ -71,7 +72,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: consumed by both the per-doc totals and the overlap join —
     # without it the shingle explode+hash runs twice (see the dedup module
     # docstring for the caching contract)
-    train_grams = _spark_grams(train).persist()
+    train_grams = tracked_persist(_spark_grams(train))
     per_doc = train_grams.groupBy("doc_id").agg(
         F.countDistinct("gram").alias("n_grams")
     )

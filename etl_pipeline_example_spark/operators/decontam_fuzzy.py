@@ -16,7 +16,7 @@ scalar aggregates):
 
 - one shingle explode over the whole table, tagged with ``source`` —
   both slices, the signature pass, and both verify sides read the one
-  persisted table (released via the shared similarity cache tracker);
+  persisted table (tracked; released when the next key starts);
 - band buckets join TRAIN × EVAL on (band, bucket) — not a self-join:
   candidates are bounded by eval-side bucket occupancy, and a real
   benchmark eval set is tiny, so AQE broadcasts it (the hint stays off
@@ -51,10 +51,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_h32,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 CONTAM_MH_TAU = 0.5
@@ -64,7 +61,6 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, eval_doc_id, jaccard): train docs whose verified Jaccard
     with their best-matching eval doc is ≥ τ — the fuzzy-decontam drop
     list with provenance."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     toks = spark_tokens("text")
     shingles = tracked_persist(

@@ -26,12 +26,9 @@ candidate generation included.
 Caching contract: multi-pass operators (``dedup_minhash``,
 ``ngram_jaccard``) persist their reused intermediate and leave it
 cached — the returned DataFrame is lazy, so the operator can't know when
-its consumer is done. ``ngram_jaccard`` registers its caches with
-``simcore.tracked_persist``, so the next similarity operator releases
-them. ``dedup_minhash``'s caches are evicted LRU under memory pressure,
-but a long-lived session running many operators should call
-``spark.catalog.clearCache()`` between queries (bench.py and the test
-harness do).
+its consumer is done. They register their caches with
+``simcore.tracked_persist``, so the registry releases them when the next
+key starts.
 """
 
 from __future__ import annotations
@@ -139,19 +136,21 @@ def _minhash_signature_tables(
     the shingle table as its own concurrent job (profiler: a wave of
     ~8 duplicate ~200 ms scan/aggregate jobs before any cache filled).
     """
-    shingles = _spark_shingle_table(spark, sf_dir).persist()
+    shingles = tracked_persist(_spark_shingle_table(spark, sf_dir))
     hashed = shingles.select(
         "doc_id",
         F.expr(spark_h32("shingle", 1)).alias("h1"),
         F.expr(spark_h32("shingle", 17)).alias("h2"),
     )
-    sig = hashed.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.expr(f"(h1 + {i + 1} * h2) % {MH_PRIME}")).alias(f"m{i}")
-            for i in range(MH_NUM_HASHES)
-        ],
-    ).persist()
+    sig = tracked_persist(
+        hashed.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_sh"),
+            *[
+                F.min(F.expr(f"(h1 + {i + 1} * h2) % {MH_PRIME}")).alias(f"m{i}")
+                for i in range(MH_NUM_HASHES)
+            ],
+        )
+    )
     return shingles, sig
 
 

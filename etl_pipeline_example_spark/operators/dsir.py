@@ -40,10 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.operators.hashing import (
     duck_hexint,
     duck_tokens,
@@ -95,9 +92,8 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and BOTH consumers (model fit, raw-pool scoring) need it — without
     # the cache the explode+hash runs twice (measured 2× at sf0.1). The
     # cached rows are three narrow columns; at corpus scale this spills
-    # to disk rather than re-hashing. Tracked so the next operator
-    # releases it (the simcore cross-operator cache contract).
-    release_similarity_caches()
+    # to disk rather than re-hashing. Tracked, so it is released when
+    # the next key starts (simcore cache discipline).
     grams = tracked_persist(_bigram_buckets(docs))
     model = grams.groupBy("bucket").agg(
         F.sum(

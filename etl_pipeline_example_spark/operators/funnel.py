@@ -41,10 +41,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_example_spark.operators.c4 import duck_c4_keep, spark_c4_keep
 from etl_pipeline_example_spark.operators.decontam import EVAL_SOURCE, NGRAM_N
 from etl_pipeline_example_spark.operators.domain import DOMAIN_CAP
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.operators.hashing import (
     duck_hexint,
     duck_norm_text,
@@ -59,7 +56,6 @@ from etl_pipeline_example_spark.sources.readers import read_table
 def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four-stage attrition report: (stage, n_in, n_kept), one row per
     stage in pipeline order."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     train = docs.filter(F.col("source") != EVAL_SOURCE)
 

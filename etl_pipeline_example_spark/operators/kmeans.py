@@ -23,7 +23,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _DUCK_SQDIST,
     _SPARK_SQDIST,
     KMEANS_DECIMAL,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -84,7 +83,6 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side loops; iteration count is a fixed constant here, and the
     production form ``kmeans_fit`` wraps the same two stages in a
     convergence probe."""
-    release_similarity_caches()
     emb = tracked_persist(
         read_table(spark, sf_dir, "embeddings", parallel=True).select(
             "vec_id", "embedding"
@@ -136,9 +134,8 @@ def kmeans_fit(
     rounding-degraded successor. Raises ``KMeansNotConverged`` at the
     cap — convergence is data-dependent and a silent cap would report a
     mid-descent labeling as final."""
-    release_similarity_caches()
     # eager loop -> natural release point: unpersist at every exit instead
-    # of deferring to the cross-operator tracker
+    # of waiting for the next key's release
     emb = (
         read_table(spark, sf_dir, "embeddings", parallel=True)
         .select("vec_id", "embedding")

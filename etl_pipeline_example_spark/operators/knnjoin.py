@@ -67,7 +67,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _SPARK_DOT,
     _duck_cosine,
     _with_norm,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -92,7 +91,6 @@ def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-candidate neighbors by exact cosine, blocked at the
     corpus-size-derived bit-width (bounded bucket occupancy → linear
     candidate count at every scale)."""
-    release_similarity_caches()
     emb = tracked_persist(
         _with_norm(
             read_table(spark, sf_dir, "embeddings", parallel=True),

@@ -33,17 +33,13 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.text import TEXT_ORACLES, text_langid
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 
 def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang_true, pred_lang, n_docs, share_of_true): the langid
     confusion matrix with per-true-label recall shares."""
     docs = read_table(spark, sf_dir, "documents")
-    release_similarity_caches()
     pred = text_langid(spark, sf_dir).select("doc_id", "pred_lang")
     # persisted: the recall totals are a second consumer — without it
     # the broadcast side re-runs the whole langid scoring scan

@@ -33,10 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 KS_BUCKET = 64  # chars per ECDF grid cell
@@ -47,7 +44,6 @@ def length_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     its doc-length ECDF and the corpus ECDF (self included — a
     source that IS most of the corpus shows low drift by
     construction, which is the operationally useful reading)."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     # the one corpus-wide shuffle; three consumers -> persisted
     sb = tracked_persist(

@@ -35,7 +35,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _DUCK_SELF_NORM,
     _SPARK_DOT,
     _with_norm,
-    release_similarity_caches,
 )
 from etl_pipeline_example_spark.operators.similarity import (
     _DUCK_SIGN_DOT,
@@ -52,7 +51,6 @@ MP_BITS = 8
 def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): top-k via 4-table LSH
     with Hamming-1 multi-probe (9 probes per table per query)."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True),
         "embedding",

@@ -57,10 +57,7 @@ from etl_pipeline_example_spark.operators.dedup import (
 )
 from etl_pipeline_example_spark.operators.hashing import duck_h32, spark_h32
 from etl_pipeline_example_spark.operators.incremental import INCR_SPLIT
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 NEAR_EST_MIN = MH_NUM_HASHES // 2  # 8/16 matching components ≈ Jaccard 0.5
@@ -104,7 +101,6 @@ def _bands(sig: DataFrame) -> DataFrame:
 
 def neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, status) for every incoming-batch document."""
-    release_similarity_caches()
     sig = tracked_persist(_signatures(spark, sf_dir))
     bands = _bands(sig)
     hist_bands = bands.filter(F.col("doc_id") < INCR_SPLIT)

@@ -35,10 +35,7 @@ from etl_pipeline_example_spark.operators.phash import (
     MULTIMODAL_PHASH_SQL,
     multimodal_phash,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 N_BANDS = 4  # 16 bits each: lo[0:16], lo[16:32], hi[0:16], hi[16:32]
 HAM_MAX = 3  # < N_BANDS, so pigeonhole guarantees a clean band
@@ -47,7 +44,6 @@ HAM_MAX = 3  # < N_BANDS, so pigeonhole guarantees a clean band
 def multimodal_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, hamming): image pairs whose aHashes differ in at
     most HAM_MAX bits, via banded blocking (never all-pairs)."""
-    release_similarity_caches()
     hashes = multimodal_phash(spark, sf_dir).select(
         "doc_id", "hash_lo", "hash_hi"
     )

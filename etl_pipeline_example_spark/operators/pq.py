@@ -41,7 +41,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _SPARK_DOT,
     _SPARK_SQDIST,
     _with_norm,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -367,7 +366,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors re-join for just the survivors. Composes with the IVF cell
     gating for sub-linear probes — kept flat here (like
     ``ann_int8_rerank``) so the oracle stays exact."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     )
@@ -440,8 +438,8 @@ def _ivf_cells(spark: SparkSession, emb: DataFrame) -> tuple[DataFrame, DataFram
     """IVF gating state over a normed corpus: (assign, probes) —
     ``assign`` is every vector's cell (crn == 1), ``probes`` the query
     vectors' ``IVF_NPROBE`` nearest cells. The shared persisted cell
-    ranking is registered with the cache tracker (released by the next
-    similarity-family operator — the round-5 ADVICE leak)."""
+    ranking is registered with the cache tracker (released when the next
+    key starts — the round-5 ADVICE leak)."""
     hexid = spark_hexint("cast(vec_id as string)")
     cents = (
         emb.filter(F.col("vec_id") >= ANN_NUM_QUERIES)
@@ -485,7 +483,6 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregates map-side; float vectors are fetched for ~50 rows
     per query. Every stage is the audited shape of its standalone parent
     (``ann_ivf`` gating, ``ann_pq_adc`` scoring)."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     )
@@ -641,7 +638,6 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     Build cost is one corpus pass for assignment + one for coding (both
     broadcast joins, no wide shuffle); the partitioned write shuffles
     narrow (cell, vec_id, m, code) rows only."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     )
@@ -668,7 +664,6 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
         .partitionBy("cell")
         .parquet(f"{path}/codes")
     )
-    release_similarity_caches()
 
 
 def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:

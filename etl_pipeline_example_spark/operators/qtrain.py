@@ -66,10 +66,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_hexint,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 QT_BUCKETS = 512
@@ -154,7 +151,6 @@ def quality_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, label, n_terms, score, keep): the trained-weight gate.
     ``score`` is the exact integer dot product against the learned
     table; zero-token docs score (0, keep=false)."""
-    release_similarity_caches()
     feat = tracked_persist(_features(spark, sf_dir))
     w = train_quality_weights(spark, sf_dir, feat=feat)
     wdf = F.broadcast(

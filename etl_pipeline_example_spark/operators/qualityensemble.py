@@ -36,7 +36,6 @@ from etl_pipeline_example_spark.operators.charlm import (
     CHARLM_ORACLES,
     CHARLM_QUERIES,
 )
-from etl_pipeline_example_spark.operators.simcore import hold_similarity_caches
 from etl_pipeline_example_spark.operators.qlinear import (
     QLINEAR_ORACLES,
     QLINEAR_QUERIES,
@@ -47,19 +46,18 @@ def quality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c4_keep, charlm_keep, linear_keep, n_gates, n_docs): the
     keep-decision cube — one row per observed gate-verdict combination
     with its document count and consensus level."""
-    # hold: quality_linear's training entry release must not unpin
-    # quality_charlm's tracked caches before the three-gate join
-    # materializes (an unpinned cache recomputes per plan reference).
-    with hold_similarity_caches():
-        c4 = C4_QUERIES["quality_c4"](spark, sf_dir).select(
-            "doc_id", F.col("keep").alias("c4_keep")
-        )
-        lm = CHARLM_QUERIES["quality_charlm"](spark, sf_dir).select(
-            "doc_id", F.col("keep").alias("charlm_keep")
-        )
-        lin = QLINEAR_QUERIES["quality_linear"](spark, sf_dir).select(
-            "doc_id", F.col("keep").alias("linear_keep")
-        )
+    # quality_charlm's tracked caches stay live until the three-gate
+    # join materializes (simcore releases them when the next key starts;
+    # an unpinned cache would recompute per plan reference).
+    c4 = C4_QUERIES["quality_c4"](spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("c4_keep")
+    )
+    lm = CHARLM_QUERIES["quality_charlm"](spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("charlm_keep")
+    )
+    lin = QLINEAR_QUERIES["quality_linear"](spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("linear_keep")
+    )
     return (
         c4.join(lm, "doc_id")
         .join(lin, "doc_id")

@@ -32,8 +32,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import hold_similarity_caches
-
 from etl_pipeline_example_spark.operators.bm25 import (
     BM25_RANK_SQL,
     bm25_rank,
@@ -49,18 +47,11 @@ def retrieval_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap and winner agreement between the two registered retrievers;
     queries retrieved by only one scorer report the other side as 0.
 
-    COMPOSITE: holds sub-operator caches (simcore — the retrieval_rrf
-    pattern) so retrieve_overlap's entry release does not unpin
-    bm25_rank's tracked posting caches before the agreement plan
-    materializes; without the hold every one of bm/ov's plan references
-    silently re-ran the whole retriever. LAZY hold only (r17: eager
-    persists of the two top-K frames here measured SLOWER and were
-    reverted)."""
-    with hold_similarity_caches():
-        return _retrieval_agreement(spark, sf_dir)
-
-
-def _retrieval_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    COMPOSITE: bm25_rank's tracked posting caches stay live until the
+    agreement plan materializes (simcore releases them when the next key
+    starts), so bm/ov's plan references read them instead of re-running
+    the whole retriever. Lazy only (r17: eager persists of the two top-K
+    frames here measured SLOWER and were reverted)."""
     bm = bm25_rank(spark, sf_dir).select("query_id", "doc_id", "rank")
     ov = retrieve_overlap(spark, sf_dir).select("query_id", "doc_id", "rank")
     nb = bm.groupBy("query_id").agg(

@@ -41,10 +41,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.decontam import EVAL_SOURCE
 from etl_pipeline_example_spark.operators.hashing import duck_tokens, spark_tokens
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 RETR_N = 5  # tokens per shingle (the decontam unit)
@@ -55,14 +52,13 @@ RETR_K = 3  # results returned per query
 def retrieve_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, doc_id, n_shared, rank): top-K candidate docs per
     eval query by count of shared low-df shingles (rank 1 = best)."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     # The inverted-index spine feeds three consumers (query side,
-    # candidate side, df filter) — persist it once, tracked so the next
-    # operator releases it. One explicit g-keyed repartition bounds the
-    # shuffle width AND pre-clusters the frame for every downstream
-    # g-keyed op (distinct, df groupBy, both joins reuse the
-    # partitioning — no further g exchange in the plan).
+    # candidate side, df filter) — persist it once, tracked so it is
+    # released when the next key starts. One explicit g-keyed
+    # repartition bounds the shuffle width AND pre-clusters the frame
+    # for every downstream g-keyed op (distinct, df groupBy, both joins
+    # reuse the partitioning — no further g exchange in the plan).
     par = spark.sparkContext.defaultParallelism
     sh = tracked_persist(
         docs.select(

@@ -33,7 +33,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _DUCK_SELF_NORM,
     _SPARK_DOT,
     _with_norm,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -99,7 +98,6 @@ def ann_rp_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-C and final top-K are per-query window ranks over broadcast
     joins (no corpus shuffle at any stage).
     """
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     ).filter(F.col("nrm") > 0)

@@ -40,7 +40,6 @@ from etl_pipeline_example_spark.operators.retrieval import (
     RETRIEVE_OVERLAP_SQL,
     retrieve_overlap,
 )
-from etl_pipeline_example_spark.operators.simcore import hold_similarity_caches
 
 RRF_K = 60  # the Cormack et al. constant
 RRF_TOP = 3  # fused results per query
@@ -66,17 +65,16 @@ def retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, doc_id, rank_bm, rank_ov, rrf, rank): top fused
     results per query under reciprocal-rank fusion of bm25_rank and
     retrieve_overlap; docs missing from one list contribute 0 from it."""
-    # hold: retrieve_overlap's entry release must not unpin bm25_rank's
-    # posting cache before the fused plan materializes — bm25's postings
-    # frame is referenced several times inside its own pipeline, and an
-    # unpinned cache silently recomputes per reference.
-    with hold_similarity_caches():
-        bm = bm25_rank(spark, sf_dir).select(
-            "query_id", "doc_id", F.col("rank").alias("rank_bm")
-        )
-        ov = retrieve_overlap(spark, sf_dir).select(
-            "query_id", "doc_id", F.col("rank").alias("rank_ov")
-        )
+    # bm25_rank's posting cache stays live until the fused plan
+    # materializes (simcore releases it when the next key starts) — the
+    # postings frame is referenced several times inside its own
+    # pipeline, and an unpinned cache silently recomputes per reference.
+    bm = bm25_rank(spark, sf_dir).select(
+        "query_id", "doc_id", F.col("rank").alias("rank_bm")
+    )
+    ov = retrieve_overlap(spark, sf_dir).select(
+        "query_id", "doc_id", F.col("rank").alias("rank_ov")
+    )
     fused = bm.join(ov, ["query_id", "doc_id"], "full_outer").select(
         "query_id",
         "doc_id",

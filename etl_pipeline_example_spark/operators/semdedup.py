@@ -44,7 +44,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _with_norm,
     EMB_TAU,
     KMEANS_DECIMAL,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -199,7 +198,6 @@ def _semdedup_2l_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-level labeling stage: (vec_id, embedding, nrm, cluster_id)
     with K = N/OCC cells, persisted for the downstream self-join (and for
     the occupancy audit, which grades this stage directly)."""
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     ).persist()
@@ -413,7 +411,7 @@ def semdedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _semdedup_pairs(labeled).select("vec_a", "vec_b")
     comp = connected_components(
         pairs, "vec_a", "vec_b",
-        loop_width=_tiny_loop_width(sf_dir, "embeddings"),
+        loop_width=_tiny_loop_width(spark, sf_dir, "embeddings"),
     )
     return comp.select(
         F.col("node").alias("vec_id"),

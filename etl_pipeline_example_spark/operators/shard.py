@@ -39,10 +39,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_hexint,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 SHARD_TOKENS = 2000  # token budget per shard
@@ -54,11 +51,10 @@ def shard_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, shard_id): deterministic-hash-ordered corpus
     cut into ~``SHARD_TOKENS``-token shards; a doc belongs to the shard
     its RUNNING total starts in (docs are never split)."""
-    release_similarity_caches()
     h = spark_hexint("concat('shard:', cast(doc_id as string))")
     # the narrow (doc_id, n_tokens, h, bucket) spine feeds BOTH phases
     # (the bucket-totals collect and the windowed cumsum) — persisted so
-    # the tokenize+hash scan runs once, released by the next operator
+    # the tokenize+hash scan runs once, released when the next key starts
     docs = tracked_persist(
         read_table(spark, sf_dir, "documents", parallel=True)
         .select(

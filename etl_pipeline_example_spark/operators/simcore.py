@@ -83,41 +83,27 @@ def _with_norm(df: DataFrame, vec: str, out: str) -> DataFrame:
 
 # ------------------------------------------------------- cache discipline
 #
-# Several similarity operators persist a reused intermediate (the cached
-# labeling both sides of a self-join read, the IVF cell ranking both the
+# Several operators persist a reused intermediate (the cached labeling
+# both sides of a self-join read, the IVF cell ranking both the
 # assignment and the probe list consume). The operators return LAZY
 # DataFrames — the caller materializes them — so the function itself has
-# no "after the downstream joins ran" point to unpersist at. Left alone,
-# a 90-query driver session accumulates every such cache in executor
-# memory (the round-5 ADVICE finding).
+# no "after the downstream joins ran" point to unpersist at.
 #
-# The discipline: caches register here at persist time, and every
-# cache-creating operator RELEASES the previous operator's caches on
-# entry. By the time operator N+1 runs, operator N's result has been
-# collected (the driver, bench, and oracle harnesses all materialize one
-# query before starting the next), so its caches are dead weight.
-# Unpersisting is never a correctness hazard — a still-referenced plan
-# over a released cache silently recomputes.
+# The discipline: caches register here at persist time and live for the
+# rest of the key that created them. A composite key calls its
+# sub-operators as plain functions, so every sub-cache survives to the
+# key's single materialization. The registry (``__spark_entry__.queries``)
+# releases them when the NEXT key starts: by then the previous key's
+# result has been collected (the driver, bench, and oracle harnesses all
+# materialize one query before starting the next). Unpersisting is never
+# a correctness hazard — a still-referenced plan over a released cache
+# silently recomputes.
 
 _LIVE_CACHES: list[DataFrame] = []
-_HOLD_DEPTH = 0
 
 
 def release_similarity_caches() -> None:
-    """Unpersist every cache registered by prior similarity operators.
-
-    Inside a ``hold_similarity_caches()`` scope this is a no-op: a
-    COMPOSITE operator (retrieval_agreement, ann_recall_matrix, ...)
-    builds one plan out of several sub-operators, and the second
-    sub-operator's entry release would otherwise unpin the first's
-    still-referenced caches BEFORE the composite ever materializes —
-    every reference then silently recomputes the whole sub-pipeline
-    (measured: the recompute, not the scoring, dominated those
-    queries). The hold keeps every sub-cache live until the composite
-    is done; the NEXT top-level operator's entry release drops them.
-    """
-    if _HOLD_DEPTH:
-        return
+    """Unpersist every cache registered through ``tracked_persist``."""
     while _LIVE_CACHES:
         df = _LIVE_CACHES.pop()
         try:
@@ -126,26 +112,9 @@ def release_similarity_caches() -> None:
             pass
 
 
-class hold_similarity_caches:
-    """Context manager for composite operators: release the PREVIOUS
-    top-level operator's caches once on entry, then suppress release so
-    each sub-operator's caches survive to the composite's single
-    materialization (lazy — no eager barrier; the caches fill during
-    the consumer's one action and serve every plan reference)."""
-
-    def __enter__(self) -> None:
-        global _HOLD_DEPTH
-        release_similarity_caches()
-        _HOLD_DEPTH += 1
-
-    def __exit__(self, *exc: object) -> None:
-        global _HOLD_DEPTH
-        _HOLD_DEPTH -= 1
-
-
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for release by the NEXT similarity
-    operator invocation (see module note)."""
+    """Persist ``df`` and register it for release when the next key
+    starts (see module note)."""
     df.persist()
     _LIVE_CACHES.append(df)
     return df

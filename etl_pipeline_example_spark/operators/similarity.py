@@ -87,7 +87,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     _SPARK_DOT,
     _duck_cosine,
     _with_norm,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -496,7 +495,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       stage is ~40% of runtime; the candidate self-join (~2M of 2M
       possible pairs at this τ) is the floor, and it is inherent.
     """
-    release_similarity_caches()
     emb = tracked_persist(
         _with_norm(
             read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
@@ -598,7 +596,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (proven for the IVFADC composition by the ``ann_ivfpq_indexed``
     plan audit).
     """
-    release_similarity_caches()
     emb = _with_norm(
         read_table(spark, sf_dir, "embeddings", parallel=True), "embedding", "nrm"
     )

@@ -32,10 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 TOP_K = 20
@@ -46,7 +43,6 @@ def join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_x1000): the ``TOP_K`` heaviest events join keys with global
     key statistics — the pre-join skew report for ``events.user_id``.
     """
-    release_similarity_caches()
     events = read_table(spark, sf_dir, "events")
     keyed = tracked_persist(
         events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_rows"))

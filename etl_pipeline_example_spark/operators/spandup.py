@@ -41,10 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.hashing import duck_tokens, spark_tokens
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 SPAN_K = 8  # tokens per shingle — the minimum span length detected
@@ -111,8 +108,7 @@ def substring_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``quality_repetition`` owns that signal). Docs shorter than K tokens
     report (0, 0, 0.0). The shingle spine feeds both the dup-hash
     aggregate and the per-doc join, so it is persisted (tracked,
-    released by the next operator) — one tokenize pass, not two."""
-    release_similarity_caches()
+    released when the next key starts) — one tokenize pass, not two."""
     sh = tracked_persist(_spark_shingles(spark, sf_dir))
     dup = (
         sh.groupBy("h")

@@ -48,10 +48,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     duck_tokens,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 TFCOS_DF_MAX = 32
@@ -67,7 +64,6 @@ _COS = (
 def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_shared, dot, cos_sim): document pairs with
     rare-term weighted cosine ≥ 0.5, ordered by similarity."""
-    release_similarity_caches()
     docs = read_table(spark, sf_dir, "documents", parallel=True)
     terms = docs.select(
         "doc_id", F.expr(spark_tokens("text")).alias("tk")

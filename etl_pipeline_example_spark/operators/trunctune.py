@@ -38,7 +38,6 @@ from etl_pipeline_example_spark.operators.simcore import (
     ANN_NUM_QUERIES,
     _DUCK_DOT,
     _SPARK_DOT,
-    release_similarity_caches,
     tracked_persist,
 )
 from etl_pipeline_example_spark.sources.readers import read_table
@@ -57,7 +56,6 @@ def _spark_trunc_cos(d: int) -> str:
 def embed_trunc_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(dim, n_hits, n_possible, recall_at_k): truncated-ranking recall
     against the full-dim exact top-K, over the standard query set."""
-    release_similarity_caches()
     emb = read_table(spark, sf_dir, "embeddings", parallel=True)
     queries = emb.filter(F.col("vec_id") < ANN_NUM_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")

@@ -47,10 +47,7 @@ from etl_pipeline_example_spark.operators.hashing import (
     duck_tokens,
     spark_tokens,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 WIN_K = 4  # tokens per k-gram
@@ -103,7 +100,6 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # held TWELVE parquet-scan subtrees and re-ran the md5 pass per
     # consumer.  The cached frame is narrow (doc_id, fp) int pairs and
     # spills to disk at scale (MEMORY_AND_DISK default).
-    release_similarity_caches()
     selected = tracked_persist(
         hashes.select(
             "doc_id",

@@ -63,7 +63,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("e.src", "e.dst")
     dx = degrees.select(F.col("p").alias("src"), F.col("deg").alias("x"))
     dy = degrees.select(F.col("p").alias("dst"), F.col("deg").alias("y"))
-    if _edges_broadcastable(sf_dir):
+    if _edges_broadcastable(spark, sf_dir):
         # Both endpoint joins probe the |V|-sized degree table, which
         # the lineitem-size gate bounds the same way it bounds |E|
         # (guide §3.1): broadcasting it turns the two repartition +

@@ -30,10 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 
@@ -42,7 +39,6 @@ def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every ordered event-type pair."""
     ev = read_table(spark, sf_dir, "events").select("user_id", "event_type")
     dp = spark.sparkContext.defaultParallelism
-    release_similarity_caches()
     # PERSISTED (tracked): three consumers below (self-join twice +
     # marginals) — without it each re-runs the dedup shuffle; the
     # cached partitioning (user_id subset) also lets the self-join

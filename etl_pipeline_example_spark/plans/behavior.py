@@ -24,10 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 FUNNEL_STEPS = ("view", "click", "purchase")
@@ -48,12 +45,11 @@ def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the partitioning across the chained joins — and each
     conditional min is a map-side-combined partial; the events table
     is scanned once per step with only (user_id, ts) surviving the
-    projection. t1/t2 are persisted (tracked, released by the next
-    operator): each feeds BOTH the next step's lineage and its own
+    projection. t1/t2 are persisted (tracked, released when the next
+    key starts): each feeds BOTH the next step's lineage and its own
     count, so without the persist the three driver-side counts would
     re-run the events scan+agg chain ~6× instead of 3×.
     """
-    release_similarity_caches()
     s1, s2, s3 = FUNNEL_STEPS
     # one explicit user_id-keyed repartition at core count: every step's
     # aggregation and join reuses the partitioning, and the shuffle width

@@ -65,7 +65,7 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    if _edges_broadcastable(sf_dir):
+    if _edges_broadcastable(spark, sf_dir):
         # tiny-frame BFS rounds: one partition beats 32 tasks of ~100-row
         # partitions per round (the graph_cc r17 width fix); at scale the
         # gate fails and the cache's dp-wide layout is used unchanged

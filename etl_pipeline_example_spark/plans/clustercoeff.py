@@ -50,14 +50,14 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The edge list and degree table are built ONCE and shared by the
     triangle pipeline and the wedge fold.  The previous shape called
-    `graph_triangles()` and then `_edges()` again — the second call's
-    cache-release unpinned the triangle pipeline's persisted frames
-    mid-plan, so the whole |E| self-join ran twice (measured ~10 s at
-    sf0.1; shared: the triangle cost plus one |V| aggregate)."""
+    `graph_triangles()` and then `_edges()` again, building a second
+    edge list beside the triangle pipeline's persisted one, so the whole
+    |E| self-join ran twice (measured ~10 s at sf0.1; shared: the
+    triangle cost plus one |V| aggregate)."""
     edges = _edges(spark, sf_dir)
     degrees = tracked_persist(_degrees(spark, edges))
     tri = _triangles_from(
-        spark, edges, degrees, _edges_broadcastable(sf_dir)
+        spark, edges, degrees, _edges_broadcastable(spark, sf_dir)
     )
     # Σ deg·(deg−1) = 2W accumulates in decimal; the halving happens in
     # the double rendering (exact: both engines halve the identical

@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 _CUTS = [i / 10.0 for i in range(1, 10)]  # 0.1 … 0.9
 
@@ -47,7 +44,6 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n_customers, decile_rev, rev_share): customer spend
     deciles (1 = lowest) with each decile's revenue share."""
     orders = read_table(spark, sf_dir, "orders")
-    release_similarity_caches()
     # persisted: the percentile cuts AND the bucketing pass both consume
     # the per-customer rollup — one orders scan instead of two
     per = tracked_persist(

@@ -33,10 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 MIG_SPLIT = "1998-01-01"
@@ -53,7 +50,6 @@ def _bucket_case(rev: str, pfx: str) -> str:
 def q_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_from, q_to, n_customers): customer quintile transition matrix
     between the pre/post-{MIG_SPLIT} periods; band 0 = absent."""
-    release_similarity_caches()
     orders = read_table(spark, sf_dir, "orders")
     per = tracked_persist(
         orders.groupBy("o_custkey")

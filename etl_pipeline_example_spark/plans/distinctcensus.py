@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.fsutil import dataset_bytes
 from etl_pipeline_example_spark.plans.nullcensus import _TABLES
 from etl_pipeline_example_spark.sources.readers import read_table
 
@@ -54,17 +55,9 @@ def dq_distinct_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session width (guide §2.5: width must follow per-row cost,
         # not bytes).  Tiny dimension tables stay single-task — a
         # 32-way exchange of 5 rows is pure scheduler overhead.
-        import os as _os
-
         df = read_table(spark, sf_dir, tbl)
-        try:
-            big = (
-                _os.path.getsize(_os.path.join(sf_dir, f"{tbl}.parquet"))
-                >= 512 << 10
-            )
-        except OSError:
-            big = True  # non-local path: assume big
-        if big:
+        size = dataset_bytes(spark, f"{sf_dir}/{tbl}.parquet")
+        if size is None or size >= 512 << 10:
             df = df.repartition(
                 spark.sparkContext.defaultParallelism, cols[0]
             )

@@ -43,10 +43,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 N_BUCKETS = 8
@@ -66,7 +63,6 @@ def _bucket_case() -> str:
 def q_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_rows, lo, hi): 8-bucket equi-depth histogram of
     o_totalprice, cut at lower-inverse-ECDF boundaries."""
-    release_similarity_caches()
     dp = spark.sparkContext.defaultParallelism
     # the ONLY corpus-wide pass: value counts, bounded by the domain.
     # repartition(dp, chunk) bounds the shuffle width AND pre-clusters

@@ -40,10 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.fsutil import dataset_bytes
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 
@@ -64,7 +62,6 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(dp, "l_orderkey")
         .distinct()
     )
-    release_similarity_caches()
     return tracked_persist(
         li.alias("a")
         .join(li.alias("b"), "l_orderkey")
@@ -127,8 +124,9 @@ SELECT degree, count(*) AS n_parts FROM degrees GROUP BY 1 ORDER BY degree
 
 # Broadcast the (u, v) edge list into the wedge-closure join when it is
 # provably small.  The gate is the RAW INPUT SIZE of the lineitem scan
-# (a driver-side file stat — no job, no barrier): baskets are
-# schema-bounded (≤ 7 lines/order → ≤ 21 pairs/order), so |E| is linear
+# (``fsutil.dataset_bytes``: one driver-side call — no job, no
+# barrier): baskets are schema-bounded (≤ 7 lines/order → ≤ 21
+# pairs/order), so |E| is linear
 # in lineitem and a ≤ 256 MB lineitem bounds the two-long edge list to
 # a few tens of MB built — comfortable against the session's 8 g driver
 # and Spark's 8 GB broadcast cap.  The wedge side is Σ d_out² (>> |E|),
@@ -140,22 +138,9 @@ SELECT degree, count(*) AS n_parts FROM degrees GROUP BY 1 ORDER BY degree
 _BCAST_INPUT_BYTES = 256 * 1024 * 1024
 
 
-def _edges_broadcastable(sf_dir: str) -> bool:
-    import os
-
-    path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        # a dataset may be a directory of part files; sum the parts
-        # rather than trust the directory inode's size (round-17 ADVICE)
-        if os.path.isdir(path):
-            size = sum(
-                e.stat().st_size for e in os.scandir(path) if e.is_file()
-            )
-        else:
-            size = os.path.getsize(path)
-        return size <= _BCAST_INPUT_BYTES
-    except OSError:  # non-local path (object store): never broadcast
-        return False
+def _edges_broadcastable(spark: SparkSession, sf_dir: str) -> bool:
+    size = dataset_bytes(spark, f"{sf_dir}/lineitem.parquet")
+    return size is not None and size <= _BCAST_INPUT_BYTES
 
 
 def _triangles_from(
@@ -250,7 +235,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
     # persisted (|V| rows): consumed by both endpoint joins below
     degrees = tracked_persist(_degrees(spark, edges))
-    return _triangles_from(spark, edges, degrees, _edges_broadcastable(sf_dir))
+    return _triangles_from(spark, edges, degrees, _edges_broadcastable(spark, sf_dir))
 
 
 GRAPH_TRIANGLES_SQL = f"""

@@ -54,10 +54,7 @@ from etl_pipeline_example_spark.operators.cluster import (
     ITER_CAP,
     ComponentsNotConverged,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 MIN_CO_ORDERS = 2
@@ -78,7 +75,6 @@ def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(dp, "l_orderkey")
         .distinct()
     )
-    release_similarity_caches()
     return tracked_persist(
         li.alias("a")
         .join(li.alias("b"), "l_orderkey")
@@ -220,7 +216,7 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph; component = min part key reachable."""
     dp = spark.sparkContext.defaultParallelism
     comp = _cc_min_label(
-        _co_edges(spark, sf_dir), dp, bcast=_edges_broadcastable(sf_dir)
+        _co_edges(spark, sf_dir), dp, bcast=_edges_broadcastable(spark, sf_dir)
     )
     return (
         comp.repartition(dp, "component")

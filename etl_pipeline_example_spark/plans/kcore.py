@@ -52,7 +52,7 @@ def graph_kcore2(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the budget, so the flag reads true at every graded scale
     and the bounded answer IS the exact core."""
     dp = spark.sparkContext.defaultParallelism
-    bcast = _edges_broadcastable(sf_dir)
+    bcast = _edges_broadcastable(spark, sf_dir)
     edges = _co_edges(spark, sf_dir)
     # one inline explode, not a two-branch unionAll (r17): the union's
     # two references raced duplicate edge builds before the cache filled

@@ -32,17 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 
 def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(order_month, mode_priority, n_mode, n_month, mode_share): the
     deterministic modal o_orderpriority per order month."""
     orders = read_table(spark, sf_dir, "orders")
-    release_similarity_caches()
     # persisted: the rank window AND the month totals both consume
     # counts — one orders scan instead of two
     counts = tracked_persist(

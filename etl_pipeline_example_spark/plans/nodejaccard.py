@@ -43,7 +43,7 @@ def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _co_edges(spark, sf_dir)
     # one inline explode, not a two-branch unionAll (r17): the union's
     # two references raced duplicate edge builds before the cache filled
-    bcast = _edges_broadcastable(sf_dir)
+    bcast = _edges_broadcastable(spark, sf_dir)
     sym_rows = edges.select(
         F.explode(
             F.array(

@@ -37,6 +37,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.fsutil import dataset_bytes
 from etl_pipeline_example_spark.sources.readers import read_table
 
 COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -94,16 +95,8 @@ def q_numeric_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pruned columns once and the partial aggregate runs at session
     # width; decimal sums are associative, so any partitioning yields
     # the identical exact state. Tiny inputs stay single-task.
-    import os as _os
-
-    try:
-        big = (
-            _os.path.getsize(_os.path.join(sf_dir, "lineitem.parquet"))
-            >= 512 << 10
-        )
-    except OSError:
-        big = True  # non-local path: assume big
-    if big:
+    size = dataset_bytes(spark, f"{sf_dir}/lineitem.parquet")
+    if size is None or size >= 512 << 10:
         li = li.repartition(
             spark.sparkContext.defaultParallelism, "l_extendedprice"
         )

@@ -27,10 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 RFM_TOP = 50
@@ -139,7 +136,6 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned by q_percentiles/q_decile_lift since round 6).
     """
     orders = read_table(spark, sf_dir, "orders")
-    release_similarity_caches()
     base = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),

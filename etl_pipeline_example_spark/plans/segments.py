@@ -33,10 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 _FLAG = "max(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
 SEGMENT_LABEL = (
@@ -50,7 +47,6 @@ def q_behavior_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(segment, has_view, has_click, has_purchase, n_user_weeks,
     share): the 2×2×2 weekly engagement-combination census."""
     ev = read_table(spark, sf_dir, "events", parallel=True)
-    release_similarity_caches()
     users = ev.groupBy(
         "user_id", F.expr("date_trunc('week', ts)").alias("wk")
     ).agg(

@@ -31,17 +31,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 
 def q_active_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(streak_days, n_users, user_share): histogram of each user's
     LONGEST consecutive-day activity streak."""
     ev = read_table(spark, sf_dir, "events")
-    release_similarity_caches()
     # ONE exchange serves the whole keyed chain: hashpartitioning on
     # user_id alone satisfies the (user_id, d) distinct, the per-user
     # window AND the island groupBy (key-subset clustering rule)

@@ -37,17 +37,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 
 def events_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(resolution, bucket_ts, n_events, n_users, min_value, max_value)
     at minute, hour, and day grain."""
-    release_similarity_caches()
     events = read_table(spark, sf_dir, "events", parallel=True)
     # Cached plans opt out of AQE's partition coalescing, so a vanilla
     # 200-shuffle-partition session would pin both persisted spines at

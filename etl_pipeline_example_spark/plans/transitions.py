@@ -31,17 +31,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_example_spark.sources.readers import read_table
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 
 
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ev_from, ev_to, n_trans, p_next): the first-order transition
     matrix over per-user event sequences."""
     ev = read_table(spark, sf_dir, "events")
-    release_similarity_caches()
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select("user_id", "ts", "event_id", "event_type")

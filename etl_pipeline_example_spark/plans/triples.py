@@ -47,10 +47,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 TRIPLE_MIN_SUP = 2  # PAIR support bound (the L2 lattice gate)
@@ -62,7 +59,6 @@ def q_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part_a < part_b < part_c) by support, A-priori pruned — every
     emitted triple has ALL THREE sub-pairs at pair-support ≥
     TRIPLE_MIN_SUP."""
-    release_similarity_caches()
     dp = spark.sparkContext.defaultParallelism
     li = tracked_persist(
         read_table(spark, sf_dir, "lineitem")

@@ -16,6 +16,8 @@ knobs that matter on a real cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -43,3 +45,22 @@ def get_spark(app_name: str = "etl-pipeline-example-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body, then put each key back as it was: unset
+    again if it had no explicit value, else set to its old value. Restoring
+    an unset key with ``set`` would pin its default as an explicit setting
+    that outlives the scope."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

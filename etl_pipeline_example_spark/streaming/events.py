@@ -27,10 +27,8 @@ from etl_pipeline_example_spark.plans.queries import (
     Q_TUMBLING_SQL,
     SUM_VALUE,
 )
+from etl_pipeline_example_spark.session import scoped_confs
 from etl_pipeline_example_spark.sources.readers import read_events_stream
-
-
-from contextlib import contextmanager
 
 # State-store partition count for the stateful streaming ops. This
 # is an explicit knob (not inherited shuffle parallelism) because it is
@@ -41,17 +39,10 @@ from contextlib import contextmanager
 STREAM_STATE_PARTITIONS = 16
 
 
-@contextmanager
 def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
-@contextmanager
 def _skip_final_nodata_batch(spark: SparkSession):
     """Scoped ``noDataMicroBatches.enabled=false`` for AvailableNow drains
     whose trailing no-data micro-batch provably cannot add sink rows.
@@ -71,13 +62,9 @@ def _skip_final_nodata_batch(spark: SparkSession):
     A 24/7 deployment must NOT use this: there the no-data batch is what
     bounds state between bursts and flushes append-mode windows.
     """
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return scoped_confs(
+        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    )
 
 
 def _start_drained(writer, spark: SparkSession):

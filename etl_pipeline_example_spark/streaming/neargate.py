@@ -63,10 +63,7 @@ from etl_pipeline_example_spark.operators.nearincremental import (
     _bands,
     _signatures,
 )
-from etl_pipeline_example_spark.operators.simcore import (
-    release_similarity_caches,
-    tracked_persist,
-)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 # The gate's only stateful stage holds ONE boolean row per FLAGGED doc —
@@ -209,10 +206,9 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a verified history near-dup exists. AvailableNow drain. This is the
     oracle shape: history is signed in-op; the production shape probes
     the ``build_neardup_index`` artifact (streaming/neargate_index.py)."""
-    release_similarity_caches()
     # The signature frame has TWO stream-static consumers (band probe +
     # verify pull), each re-evaluated per micro-batch, so it is cached
-    # (tracked, released by the next operator) — without it the full
+    # (tracked, released when the next key starts) — without it the full
     # history tokenize+sign chain would run twice per batch.
     hist_sig = tracked_persist(
         _signatures(spark, sf_dir).filter(F.col("doc_id") < INCR_SPLIT)

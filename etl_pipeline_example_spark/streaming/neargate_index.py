@@ -55,7 +55,6 @@ from etl_pipeline_example_spark.operators.nearincremental import (
     _bands,
     _signatures,
 )
-from etl_pipeline_example_spark.operators.simcore import release_similarity_caches
 from etl_pipeline_example_spark.streaming.neargate import (
     STREAM_NEARDUP_GATE_SQL,
     _gate_flags,
@@ -73,7 +72,6 @@ def build_neardup_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     One tokenize+sign pass over history total: signatures are written
     first and the band table derives from the WRITTEN parquet, so the
     expensive signing chain runs once with no cache to hold."""
-    release_similarity_caches()
     sig = (
         _signatures(spark, sf_dir)
         .filter(F.col("doc_id") < INCR_SPLIT)
@@ -101,7 +99,6 @@ def stream_neardup_gate_indexed(
     """(doc_id, near_hist): row-identical to ``stream_neardup_gate``,
     probing the ``build_neardup_index`` artifact instead of rebuilding
     history in-op. AvailableNow drain."""
-    release_similarity_caches()
     # the persisted index: two plain parquet reads per micro-batch —
     # the stream-static sides cost a scan of narrow columns, never the
     # history signing chain

@@ -20,6 +20,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_caches():
+    """Tests call query functions directly, not through the registry, so
+    the end of each test is its key boundary: release the caches it
+    registered, as the registry does before the next key."""
+    yield
+    from etl_pipeline_example_spark.operators.simcore import release_similarity_caches
+
+    release_similarity_caches()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 
 import pytest
 
@@ -183,3 +184,37 @@ def test_discover_rejects_a_key_bound_twice(tmp_path, monkeypatch):
     )
     with pytest.raises(ValueError, match=r"'k'.*\.one\.ONE_QUERIES.*\.two\.TWO_QUERIES"):
         entry.discover([pkg])
+
+
+def test_next_registry_key_releases_the_previous_keys_caches(spark, sf_dir):
+    from etl_pipeline_example_spark.operators import simcore
+
+    def persistent_rdds() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    qs = entry.queries()
+    before = persistent_rdds()
+    # q_window_funnel tracks two step frames and fills them with its own counts
+    qs["q_window_funnel"](spark, sf_dir).collect()
+    assert len(simcore._LIVE_CACHES) == 2
+    assert persistent_rdds() == before + 2
+    qs["q1_pricing"](spark, sf_dir)
+    assert simcore._LIVE_CACHES == []
+    assert persistent_rdds() == before
+
+
+def test_composite_key_reads_its_sub_operator_caches(spark, sf_dir):
+    """retrieval_agreement composes bm25_rank and retrieve_overlap: the
+    cache each one tracks must survive to the composite's action and be
+    read by it."""
+    from etl_pipeline_example_spark.operators import simcore
+
+    df = entry.queries()["retrieval_agreement"](spark, sf_dir)
+    df.collect()
+    assert len(simcore._LIVE_CACHES) == 2
+    assert all(c.storageLevel.useMemory for c in simcore._LIVE_CACHES)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = re.findall(r"InMemoryTableScan \[([^\]]*)\]", plan)
+    # bm25_rank's posting cache carries term, retrieve_overlap's shingles g
+    assert any("term#" in s for s in scans), plan
+    assert any("g#" in s for s in scans), plan

@@ -128,7 +128,7 @@ def test_pq_round6_nonfinite_passthrough_and_wide_sum():
     assert lossy == big and lossy != exact
 
 
-def test_edges_broadcastable_sums_directory_parts(tmp_path):
+def test_edges_broadcastable_sums_directory_parts(spark, tmp_path):
     """Round-17 ADVICE: a dataset laid out as a directory of part
     files must gate on the SUM of the parts, not the dir inode size."""
     from etl_pipeline_example_spark.plans.graph import (
@@ -141,12 +141,12 @@ def test_edges_broadcastable_sums_directory_parts(tmp_path):
     half = _BCAST_INPUT_BYTES // 2 + 16
     for name in ("part-0.parquet", "part-1.parquet"):
         (d / name).write_bytes(b"\0" * half)
-    assert not _edges_broadcastable(str(tmp_path / "dirset"))
+    assert not _edges_broadcastable(spark, str(tmp_path / "dirset"))
     small = tmp_path / "small" / "lineitem.parquet"
     small.mkdir(parents=True)
     (small / "part-0.parquet").write_bytes(b"\0" * 1024)
-    assert _edges_broadcastable(str(tmp_path / "small"))
-    assert not _edges_broadcastable(str(tmp_path / "missing"))
+    assert _edges_broadcastable(spark, str(tmp_path / "small"))
+    assert not _edges_broadcastable(spark, str(tmp_path / "missing"))
 
 
 def test_cc_static_narrow_loop_labels_identical(spark):
@@ -185,7 +185,7 @@ def test_cc_static_narrow_loop_labels_identical(spark):
     assert after == before
 
 
-def test_tiny_loop_width_gate(tmp_path):
+def test_tiny_loop_width_gate(spark, tmp_path):
     from etl_pipeline_example_spark.operators.cluster import (
         _TINY_LOOP_INPUT_BYTES,
         _TINY_LOOP_WIDTH,
@@ -193,14 +193,14 @@ def test_tiny_loop_width_gate(tmp_path):
     )
 
     (tmp_path / "documents.parquet").write_bytes(b"\0" * 1024)
-    assert _tiny_loop_width(str(tmp_path), "documents") == _TINY_LOOP_WIDTH
+    assert _tiny_loop_width(spark, str(tmp_path), "documents") == _TINY_LOOP_WIDTH
     big = tmp_path / "big" / "documents.parquet"
     big.mkdir(parents=True)
     half = _TINY_LOOP_INPUT_BYTES // 2 + 16
     (big / "part-0.parquet").write_bytes(b"\0" * half)
     (big / "part-1.parquet").write_bytes(b"\0" * half)
-    assert _tiny_loop_width(str(tmp_path / "big"), "documents") is None
-    assert _tiny_loop_width(str(tmp_path), "missing") is None
+    assert _tiny_loop_width(spark, str(tmp_path / "big"), "documents") is None
+    assert _tiny_loop_width(spark, str(tmp_path), "missing") is None
 
 
 def test_stream_moments_decimal_boundary(spark, tmp_path):

@@ -61,7 +61,7 @@ def frozen_entries() -> dict[str, str]:
     for key, fn in qs.items():
         if key in window:
             continue
-        path = os.path.relpath(inspect.getfile(fn), REPO)
+        path = os.path.relpath(inspect.getfile(inspect.unwrap(fn)), REPO)
         out[key] = path
     return out
 

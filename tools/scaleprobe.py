@@ -45,6 +45,9 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_example_spark import get_spark  # noqa: E402
+from etl_pipeline_example_spark.operators.simcore import (  # noqa: E402
+    release_similarity_caches,
+)
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
@@ -212,7 +215,6 @@ def neardup_sparse_tau(spark, sf_dir: str):
     from etl_pipeline_example_spark.operators.simcore import (
         _SPARK_DOT,
         _with_norm,
-        release_similarity_caches,
         tracked_persist,
     )
     from etl_pipeline_example_spark.operators.similarity import (
@@ -220,7 +222,6 @@ def neardup_sparse_tau(spark, sf_dir: str):
     )
     from etl_pipeline_example_spark.sources.readers import read_table
 
-    release_similarity_caches()
     emb = tracked_persist(
         _with_norm(
             read_table(spark, sf_dir, "embeddings", parallel=True),
@@ -457,10 +458,14 @@ def main() -> None:
     out = {}
     for name in names:
         fn = all_ops[name]
+        # each run starts as a registry key does: the previous run's
+        # caches are released first
+        release_similarity_caches()
         fn(spark, SF01).count()  # warm: page cache, codegen, workers
         rows = {}
         times = {}
         for label, d in [("sf0.1", SF01), ("sf1", sf1_dir)]:
+            release_similarity_caches()
             t0 = time.perf_counter()
             rows[label] = fn(spark, d).count()
             times[label] = round(time.perf_counter() - t0, 2)
