@@ -173,10 +173,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early and windows/sessions collapse — so the batch reader's footer
     schema decides which declaration to stream with. It comes from
     ``parquet_schema``: one inference job per file set, then a listing.
+    A file without ``ts`` streams it as NULL, like any declared column
+    the file lacks.
     """
     ensure_nanos_conf(spark)
     events = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    ts_type = events["ts"].dataType.simpleString()
+    ts_type = events["ts"].dataType.simpleString() if "ts" in events.names else "timestamp"
     if ts_type == "bigint":  # TIMESTAMP(NANOS) generation
         df = (
             spark.readStream.schema(f"event_id bigint, ts long, {_EVENTS_TAIL}")
@@ -192,6 +194,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts", F.col("ts").cast("timestamp"))
         )
     return df
+
+
+def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Open the documents table as a file-source STREAM — the streaming
+    twin of ``read_table(spark, sf_dir, "documents")``. Documents have no
+    timestamp column, so one declared schema covers every generation."""
+    return (
+        spark.readStream.schema(
+            "doc_id bigint, text string, lang string, source string, n_chars bigint"
+        )
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def read_table(

@@ -17,8 +17,8 @@ stream/batch parity, which the oracle checks by computing the batch
 flagged-set. Counts agree with the batch op's per-occurrence join
 form by construction (both count occurrences).
 
-Drained with AvailableNow into a memory sink like the other streaming
-ops.
+Drained with AvailableNow through ``events.drain`` like the other
+streaming ops.
 
 No reference counterpart (305-LoC Glue ETL); streaming surface,
 SURVEY.md §2. Registered beyond the round-14 grading window — first
@@ -27,8 +27,6 @@ driver slot round 15.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +37,8 @@ from etl_pipeline_example_spark.operators.hashing import (
     duck_tokens,
     spark_tokens,
 )
+from etl_pipeline_example_spark.sources.readers import read_documents_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def _cat_terms(cat: str) -> list[str]:
@@ -67,15 +67,7 @@ def stream_blocklist_quarantine(
     """Stream the documents source through the categorized blocklist;
     return the FLAGGED docs (doc_id, n_quality, n_spam, n_unsafe,
     n_flagged) after an AvailableNow drain — the review-queue feed."""
-    docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string,"
-            " n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    flagged = docs.select(
+    flagged = read_documents_stream(spark, sf_dir).select(
         "doc_id",
         *[
             F.expr(_spark_cat_count(c)).cast("bigint").alias(f"n_{c}")
@@ -84,17 +76,7 @@ def stream_blocklist_quarantine(
     ).withColumn(
         "n_flagged", F.expr(" + ".join(f"n_{c}" for c in _CATS))
     ).filter(F.col("n_flagged") > 0)
-    sink = f"stream_blockgate_{uuid.uuid4().hex[:8]}"
-    q = (
-        flagged.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(flagged, "append")
 
 
 STREAM_BLOCKLIST_QUARANTINE_SQL = f"""

@@ -24,14 +24,10 @@ round 16.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from etl_pipeline_example_spark.streaming.events import _start_drained
 
 from etl_pipeline_example_spark.operators.cmsketch import (
     CMS_D,
@@ -39,23 +35,18 @@ from etl_pipeline_example_spark.operators.cmsketch import (
     SKETCH_CMS_TOPK_SQL,
     _spark_slot,
 )
-from etl_pipeline_example_spark.sources.readers import read_table
-
-_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
+from etl_pipeline_example_spark.sources.readers import (
+    read_events_stream,
+    read_table,
 )
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, exact_n, cms_n, overcount): the batch op's contract
     with the SKETCH side built as a bounded-state streaming
     aggregation (D·W counters) over the events stream."""
-    ev = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    ev = read_events_stream(spark, sf_dir)
     js = F.array(*[F.lit(j) for j in range(CMS_D)])
     counters_stream = (
         ev.select("user_id")
@@ -64,16 +55,7 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j", "slot")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sink = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    q = _start_drained(
-        counters_stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True),
-        spark,
-    )
-    counters = spark.table(sink)
+    counters = drain(counters_stream, "complete")
     topk = (
         read_table(spark, sf_dir, "events")
         .groupBy("user_id")

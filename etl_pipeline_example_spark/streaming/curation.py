@@ -9,8 +9,8 @@ no state store, no watermark, per-microbatch cost O(batch), and exact
 stream/batch parity by construction — which the DuckDB oracle checks
 (it computes the batch keep-set).
 
-Drained with AvailableNow into a memory sink like the other streaming
-ops; output is the kept (doc_id, word_cnt) — the audit trail an ingest
+Drained with AvailableNow through ``events.drain`` like the other
+streaming ops; output is the kept (doc_id, word_cnt) — the audit trail an ingest
 gate emits.
 
 No reference counterpart (the reference is a 305-LoC ETL example);
@@ -19,8 +19,6 @@ streaming surface, SURVEY.md §2 row 41d.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,34 +26,20 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.c4 import duck_c4_keep, spark_c4_keep
 from etl_pipeline_example_spark.operators.hashing import duck_tokens, spark_tokens
+from etl_pipeline_example_spark.sources.readers import read_documents_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_c4_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the documents source through the C4 keep conjunction;
     return the kept (doc_id, word_cnt) after an AvailableNow drain."""
-    docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     kept = (
-        docs.select("doc_id", "text", F.expr(spark_tokens("text")).alias("tk"))
+        read_documents_stream(spark, sf_dir)
+        .select("doc_id", "text", F.expr(spark_tokens("text")).alias("tk"))
         .filter(F.expr(spark_c4_keep()))
         .select("doc_id", F.expr("size(tk)").alias("word_cnt"))
     )
-    sink = f"stream_c4_{uuid.uuid4().hex[:8]}"
-    q = (
-        kept.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(kept, "append")
 
 
 STREAM_C4_GATE_SQL = f"""

@@ -23,23 +23,16 @@ Reference: N/A (305-LoC Glue ETL); streaming surface, SURVEY.md §2.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.streaming.events import _start_drained
-
 from etl_pipeline_example_spark.operators.cusum import (
     EVENTS_CUSUM_SHIFT_SQL,
 )
-
-_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
+from etl_pipeline_example_spark.sources.readers import read_events_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,28 +41,15 @@ def stream_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily count grid maintained as bounded complete-mode streaming
     state (AvailableNow drain) and the window recurrence applied over
     the drained grid."""
-    ev = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     daily = (
-        ev.select(
+        read_events_stream(spark, sf_dir)
+        .select(
             F.col("event_type").alias("grp"), F.to_date("ts").alias("day")
         )
         .groupBy("grp", "day")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    sink = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    q = _start_drained(
-        daily.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True),
-        spark,
-    )
-    grid = spark.table(sink)
+    grid = drain(daily, "complete")
     # per-group scalars as partition windows over the SAME bounded grid
     # (a groupBy+self-join of a memory sink trips Spark's conflicting-
     # attribute check; the window form is also one pass, not two)

@@ -22,52 +22,29 @@ grading window — first driver slot round 10.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.operators.dqrules import DOCUMENTS_RULES
+from etl_pipeline_example_spark.sources.readers import read_documents_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, rule_id): every (document, violated documents-rule)
     pair on the stream, after an AvailableNow drain."""
-    docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string,"
-            " n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     sentinels = ", ".join(
         f"CASE WHEN {pred} THEN '{rid}' END" for rid, pred in DOCUMENTS_RULES
     )
-    flagged = docs.select(
+    flagged = read_documents_stream(spark, sf_dir).select(
         "doc_id",
         F.explode(
             F.expr(f"filter(array({sentinels}), x -> x IS NOT NULL)")
         ).alias("rule_id"),
     )
-    sink = f"stream_dq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        q = (
-            flagged.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain(flagged, "append")
 
 
 _BRANCHES = "\nUNION ALL ".join(

@@ -1,11 +1,21 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the events table, and the one drain every
+streaming key runs through.
 
 The reference pipeline is batch-only; its streaming analogue — continuous
 arrival into the land zone — maps to Structured Streaming: a file source
 watching the directory, event-time tumbling windows with a watermark
-bounding state, and an idempotent sink. Here the op is expressed once and
+bounding state, and an idempotent sink. Here each op is expressed once and
 run with ``Trigger.AvailableNow`` so it drains the existing files and
 stops — the same code is a 24/7 stream on a cluster with checkpointing.
+
+``drain`` is that run, stated once: it writes a streaming frame to a
+memory sink under a unique query name and a fresh ``mkdtemp`` checkpoint,
+waits for the AvailableNow drain, checks that a single micro-batch read
+the rows, and hands back the sink as a batch frame. The checkpoint
+directory is deleted and the sink's temp view dropped before it returns;
+the returned frame already holds the analysed sink plan, so it stays
+readable after both are gone, and no key leaves a view or a directory
+behind for the next one.
 
 ``stream_events_tumbling`` produces exactly the batch ``q_events_tumbling``
 result (hour window + event_type counts/sums), so it carries a full SQL
@@ -15,6 +25,7 @@ Streaming is built around.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -28,7 +39,10 @@ from etl_pipeline_example_spark.plans.queries import (
     SUM_VALUE,
 )
 from etl_pipeline_example_spark.session import scoped_confs
-from etl_pipeline_example_spark.sources.readers import read_events_stream
+from etl_pipeline_example_spark.sources.readers import (
+    read_documents_stream,
+    read_events_stream,
+)
 
 # State-store partition count for the stateful streaming ops. This
 # is an explicit knob (not inherited shuffle parallelism) because it is
@@ -39,15 +53,17 @@ from etl_pipeline_example_spark.sources.readers import read_events_stream
 STREAM_STATE_PARTITIONS = 16
 
 
-def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    return scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
+def drain(
+    df: DataFrame, output_mode: str, partitions: int = STREAM_STATE_PARTITIONS
+) -> DataFrame:
+    """Run streaming ``df`` to completion with ``Trigger.AvailableNow``
+    into a memory sink in ``output_mode``; return the sink as a batch
+    frame.
 
-
-def _skip_final_nodata_batch(spark: SparkSession):
-    """Scoped ``noDataMicroBatches.enabled=false`` for AvailableNow drains
-    whose trailing no-data micro-batch provably cannot add sink rows.
-
-    After the file source is exhausted the engine schedules one extra
+    The drain runs with ``partitions`` state partitions (see
+    ``STREAM_STATE_PARTITIONS``) and with
+    ``noDataMicroBatches.enabled=false``, both scoped to the run. After
+    the file source is exhausted the engine would schedule one extra
     empty batch to advance the watermark; that batch costs a full
     incremental re-plan plus a commit of every state store (~1 s per
     drain here) and can only affect the sink when (a) an append-mode
@@ -59,25 +75,49 @@ def _skip_final_nodata_batch(spark: SparkSession):
     inner+append (rows emit at match time; the final batch only evicts
     state that the throwaway checkpoint discards anyway), and both
     ``applyInPandasWithState`` ops run ``GroupStateTimeout.NoTimeout``.
-    A 24/7 deployment must NOT use this: there the no-data batch is what
+    A 24/7 deployment must NOT skip it: there the no-data batch is what
     bounds state between bursts and flushes append-mode windows.
+
+    Every batch-parity oracle here assumes the drain folded all input in
+    ONE micro-batch (a stateful fold is arrival-ordered across batches),
+    so a drain in which more than one batch read rows raises
+    ``RuntimeError`` instead of returning a silently different result.
+
+    The checkpoint is per-run scratch and is deleted, and the sink's temp
+    view dropped, on every exit; the returned frame keeps the analysed
+    sink plan and stays readable.
     """
-    return scoped_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    )
-
-
-def _start_drained(writer, spark: SparkSession):
-    """Start an AvailableNow ``DataStreamWriter`` under
-    ``_skip_final_nodata_batch`` and block until the drain finishes.
-
-    The conf must be live at ``start()`` (the query captures its session
-    conf then), which is why the writer is passed unstarted.
-    """
-    with _skip_final_nodata_batch(spark):
-        q = writer.start()
-        q.awaitTermination()
-    return q
+    spark = df.sparkSession
+    sink = f"drain_{uuid.uuid4().hex}"
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    try:
+        # the confs must be live at start(): the query captures them then
+        with scoped_confs(spark, confs):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        if data_batches > 1:
+            raise RuntimeError(
+                f"AvailableNow drain read rows in {data_batches} micro-batches;"
+                " the batch-parity oracles require a single-batch drain"
+                " (did a rate-limit option split it?)"
+            )
+        frame = spark.table(sink)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(sink)
+    return frame
 
 
 def stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,18 +140,7 @@ def stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_events_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "complete")
 
 
 STREAM_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -134,29 +163,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream/batch parity contract. (With late-data bounds you'd add
     ``withWatermark`` and ``dropDuplicatesWithinWatermark``.)
     """
-    docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     from etl_pipeline_example_spark.operators.hashing import spark_norm_text
 
+    docs = read_documents_stream(spark, sf_dir)
     hashed = docs.select(F.expr(f"md5({spark_norm_text('text')})").alias("content_hash"))
     deduped = hashed.dropDuplicates(["content_hash"])
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(deduped, "append")
 
 
 def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,18 +196,7 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "complete")
 
 
 def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,18 +225,7 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "complete")
 
 
 STREAM_ENRICH_SQL = """
@@ -291,18 +281,7 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         F.expr("unix_micros(purchase_ts) - unix_micros(click_ts)").alias("lag_us"),
     )
-    sink = f"stream_join_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(joined, "append")
 
 
 STREAM_JOIN_SQL = """

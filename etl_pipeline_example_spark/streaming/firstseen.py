@@ -29,20 +29,13 @@ driver slot round 14.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.sources.readers import read_events_stream
-from etl_pipeline_example_spark.streaming.events import (
-    STREAM_STATE_PARTITIONS,
-    _scoped_shuffle_partitions,
-    _skip_final_nodata_batch,
-)
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,22 +45,7 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = events.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("d")
     )
-    sink = f"stream_first_seen_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-            q = (
-                first.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    drained = spark.table(sink)
+    drained = drain(first, "complete")
     by_day = drained.groupBy("d").agg(F.count(F.lit(1)).alias("n_new"))
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     return (

@@ -29,14 +29,10 @@ round 16.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from etl_pipeline_example_spark.streaming.events import _start_drained
 
 from etl_pipeline_example_spark.operators.hashing import spark_hexint
 from etl_pipeline_example_spark.operators.hll import (
@@ -44,25 +40,18 @@ from etl_pipeline_example_spark.operators.hll import (
     HLL_Q,
     SKETCH_HLL_REGISTERS_SQL,
 )
+from etl_pipeline_example_spark.sources.readers import read_events_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 _M = 1 << HLL_P
-
-_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
 
 
 def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(register, reg_val, n_keys): the batch op's register table with
     the sketch maintained as a bounded-state streaming aggregation."""
-    ev = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     cells = (
-        ev.select(
+        read_events_stream(spark, sf_dir)
+        .select(
             F.expr(
                 spark_hexint("concat('hll:', cast(user_id as string))")
             ).alias("h")
@@ -76,16 +65,7 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("register", "w")
         .agg(F.count(F.lit(1)).alias("occ"))
     )
-    sink = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    q = _start_drained(
-        cells.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True),
-        spark,
-    )
-    drained = spark.table(sink).select("register", "w")
+    drained = drain(cells, "complete").select("register", "w")
     ladder = F.broadcast(
         spark.createDataFrame(
             [(b, 1 << b) for b in range(HLL_Q + 1)], "b int, cap bigint"

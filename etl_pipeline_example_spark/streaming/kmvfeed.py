@@ -25,26 +25,19 @@ Reference: N/A (305-LoC Glue ETL); streaming surface, SURVEY.md §2.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.streaming.events import _start_drained
-
 from etl_pipeline_example_spark.operators.hashing import (
     duck_hexint,
     spark_hexint,
 )
+from etl_pipeline_example_spark.sources.readers import read_events_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 KMV_R = 32  # registers per group
-
-_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
 
 _SPARK_H = spark_hexint("concat('kmv:', cast(user_id as string))")
 _DUCK_H = duck_hexint("concat('kmv:', user_id)")
@@ -54,13 +47,9 @@ def stream_kmv_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(grp, register, min_hash, n_events): the min-merge register
     sketch as a bounded-state streaming aggregation over the events
     stream (complete-mode memory sink, AvailableNow drain)."""
-    ev = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     regs_stream = (
-        ev.select(
+        read_events_stream(spark, sf_dir)
+        .select(
             F.col("event_type").alias("grp"),
             F.expr(_SPARK_H).alias("h"),
         )
@@ -71,17 +60,8 @@ def stream_kmv_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    sink = f"stream_kmv_{uuid.uuid4().hex[:8]}"
-    q = _start_drained(
-        regs_stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True),
-        spark,
-    )
     return (
-        spark.table(sink)
+        drain(regs_stream, "complete")
         .select("grp", "register", "min_hash", "n_events")
         .orderBy("grp", "register")
     )

@@ -15,14 +15,13 @@ Reference: N/A (305-LoC Glue ETL); streaming surface, SURVEY.md §2.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.streaming.events import _start_drained
+from etl_pipeline_example_spark.sources.readers import read_events_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 _DEC = "decimal(38,0)"
 
@@ -39,23 +38,14 @@ def _guarded(col: str) -> F.Column:
         f" AS {_DEC}) ELSE {col} END"
     )
 
-_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
-
 
 def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(grp, n, s1, s2, s3, s4): the per-event_type exact power sums
     as a bounded-state streaming aggregation (complete mode,
     AvailableNow drain)."""
-    ev = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     agg = (
-        ev.select(
+        read_events_stream(spark, sf_dir)
+        .select(
             F.col("event_type").alias("grp"),
             F.expr("CAST(floor(value * 100) AS BIGINT)").alias("c"),
         )
@@ -69,17 +59,8 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr(f"CAST(c AS {_DEC}) * c * c * c")).alias("d4"),
         )
     )
-    sink = f"stream_moments_{uuid.uuid4().hex[:8]}"
-    q = _start_drained(
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True),
-        spark,
-    )
     return (
-        spark.table(sink)
+        drain(agg, "complete")
         .select(
             "grp",
             "n",

@@ -40,9 +40,6 @@ LLM-pipeline surface, SURVEY.md §2.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,7 +61,11 @@ from etl_pipeline_example_spark.operators.nearincremental import (
     _signatures,
 )
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
-from etl_pipeline_example_spark.sources.readers import read_table
+from etl_pipeline_example_spark.sources.readers import (
+    read_documents_stream,
+    read_table,
+)
+from etl_pipeline_example_spark.streaming.events import drain
 
 # The gate's only stateful stage holds ONE boolean row per FLAGGED doc —
 # orders of magnitude smaller state than the event-stream ops that share
@@ -81,11 +82,7 @@ def _incoming_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     h1 = spark_h32("s", 1)
     h2 = spark_h32("s", 17)
     docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        read_documents_stream(spark, sf_dir)
         .filter(F.col("doc_id") >= INCR_SPLIT)
         # widen BEFORE the tokenize+md5 signing chain: a single-file
         # micro-batch scans as ONE task, and the whole per-row scalar
@@ -149,14 +146,12 @@ def _gate_flags(
     sf_dir: str,
     hist_bands: DataFrame,
     hist_sig_b: DataFrame,
-    sink_prefix: str,
 ) -> DataFrame:
     """The full gate given the two static history sides: probe + verify
     + stateful flag-dedup + AvailableNow drain + left join back onto the
     incoming batch. ``hist_bands`` is (band, bucket, other); ``hist_sig_b``
-    is (other, hm0..hm15). The checkpoint directory is removed after the
-    drain (it is per-invocation scratch — a production deployment would
-    pass a durable location and NOT drain with AvailableNow)."""
+    is (other, hm0..hm15). A production deployment would write to a
+    durable checkpoint and NOT drain with AvailableNow."""
     stream_bands = _incoming_bands(spark, sf_dir)
     match = " + ".join(
         f"CASE WHEN m{i} = hm{i} THEN 1 ELSE 0 END" for i in range(MH_NUM_HASHES)
@@ -168,28 +163,10 @@ def _gate_flags(
         .groupBy("doc_id")
         .agg(F.lit(True).alias("near_hist"))
     )
-    sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
-    from etl_pipeline_example_spark.streaming.events import (
-        _scoped_shuffle_partitions,
-        _skip_final_nodata_batch,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _scoped_shuffle_partitions(spark, GATE_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-            q = (
-                flagged.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    hits = spark.table(sink).groupBy("doc_id").agg(
-        F.max("near_hist").alias("near_hist")
+    hits = (
+        drain(flagged, "update", GATE_STATE_PARTITIONS)
+        .groupBy("doc_id")
+        .agg(F.max("near_hist").alias("near_hist"))
     )
     batch_docs = (
         read_table(spark, sf_dir, "documents", parallel=True)
@@ -218,7 +195,7 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("other"),
         *[F.col(f"m{i}").alias(f"hm{i}") for i in range(MH_NUM_HASHES)],
     )
-    return _gate_flags(spark, sf_dir, hist_bands, hist_sig_b, "stream_neargate")
+    return _gate_flags(spark, sf_dir, hist_bands, hist_sig_b)
 
 
 # the batch operator's vs-history half IS the oracle: rewrap its CTE

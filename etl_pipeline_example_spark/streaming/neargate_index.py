@@ -104,7 +104,7 @@ def stream_neardup_gate_indexed(
     # history signing chain
     hist_bands = spark.read.parquet(f"{path}/bands")
     hist_sig_b = spark.read.parquet(f"{path}/signatures")
-    return _gate_flags(spark, sf_dir, hist_bands, hist_sig_b, "stream_neargate_idx")
+    return _gate_flags(spark, sf_dir, hist_bands, hist_sig_b)
 
 
 def _default_index_path(sf_dir: str) -> str:

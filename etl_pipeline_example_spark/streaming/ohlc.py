@@ -23,20 +23,13 @@ driver slot round 13.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.sources.readers import read_events_stream
-from etl_pipeline_example_spark.streaming.events import (
-    STREAM_STATE_PARTITIONS,
-    _scoped_shuffle_partitions,
-    _skip_final_nodata_batch,
-)
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,22 +56,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__last.value").alias("close"),
         )
     )
-    sink = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink).orderBy("win_start", "event_type")
+    return drain(agg, "complete").orderBy("win_start", "event_type")
 
 
 STREAM_OHLC_SQL = """

@@ -14,10 +14,11 @@ group is drained and sorted ONCE before the fold, never per Arrow
 chunk (chunk-local sorting would silently break parity past
 maxRecordsPerBatch docs per source). Across micro-batches the fold is
 arrival-ordered, as any streaming writer is; the AvailableNow drain is
-a single batch, which is what gives exact batch parity — and the op
-ASSERTS that (one data-carrying micro-batch in the query progress)
-instead of assuming it, so a rate-limit option or multi-file source
-batching can never silently void the oracle contract.
+a single batch, which is what gives exact batch parity — and
+``events.drain`` ASSERTS that (one data-carrying micro-batch in the
+query progress) instead of assuming it, so a rate-limit option or
+multi-file source batching can never silently void the oracle
+contract.
 
 Plan shape: tokenize/hash run JVM-side BEFORE the stateful fold (the
 pandas function only sorts its batch and folds integers — no text ever
@@ -33,8 +34,6 @@ op regrades in the current window).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -50,6 +49,8 @@ from etl_pipeline_example_spark.operators.hashing import (
     spark_tokens,
 )
 from etl_pipeline_example_spark.operators.shard import SHARD_TOKENS
+from etl_pipeline_example_spark.sources.readers import read_documents_stream
+from etl_pipeline_example_spark.streaming.events import drain
 
 _OUT_SCHEMA = "doc_id bigint, source string, n_tokens bigint, shard_seq bigint"
 _STATE_SCHEMA = "cum bigint"
@@ -76,26 +77,12 @@ def _fold_shard_feed(
     yield out
 
 
-def stream_shard_feed(
-    spark: SparkSession,
-    sf_dir: str,
-    _reader_options: dict[str, str] | None = None,
-) -> DataFrame:
+def stream_shard_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_tokens, shard_seq): per-source streaming shard
-    assignment after an AvailableNow drain.
-
-    ``_reader_options`` exists so tests can force a SPLIT drain (e.g.
-    ``maxFilesPerTrigger=1`` over a multi-file source) and pin that the
-    single-batch assertion fires; production callers never pass it.
-    """
+    assignment after an AvailableNow drain."""
     h = spark_hexint("concat('shard:', cast(doc_id as string))")
-    reader = spark.readStream.schema(
-        "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).option("pathGlobFilter", "documents.parquet")
-    for k, v in (_reader_options or {}).items():
-        reader = reader.option(k, v)
     docs = (
-        reader.parquet(sf_dir)
+        read_documents_stream(spark, sf_dir)
         .select(
             "doc_id",
             "source",
@@ -110,38 +97,9 @@ def stream_shard_feed(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from etl_pipeline_example_spark.streaming.events import (
-        STREAM_STATE_PARTITIONS,
-        _scoped_shuffle_partitions,
-        _skip_final_nodata_batch,
-    )
-
-    sink = f"stream_shard_feed_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            assigned.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # The batch-parity oracle (global per-source prefix sum) holds only
-    # if the drain folded every source's documents in ONE micro-batch:
-    # a split drain (e.g. maxFilesPerTrigger, multi-file source
-    # batching) makes the fold arrival-ordered ACROSS batches and the
-    # contract silently breaks. Assert it rather than assume it.
-    data_batches = sum(
-        1 for p in q.recentProgress if p and p["numInputRows"] > 0
-    )
-    if data_batches > 1:
-        raise RuntimeError(
-            f"stream_shard_feed drained in {data_batches} micro-batches; "
-            "the prefix-sum parity oracle requires a single-batch "
-            "AvailableNow drain (did a rate-limit option split it?)"
-        )
-    return spark.table(sink)
+    # the batch-parity oracle (global per-source prefix sum) holds only
+    # for a single-batch drain, which ``drain`` asserts
+    return drain(assigned, "append")
 
 
 STREAM_SHARD_FEED_SQL = f"""

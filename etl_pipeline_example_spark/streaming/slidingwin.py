@@ -16,9 +16,6 @@ bit-identical to the drained stream (same counts, same decimal-exact
 value sums, window starts on the same epoch-aligned 30-min grid in
 both engines).
 
-Checkpoint scratch is removed after the drain (a production deployment
-passes a durable location and a real trigger instead of AvailableNow).
-
 The reference pipeline is batch-only (305-LoC Glue ETL); streaming
 surface, SURVEY.md §2. Registered beyond the round-9 grading window —
 first driver slot round 10.
@@ -26,9 +23,6 @@ first driver slot round 10.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,11 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_example_spark.plans.queries import SUM_VALUE
 from etl_pipeline_example_spark.sources.readers import read_events_stream
-from etl_pipeline_example_spark.streaming.events import (
-    STREAM_STATE_PARTITIONS,
-    _scoped_shuffle_partitions,
-    _skip_final_nodata_batch,
-)
+from etl_pipeline_example_spark.streaming.events import drain
 
 
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,22 +54,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain(agg, "complete")
 
 
 # 30-min bucket, spelled portably (no time_bucket origin assumptions)

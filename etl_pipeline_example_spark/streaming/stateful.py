@@ -14,8 +14,6 @@ summation order to disagree with the oracle about.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -23,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from etl_pipeline_example_spark.streaming.events import drain
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint, max_gap_us bigint"
 _STATE_SCHEMA = "n bigint, last_ts bigint, max_gap bigint"
@@ -60,27 +60,10 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from etl_pipeline_example_spark.streaming.events import (
-        STREAM_STATE_PARTITIONS,
-        _scoped_shuffle_partitions,
-        _skip_final_nodata_batch,
-    )
-
-    sink = f"stream_user_stats_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode memory sink keeps one row per emission; the LAST emission
     # per user is the final state (single-batch drains emit exactly once)
     return (
-        spark.table(sink)
+        drain(stats, "update")
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"), F.max("max_gap_us").alias("max_gap_us"))
     )

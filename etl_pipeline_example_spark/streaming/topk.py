@@ -16,8 +16,7 @@ counts by AvailableNow determinism, and the rank is the same
 
 Scale: ranking never touches the stream's state store; the sink frame
 is (windows × types)-bounded, and its window partitions are ≤ |types|
-rows. Checkpoint scratch is removed after the drain (production passes
-a durable location and a real trigger).
+rows.
 
 The reference is batch-only (305-LoC Glue ETL); streaming surface,
 SURVEY.md §2. Registered beyond the round-10 grading window — first
@@ -26,9 +25,6 @@ driver slot round 11.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,11 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_example_spark.sources.readers import read_events_stream
-from etl_pipeline_example_spark.streaming.events import (
-    STREAM_STATE_PARTITIONS,
-    _scoped_shuffle_partitions,
-    _skip_final_nodata_batch,
-)
+from etl_pipeline_example_spark.streaming.events import drain
 
 TOP_K = 3
 
@@ -57,26 +49,11 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("win.start").alias("win_start"), "event_type", "n_events"
         )
     )
-    sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), _skip_final_nodata_batch(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     w = Window.partitionBy("win_start").orderBy(
         F.desc("n_events"), "event_type"
     )
     return (
-        spark.table(sink)
+        drain(agg, "complete")
         .withColumn("rnk", F.row_number().over(w))
         .filter(f"rnk <= {TOP_K}")
         .orderBy("win_start", "rnk")

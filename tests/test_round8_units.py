@@ -160,32 +160,27 @@ spark.stop()
     assert "igniting" in ei.value.log_tail
 
 
-def test_shard_feed_drain_source_is_a_single_micro_batch(spark):
+def test_shard_feed_drain_source_is_a_single_micro_batch(spark, tmp_path):
     """Round-7 ADVICE guard: stream_shard_feed's stream/batch parity
     holds only if the AvailableNow drain runs as ONE micro-batch (the
     per-source fold is arrival-ordered; a split drain would fold
     cross-batch and diverge from the global prefix-sum oracle). Pin the
-    premise the op relies on: the identical source spec (single parquet
-    file, pathGlobFilter, NO maxFilesPerTrigger) drains sf0.01 in
-    exactly one batch. Any future edit that batches the source (e.g.
+    premise the op relies on: its own source, ``read_documents_stream``
+    (single parquet file, pathGlobFilter, NO maxFilesPerTrigger), drains
+    sf0.01 in exactly one batch. Any future edit that batches the source (e.g.
     maxFilesPerTrigger) must revisit shardfeed.py's fold."""
-    import tempfile
     import uuid
 
+    from etl_pipeline_example_spark.sources.readers import read_documents_stream
+
     sf = "/root/testdata/sf0.01"
-    src = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    src = read_documents_stream(spark, sf)
     sink = f"shardfeed_drain_probe_{uuid.uuid4().hex[:8]}"
     q = (
         src.writeStream.format("memory")
         .queryName(sink)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

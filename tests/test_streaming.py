@@ -3,8 +3,18 @@ and the DuckDB oracle."""
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from pathlib import Path
+
+import pytest
+
 from etl_pipeline_example_spark.streaming.dqgate import DQGATE_ORACLES, DQGATE_QUERIES
-from etl_pipeline_example_spark.streaming.events import STREAM_ORACLES, STREAM_QUERIES
+from etl_pipeline_example_spark.streaming.events import (
+    STREAM_ORACLES,
+    STREAM_QUERIES,
+    drain,
+)
 from etl_pipeline_example_spark.streaming.firstseen import (
     FIRSTSEEN_STREAM_ORACLES,
     FIRSTSEEN_STREAM_QUERIES,
@@ -308,3 +318,90 @@ def test_stream_first_seen_hand_computed(spark, tmp_path):
         for r in stream_first_seen(spark, str(corpus)).collect()
     ]
     assert got == [("2024-01-01", 1, 1), ("2024-01-02", 2, 3)], got
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "stream_cusum_shift",
+        "stream_hll_registers",
+        "stream_kmv_registers",
+        "stream_cms_topk",
+        "stream_moments",
+    ],
+)
+def test_event_feeds_read_nanos_and_micros_alike(spark, tmp_path, key):
+    """The event feeds read ``ts`` through ``read_events_stream``, so an
+    events file stored as TIMESTAMP(NANOS) gives the same rows as the
+    same events stored as TIMESTAMP(MICROS)."""
+    import __spark_entry__ as entry
+
+    from tests.test_readers import _write_events
+
+    fn = entry.queries()[key]
+    got = {}
+    for unit in ("ns", "us"):
+        (tmp_path / unit).mkdir()
+        got[unit] = sorted(fn(spark, _write_events(tmp_path / unit, unit)).collect(), key=repr)
+    assert got["ns"] == got["us"]
+    assert got["ns"]
+
+
+def _drain_residue(spark):
+    """Temp views, ``ckpt_*`` directories and explicit confs: what a
+    drain must leave as it found them."""
+    views = sorted(t.name for t in spark.catalog.listTables())
+    ckpts = sorted(p.name for p in Path(tempfile.gettempdir()).glob("ckpt_*"))
+    return views, ckpts, dict(spark.conf.getAll)
+
+
+@pytest.fixture
+def own_tempdir(tmp_path, monkeypatch):
+    """Point ``tempfile`` at a private directory, so the ``ckpt_*`` census
+    sees only this test's checkpoints."""
+    d = tmp_path / "tmp"
+    d.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(d))
+    return d
+
+
+def _write_parts(spark, path, *chunks):
+    """One parquet file per chunk of ``k`` values under ``path``."""
+    for i, chunk in enumerate(chunks):
+        spark.createDataFrame([(k,) for k in chunk], "k bigint").coalesce(1).write.parquet(
+            f"{path}/p{i}"
+        )
+        for part in Path(f"{path}/p{i}").glob("part-*.parquet"):
+            shutil.move(str(part), f"{path}/f{i}.parquet")
+        shutil.rmtree(f"{path}/p{i}")
+
+
+def test_drain_leaves_no_view_checkpoint_or_conf(spark, tmp_path, own_tempdir):
+    src = tmp_path / "src"
+    _write_parts(spark, src, [1, 2, 3])
+    before = _drain_residue(spark)
+    frame = drain(spark.readStream.schema("k bigint").parquet(str(src)), "append")
+    assert _drain_residue(spark) == before
+    first = sorted(r["k"] for r in frame.collect())
+    assert first == [1, 2, 3]
+    assert sorted(r["k"] for r in frame.collect()) == first
+
+
+def test_drain_rejects_a_split_drain(spark, tmp_path, own_tempdir):
+    src = tmp_path / "src"
+    _write_parts(spark, src, [1, 2], [3])
+    before = _drain_residue(spark)
+    stream = spark.readStream.schema("k bigint").option("maxFilesPerTrigger", 1).parquet(str(src))
+    with pytest.raises(RuntimeError, match="2 micro-batches"):
+        drain(stream, "append")
+    assert _drain_residue(spark) == before
+
+
+@pytest.mark.parametrize("key", ["stream_events", "stream_cms_topk", "stream_dq_quarantine"])
+def test_stream_keys_leave_no_view_or_checkpoint(spark, sf_dir, own_tempdir, key):
+    import __spark_entry__ as entry
+
+    before = _drain_residue(spark)
+    df = entry.queries()[key](spark, sf_dir)
+    assert _drain_residue(spark)[:2] == before[:2]
+    assert df.count() > 0
