@@ -12,40 +12,17 @@ Tokenization is the shared normalize→split: lower, collapse non-[a-z0-9]
 runs to single spaces, trim, split on space. Same token stream both
 engines (verified).
 
-These are *oracle-parity* constructs; at scale the md5 per value is ~100ns
-JVM-side and stays inside whole-stage codegen — no Python involved. For
-hot production paths where oracle parity isn't needed, ``fast_hash_mode``
-swaps md5 for Spark's native ``xxhash64`` (~3× cheaper per value,
-identical plan shape — only the hash expression changes). The DuckDB
-oracles always use the md5 forms, so fast mode is validated by plan-shape
-audits and self-consistency tests, not value comparison.
+These are *oracle-parity* constructs: every key's output must be
+reproducible by its DuckDB oracle, so there is one hash, md5, and no
+engine-native alternative. At scale the md5 per value is ~100ns JVM-side
+and stays inside whole-stage codegen — no Python involved.
 """
 
 from __future__ import annotations
 
-import os
-
-# Production switch: md5 (cross-engine, oracle-comparable) vs xxhash64
-# (JVM-native, ~3× cheaper, not reproducible in DuckDB). Settable by env
-# for whole-run flips or by set_fast_hash() for scoped use.
-_FAST_HASH = os.environ.get("SPARK_GRAFT_FAST_HASH", "") == "1"
-
-
-def set_fast_hash(enabled: bool) -> None:
-    global _FAST_HASH
-    _FAST_HASH = enabled
-
-
-def fast_hash_mode() -> bool:
-    return _FAST_HASH
-
 
 def spark_hexint(expr: str) -> str:
     """60-bit deterministic hash of a string expression (Spark SQL)."""
-    if _FAST_HASH:
-        # top 60 bits of xxhash64 — keeps the non-negative range the
-        # md5 form has, so pmod/bucket arithmetic downstream is unchanged
-        return f"shiftrightunsigned(xxhash64({expr}), 4)"
     return f"cast(conv(substr(md5({expr}),1,15),16,10) as bigint)"
 
 
@@ -59,12 +36,8 @@ def spark_h32(expr: str, pos: int) -> str:
 
     Two independent slices of ONE md5 give the (h1, h2) pair for
     Kirsch–Mitzenmacher double hashing (mh_i = h1 + i*h2 mod p): k minhash
-    functions for the price of a single md5 per value. Fast mode slices
-    the two halves of one xxhash64 instead.
+    functions for the price of a single md5 per value.
     """
-    if _FAST_HASH:
-        half = "shiftrightunsigned(xxhash64({e}), 32)" if pos == 1 else "(xxhash64({e}) & 4294967295)"
-        return half.format(e=expr)
     return f"cast(conv(substr(md5({expr}),{pos},8),16,10) as bigint)"
 
 

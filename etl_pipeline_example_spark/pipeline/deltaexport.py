@@ -76,11 +76,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import (
+    hadoop_fs,
+    hadoop_path,
+    publish_single_part,
+    write_bytes,
+)
 from etl_pipeline_example_spark.pipeline.deltaread import _replay_state
 from etl_pipeline_example_spark.pipeline.versioned import (
     _is_external,
-    _jpath,
     _read_manifest,
     _read_pointer,
 )
@@ -156,17 +160,14 @@ _CP_SCHEMA = StructType(
 def _write_commit(
     spark: SparkSession, path: str, v: int, actions: list[dict]
 ) -> None:
-    fs, _ = hadoop_fs(spark, path)
-    fs.mkdirs(_jpath(spark, f"{path}/{_LOG}"))
     # create-exclusive, like our own manifests: two racing exporters
     # cannot both claim the same Delta version
-    out = fs.create(_jpath(spark, f"{path}/{_LOG}/{v:020d}.json"), False)
-    try:
-        out.write(
-            ("\n".join(json.dumps(a) for a in actions) + "\n").encode()
-        )
-    finally:
-        out.close()
+    write_bytes(
+        spark,
+        f"{path}/{_LOG}/{v:020d}.json",
+        ("\n".join(json.dumps(a) for a in actions) + "\n").encode(),
+        overwrite=False,
+    )
 
 
 class _ExportedState:
@@ -193,8 +194,8 @@ def _exported_state(spark: SparkSession, path: str) -> _ExportedState:
     checkpoint keeps working after pre-checkpoint commits are
     vacuumed."""
     st = _ExportedState()
-    fs, _ = hadoop_fs(spark, path)
-    if not fs.exists(_jpath(spark, f"{path}/{_LOG}")):
+    fs, log = hadoop_fs(spark, f"{path}/{_LOG}")
+    if not fs.exists(log):
         return st
     try:
         adds_raw, meta, proto, captured, last = _replay_state(
@@ -267,7 +268,6 @@ def _write_checkpoint(
                 bool(a.get("dataChange", True)),
             ))
         )
-    fs, _ = hadoop_fs(spark, path)
     if max_actions_per_part and len(rows) > max_actions_per_part:
         chunks = [
             rows[i : i + max_actions_per_part]
@@ -277,42 +277,29 @@ def _write_checkpoint(
         chunks = [rows]
     n = len(chunks)
     for i, chunk in enumerate(chunks, start=1):
-        stage = f"{path}/{_LOG}/.cp_stage_{v}_{i}"
-        spark.createDataFrame(chunk, _CP_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        part = next(
-            s.getPath().getName()
-            for s in fs.listStatus(_jpath(spark, stage))
-            if s.getPath().getName().endswith(".parquet")
-        )
         name = (
             f"{v:020d}.checkpoint.parquet"
             if n == 1
             else f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
         )
-        dest = _jpath(spark, f"{path}/{_LOG}/{name}")
         # a checkpoint is derived and re-creatable, so overwriting a
-        # prior attempt is safe — but rename() signals failure by
-        # RETURN VALUE on HDFS/object-store semantics (e.g. destination
-        # exists from a forced checkpoint with a different part split);
-        # ignoring it would leave a stale/missing part while
+        # prior attempt is safe; a failed rename raises before
         # _last_checkpoint is overwritten below (round-16 ADVICE)
-        if fs.exists(dest):
-            fs.delete(dest, False)
-        if not fs.rename(_jpath(spark, f"{stage}/{part}"), dest):
-            raise IOError(
-                f"checkpoint rename failed: {stage}/{part} -> {dest}"
-            )
-        fs.delete(_jpath(spark, stage), True)
+        publish_single_part(
+            spark,
+            spark.createDataFrame(chunk, _CP_SCHEMA),
+            f"{path}/{_LOG}/.cp_stage_{v}_{i}",
+            f"{path}/{_LOG}/{name}",
+        )
     ptr: dict = {"version": v, "size": len(rows)}
     if n > 1:
         ptr["parts"] = n
-    out = fs.create(_jpath(spark, f"{path}/{_LOG}/_last_checkpoint"), True)
-    try:
-        out.write(json.dumps(ptr).encode())
-    finally:
-        out.close()
+    write_bytes(
+        spark,
+        f"{path}/{_LOG}/_last_checkpoint",
+        json.dumps(ptr).encode(),
+        overwrite=True,
+    )
 
 
 def export_delta(
@@ -385,7 +372,7 @@ def export_delta(
             # length at export time (round-15 ADVICE finding)
             size = int(
                 fs.getFileStatus(
-                    _jpath(spark, posixpath.join(path, e["path"]))
+                    hadoop_path(spark, posixpath.join(path, e["path"]))
                 ).getLen()
             )
         add = {

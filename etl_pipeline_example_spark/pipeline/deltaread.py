@@ -81,7 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import hadoop_fs, read_bytes
 
 _LOG = "_delta_log"
 # deletionVectors joined in round 17 (pipeline/deltadv.py — defensive
@@ -97,10 +97,6 @@ _SUPPORTED_READER_FEATURES: set[str] = {
 }
 
 
-def _jpath(spark: SparkSession, p: str):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
-
-
 def _list_log(
     spark: SparkSession, path: str
 ) -> tuple[list[int], dict[int, list[str]]]:
@@ -109,8 +105,7 @@ def _list_log(
     multi-part ``N.checkpoint.I.M.parquet`` checkpoints; a multi-part
     checkpoint with parts missing raises loudly rather than seeding
     replay from a partial state (the round-15 ADVICE finding)."""
-    fs, _ = hadoop_fs(spark, path)
-    ldir = _jpath(spark, f"{path}/{_LOG}")
+    fs, ldir = hadoop_fs(spark, f"{path}/{_LOG}")
     if not fs.exists(ldir):
         raise FileNotFoundError(f"no {_LOG} under {path}: not a Delta table")
     commits: list[int] = []
@@ -165,15 +160,6 @@ def _list_log(
             )
         checkpoints[v] = [got[i][1] for i in range(1, total + 1)]
     return sorted(commits), checkpoints
-
-
-def _read_text(spark: SparkSession, p: str) -> str:
-    fs, _ = hadoop_fs(spark, p)
-    stream = fs.open(_jpath(spark, p))
-    try:
-        return bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
 
 
 def _check_protocol(action: dict) -> None:
@@ -529,12 +515,7 @@ def _dv_masked(
 
     def loader(rel: str) -> bytes:
         p = rel if rel.startswith("/") else posixpath.join(path, rel)
-        fs, _ = hadoop_fs(spark, p)
-        stream = fs.open(_jpath(spark, p))
-        try:
-            return bytes(stream.readAllBytes())
-        finally:
-            stream.close()
+        return read_bytes(spark, p)
 
     pos_by_file = {
         f: decode_descriptor(dv, loader) for f, dv in dvd
@@ -595,8 +576,8 @@ def read_last_checkpoint(spark: SparkSession, path: str) -> dict | None:
     """The ``_last_checkpoint`` pointer, or None. A HINT per the
     protocol — replay always trusts the listing — surfaced for tests
     and external tooling."""
-    fs, _ = hadoop_fs(spark, path)
-    p = _jpath(spark, f"{path}/{_LOG}/_last_checkpoint")
-    if not fs.exists(p):
+    p = f"{path}/{_LOG}/_last_checkpoint"
+    fs, hp = hadoop_fs(spark, p)
+    if not fs.exists(hp):
         return None
-    return json.loads(_read_text(spark, f"{path}/{_LOG}/_last_checkpoint"))
+    return json.loads(read_bytes(spark, p))

@@ -53,35 +53,21 @@ import posixpath
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import (
+    hadoop_fs,
+    hadoop_path,
+    publish_single_part,
+    read_bytes,
+    write_bytes,
+)
 from etl_pipeline_example_spark.pipeline.hudiread import _timeline
 from etl_pipeline_example_spark.pipeline.versioned import (
     _is_external,
-    _jpath,
     _read_manifest,
     _read_pointer,
 )
 
 _TOKEN = "0-0-0"
-
-
-def _write_file(spark: SparkSession, p: str, data: bytes) -> None:
-    fs, _ = hadoop_fs(spark, p)
-    out = fs.create(_jpath(spark, p), True)
-    try:
-        out.write(data)
-    finally:
-        out.close()
-
-
-def _read_commit_meta(spark: SparkSession, dest: str, ts: str) -> dict:
-    fs, _ = hadoop_fs(spark, dest)
-    p = f"{dest}/.hoodie/{ts}.commit"
-    stream = fs.open(_jpath(spark, p))
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
 
 
 def export_hudi(spark: SparkSession, src: str, dest: str) -> str:
@@ -102,27 +88,30 @@ def export_hudi(spark: SparkSession, src: str, dest: str) -> str:
             f" (first borrowed ref: {externals[0]})"
         )
     ts = f"{head:014d}"
-    fs, _ = hadoop_fs(spark, dest)
     hoodie = f"{dest}/.hoodie"
-    if fs.exists(_jpath(spark, f"{hoodie}/{ts}.commit")):
+    fs, commit_path = hadoop_fs(spark, f"{hoodie}/{ts}.commit")
+    if fs.exists(commit_path):
         return ts  # this versioned head is already published
-    if not fs.exists(_jpath(spark, f"{hoodie}/hoodie.properties")):
-        fs.mkdirs(_jpath(spark, hoodie))
-        _write_file(
+    props = f"{hoodie}/hoodie.properties"
+    if not fs.exists(hadoop_path(spark, props)):
+        write_bytes(
             spark,
-            f"{hoodie}/hoodie.properties",
+            props,
             (
                 "#etl versioned export\n"
                 "hoodie.table.name=etl_versioned_export\n"
                 "hoodie.table.type=COPY_ON_WRITE\n"
                 "hoodie.table.version=6\n"
             ).encode(),
+            overwrite=True,
         )
     # previous export's captured per-bucket source-file map (diff base)
     completed, _earliest = _timeline(spark, dest)
     prev_map: dict = {}
     if completed:
-        prev_meta = _read_commit_meta(spark, dest, max(completed))
+        prev_meta = json.loads(
+            read_bytes(spark, f"{hoodie}/{max(completed)}.commit")
+        )
         prev_map = json.loads(
             (prev_meta.get("extraMetadata") or {}).get("bucketFiles", "{}")
         )
@@ -131,8 +120,10 @@ def export_hudi(spark: SparkSession, src: str, dest: str) -> str:
         buckets.setdefault(int(e.get("bucket", 0)), []).append(e["path"])
     key = manifest.get("key")
     # real instant lifecycle: requested -> inflight -> completed
-    _write_file(spark, f"{hoodie}/{ts}.commit.requested", b"{}")
-    _write_file(spark, f"{hoodie}/{ts}.commit.inflight", b"{}")
+    for state in ("requested", "inflight"):
+        write_bytes(
+            spark, f"{hoodie}/{ts}.commit.{state}", b"{}", overwrite=True
+        )
     stats = []
     rewritten = 0
     for b in sorted(buckets):
@@ -158,20 +149,9 @@ def export_hudi(spark: SparkSession, src: str, dest: str) -> str:
             F.lit(name).alias("_hoodie_file_name"),
             "*",
         )
-        stage = f"{dest}/.hoodie/.stage_{fid}_{ts}"
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            s.getPath().getName()
-            for s in fs.listStatus(_jpath(spark, stage))
-            if s.getPath().getName().endswith(".parquet")
+        size = publish_single_part(
+            spark, df, f"{hoodie}/.stage_{fid}_{ts}", f"{dest}/{name}"
         )
-        target = _jpath(spark, f"{dest}/{name}")
-        if fs.exists(target):
-            fs.delete(target, False)
-        if not fs.rename(_jpath(spark, f"{stage}/{part}"), target):
-            raise IOError(f"base-file rename failed: {name}")
-        fs.delete(_jpath(spark, stage), True)
-        size = int(fs.getFileStatus(target).getLen())
         stats.append(
             {
                 "fileId": fid,
@@ -190,7 +170,10 @@ def export_hudi(spark: SparkSession, src: str, dest: str) -> str:
             ),
         },
     }
-    _write_file(
-        spark, f"{hoodie}/{ts}.commit", json.dumps(commit).encode()
+    write_bytes(
+        spark,
+        f"{hoodie}/{ts}.commit",
+        json.dumps(commit).encode(),
+        overwrite=True,
     )
     return ts

@@ -58,7 +58,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import hadoop_fs, read_bytes
 
 _HOODIE = ".hoodie"
 _BASE_RE = re.compile(
@@ -70,30 +70,17 @@ _INSTANT_RE = re.compile(
 )
 
 
-def _jpath(spark: SparkSession, p: str):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
-
-
-def _read_text(spark: SparkSession, p: str) -> str:
-    fs, _ = hadoop_fs(spark, p)
-    stream = fs.open(_jpath(spark, p))
-    try:
-        return bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
-
-
 def read_hoodie_properties(spark: SparkSession, path: str) -> dict:
     """``.hoodie/hoodie.properties`` as a dict (java-properties
     subset: ``key=value`` lines, ``#``/``!`` comments)."""
-    fs, _ = hadoop_fs(spark, path)
     p = f"{path}/{_HOODIE}/hoodie.properties"
-    if not fs.exists(_jpath(spark, p)):
+    fs, hp = hadoop_fs(spark, p)
+    if not fs.exists(hp):
         raise FileNotFoundError(
             f"no {_HOODIE}/hoodie.properties under {path}: not a Hudi table"
         )
     props: dict = {}
-    for line in _read_text(spark, p).splitlines():
+    for line in read_bytes(spark, p).decode().splitlines():
         line = line.strip()
         if not line or line[0] in "#!":
             continue
@@ -107,10 +94,10 @@ def _timeline(
 ) -> tuple[set[str], str | None]:
     """(completed commit instants, earliest ACTIVE instant ts). Loudly
     rejects MOR deltacommits and clustering replacecommits."""
-    fs, _ = hadoop_fs(spark, path)
+    fs, hoodie = hadoop_fs(spark, f"{path}/{_HOODIE}")
     completed: set[str] = set()
     earliest: str | None = None
-    for st in fs.listStatus(_jpath(spark, f"{path}/{_HOODIE}")):
+    for st in fs.listStatus(hoodie):
         name = st.getPath().getName()
         m = _INSTANT_RE.match(name)
         if not m:
@@ -141,18 +128,17 @@ def _base_files(
     """Every parquet base file under the table root (skipping
     ``.hoodie``): (relative dir, fileId, instant ts, file name).
     ``.log.`` files (MOR) raise."""
-    fs, _ = hadoop_fs(spark, path)
+    fs, root = hadoop_fs(spark, path)
     out: list[tuple[str, str, str, str]] = []
-    stack = [""]
+    stack = [("", root)]
     while stack:
-        rel = stack.pop()
-        full = f"{path}/{rel}" if rel else path
-        for st in fs.listStatus(_jpath(spark, full)):
+        rel, hdir = stack.pop()
+        for st in fs.listStatus(hdir):
             name = st.getPath().getName()
             child = f"{rel}/{name}" if rel else name
             if st.isDirectory():
                 if name != _HOODIE:
-                    stack.append(child)
+                    stack.append((child, st.getPath()))
                 continue
             if ".log." in name:
                 raise ValueError(

@@ -55,16 +55,17 @@ import posixpath
 
 from pyspark.sql import SparkSession
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import (
+    hadoop_fs,
+    hadoop_path,
+    read_bytes,
+    write_bytes,
+)
 from etl_pipeline_example_spark.pipeline.avroread import read_avro_ocf
 from etl_pipeline_example_spark.pipeline.avrowrite import write_avro_ocf
-from etl_pipeline_example_spark.pipeline.icebergread import (
-    _latest_metadata,
-    _read_bytes,
-)
+from etl_pipeline_example_spark.pipeline.icebergread import _latest_metadata
 from etl_pipeline_example_spark.pipeline.versioned import (
     _is_external,
-    _jpath,
     _read_manifest,
     _read_pointer,
 )
@@ -222,15 +223,6 @@ def _existing_ids(schema: dict, ids: dict[str, int], prefix: str = "") -> None:
             _existing_ids(f["type"], ids, full + ".")
 
 
-def _write_file(spark: SparkSession, p: str, data: bytes) -> None:
-    fs, _ = hadoop_fs(spark, p)
-    out = fs.create(_jpath(spark, p), True)
-    try:
-        out.write(data)
-    finally:
-        out.close()
-
-
 def _prev_file_seqs(
     spark: SparkSession, prev: dict | None
 ) -> dict[str, tuple[int, int]]:
@@ -256,12 +248,12 @@ def _prev_file_seqs(
         return {}
     out: dict[str, tuple[int, int]] = {}
     _s, ml_entries = read_avro_ocf(
-        _read_bytes(spark, snap["manifest-list"])
+        read_bytes(spark, snap["manifest-list"])
     )
     for mle in ml_entries:
         mseq = int(mle.get("sequence_number") or 0)
         _s2, m_entries = read_avro_ocf(
-            _read_bytes(spark, mle["manifest_path"])
+            read_bytes(spark, mle["manifest_path"])
         )
         for e in m_entries:
             if int(e.get("status") or 0) == 2:  # DELETED
@@ -274,15 +266,16 @@ def _prev_file_seqs(
     return out
 
 
-def _parquet_rows(local_path: str) -> int:
+def _parquet_rows(spark: SparkSession, path: str) -> int:
+    """Row count from the parquet footer, read through Hadoop so any
+    scheme works: the last 8 bytes give the footer length, then the
+    footer is read and parsed from memory behind a leading magic."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    p = local_path
-    for pre in ("file://", "file:"):
-        if p.startswith(pre):
-            p = p[len(pre):]
-            break
-    return int(pq.ParquetFile(p).metadata.num_rows)
+    footer_len = int.from_bytes(read_bytes(spark, path, tail=8)[:4], "little")
+    footer = read_bytes(spark, path, tail=footer_len + 8)
+    return int(pq.read_metadata(pa.BufferReader(b"PAR1" + footer)).num_rows)
 
 
 def export_iceberg(spark: SparkSession, path: str) -> int:
@@ -303,7 +296,7 @@ def export_iceberg(spark: SparkSession, path: str) -> int:
     fs, _ = hadoop_fs(spark, path)
     mdir = f"{path}/metadata"
     try:
-        prev = json.loads(_read_bytes(spark, _latest_metadata(spark, path)))
+        prev = json.loads(read_bytes(spark, _latest_metadata(spark, path)))
     except FileNotFoundError:
         prev = None
     if prev is not None:
@@ -357,10 +350,8 @@ def export_iceberg(spark: SparkSession, path: str) -> int:
     min_seq = seq
     for e in manifest["files"]:
         full = posixpath.join(path, e["path"])
-        rows = _parquet_rows(full)
-        size = int(
-            fs.getFileStatus(_jpath(spark, full)).getLen()
-        )
+        rows = _parquet_rows(spark, full)
+        size = int(fs.getFileStatus(hadoop_path(spark, full)).getLen())
         # a file is EXISTING only when BOTH histories agree: the
         # versioned manifest says it was carried AND the prior Iceberg
         # manifest chain yields its original add sequence (the spec
@@ -408,7 +399,7 @@ def export_iceberg(spark: SparkSession, path: str) -> int:
     )
     man_name = f"m{snap_id:05d}-{hashlib.md5(man_bytes).hexdigest()[:8]}.avro"
     man_path = f"{mdir}/{man_name}"
-    _write_file(spark, man_path, man_bytes)
+    write_bytes(spark, man_path, man_bytes, overwrite=True)
     ml_bytes = write_avro_ocf(
         _MANIFEST_LIST_AVRO,
         [
@@ -434,7 +425,7 @@ def export_iceberg(spark: SparkSession, path: str) -> int:
         f"snap-{snap_id}-{hashlib.md5(ml_bytes).hexdigest()[:8]}.avro"
     )
     ml_path = f"{mdir}/{ml_name}"
-    _write_file(spark, ml_path, ml_bytes)
+    write_bytes(spark, ml_path, ml_bytes, overwrite=True)
     snapshots.append(
         {
             "snapshot-id": snap_id,
@@ -480,10 +471,8 @@ def export_iceberg(spark: SparkSession, path: str) -> int:
     body = json.dumps(meta, indent=1).encode()
     name = f"{mv:05d}-{hashlib.md5(body).hexdigest()[:8]}.metadata.json"
     # create-exclusive: racing exporters cannot both claim version mv
-    out = fs.create(_jpath(spark, f"{mdir}/{name}"), False)
-    try:
-        out.write(body)
-    finally:
-        out.close()
-    _write_file(spark, f"{mdir}/version-hint.text", str(mv).encode())
+    write_bytes(spark, f"{mdir}/{name}", body, overwrite=False)
+    write_bytes(
+        spark, f"{mdir}/version-hint.text", str(mv).encode(), overwrite=True
+    )
     return snap_id

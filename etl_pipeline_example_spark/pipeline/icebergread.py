@@ -65,7 +65,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import hadoop_fs, read_bytes
 from etl_pipeline_example_spark.pipeline.avroread import read_avro_ocf
 
 _META_RE = re.compile(r"^(?:v(\d+)|(\d+)-[0-9a-fA-F-]+)\.metadata\.json$")
@@ -73,22 +73,8 @@ _DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
 _FIXED_RE = re.compile(r"^fixed\[(\d+)\]$")
 
 
-def _jpath(spark: SparkSession, p: str):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
-
-
-def _read_bytes(spark: SparkSession, p: str) -> bytes:
-    fs, _ = hadoop_fs(spark, p)
-    stream = fs.open(_jpath(spark, p))
-    try:
-        return bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-
-
 def _latest_metadata(spark: SparkSession, path: str) -> str:
-    fs, _ = hadoop_fs(spark, path)
-    mdir = _jpath(spark, f"{path}/metadata")
+    fs, mdir = hadoop_fs(spark, f"{path}/metadata")
     if not fs.exists(mdir):
         raise FileNotFoundError(
             f"no metadata/ under {path}: not an Iceberg table"
@@ -242,7 +228,7 @@ def _data_files(
         return []
     if snap.get("manifest-list"):
         _schema, entries = read_avro_ocf(
-            _read_bytes(spark, snap["manifest-list"])
+            read_bytes(spark, snap["manifest-list"])
         )
         manifests = []
         for e in entries:
@@ -371,7 +357,7 @@ def read_iceberg(
     partition columns); tables whose schema history RENAMED top-level
     columns resolve by embedded parquet field id instead (since r17);
     unsupported features raise by name."""
-    meta = json.loads(_read_bytes(spark, _latest_metadata(spark, path)))
+    meta = json.loads(read_bytes(spark, _latest_metadata(spark, path)))
     fv = int(meta.get("format-version", 1))
     if fv > 2:
         raise ValueError(f"unsupported Iceberg format-version {fv}")
@@ -392,7 +378,7 @@ def read_iceberg(
 
 def iceberg_snapshots(spark: SparkSession, path: str) -> list[dict]:
     """(snapshot-id, timestamp-ms) history — time-travel candidates."""
-    meta = json.loads(_read_bytes(spark, _latest_metadata(spark, path)))
+    meta = json.loads(read_bytes(spark, _latest_metadata(spark, path)))
     return [
         {
             "snapshot_id": s.get("snapshot-id"),

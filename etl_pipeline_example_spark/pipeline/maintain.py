@@ -28,7 +28,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs, swap_into_place
+from etl_pipeline_example_spark.fsutil import hadoop_fs, hadoop_path, swap_into_place
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # the usual parquet sweet spot
 
@@ -81,9 +81,8 @@ def expire_snapshots(
         if st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
     )
     doomed = parts[:-keep] if keep > 0 else parts
-    jvm = spark.sparkContext._jvm
     for name in doomed:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{name}"), True)
+        fs.delete(hadoop_path(spark, f"{path}/{name}"), True)
     spark.catalog.refreshByPath(path)
     return doomed
 

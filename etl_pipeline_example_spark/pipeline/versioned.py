@@ -107,7 +107,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import (
+    hadoop_fs,
+    hadoop_path,
+    read_bytes,
+    write_bytes,
+)
 
 _PTR = "_latest"
 _MANIFESTS = "_manifests"
@@ -124,10 +129,6 @@ def _now_ms() -> int:
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version number first."""
-
-
-def _jpath(spark: SparkSession, p: str):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
 
 
 def _bucket_expr(key: str, nbuckets: int):
@@ -153,8 +154,7 @@ def _resolve_ref(path: str, ref: str) -> str:
 
 
 def _versions(spark: SparkSession, path: str) -> list[int]:
-    fs, _ = hadoop_fs(spark, path)
-    mdir = _jpath(spark, f"{path}/{_MANIFESTS}")
+    fs, mdir = hadoop_fs(spark, f"{path}/{_MANIFESTS}")
     if not fs.exists(mdir):
         return []
     return sorted(
@@ -183,18 +183,10 @@ def _read_pointer(spark: SparkSession, path: str) -> int:
     The cost is one ``_manifests/`` listStatus per resolution — the
     Delta/Iceberg log-listing read path, and the price of a commit
     protocol with no renames for an object store to botch."""
-    fs, _ = hadoop_fs(spark, path)
-    ptr = _jpath(spark, f"{path}/{_PTR}")
-    hinted: int | None = None
-    if fs.exists(ptr):
-        try:
-            stream = fs.open(ptr)
-            try:
-                hinted = int(bytes(stream.readAllBytes()).decode().strip())
-            finally:
-                stream.close()
-        except Exception:  # torn/unreadable hint: the listing decides
-            hinted = None
+    try:
+        hinted = int(read_bytes(spark, f"{path}/{_PTR}").decode().strip())
+    except Exception:  # missing/torn/unreadable hint: the listing decides
+        hinted = None
     committed = _versions(spark, path)
     if committed:
         return max(hinted or 0, committed[-1])
@@ -211,12 +203,9 @@ def _write_pointer(spark: SparkSession, path: str, version: int) -> None:
     catches this overwrite mid-write, or a crash that skips it
     entirely, falls back to the manifest listing in ``_read_pointer``
     — a torn pointer can never produce a torn table."""
-    fs, _ = hadoop_fs(spark, path)
-    out = fs.create(_jpath(spark, f"{path}/{_PTR}"), True)
-    try:
-        out.write(f"{version}\n".encode())
-    finally:
-        out.close()
+    write_bytes(
+        spark, f"{path}/{_PTR}", f"{version}\n".encode(), overwrite=True
+    )
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -224,15 +213,11 @@ def _manifest_path(path: str, version: int) -> str:
 
 
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    fs, _ = hadoop_fs(spark, path)
-    mp = _jpath(spark, _manifest_path(path, version))
-    if not fs.exists(mp):
+    mp = _manifest_path(path, version)
+    fs, hmp = hadoop_fs(spark, mp)
+    if not fs.exists(hmp):
         raise FileNotFoundError(f"version {version} not retained under {path}")
-    stream = fs.open(mp)
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    return json.loads(read_bytes(spark, mp).decode())
 
 
 def _commit_manifest(
@@ -242,8 +227,6 @@ def _commit_manifest(
     Two writers racing to version N both try this create; exactly one
     wins, the other raises ConcurrentWriteError (its data files are
     unreferenced orphans the next expire_versions sweeps)."""
-    fs, _ = hadoop_fs(spark, path)
-    mp = _jpath(spark, _manifest_path(path, version))
     # commit wall-clock for timestamp time travel (read_versioned
     # as_of_ms): stamped unconditionally — a restore/compact/clone
     # commit happens NOW even when its payload copies an older
@@ -267,15 +250,16 @@ def _commit_manifest(
         stamp = max(stamp, prev + 1)
     manifest["committed_at_ms"] = stamp
     try:
-        out = fs.create(mp, False)  # overwrite=false: exclusive
-    except Exception as exc:  # py4j wraps FileAlreadyExistsException
+        write_bytes(
+            spark,
+            _manifest_path(path, version),
+            json.dumps(manifest).encode(),
+            overwrite=False,
+        )
+    except FileExistsError as exc:
         raise ConcurrentWriteError(
             f"version {version} already committed under {path}"
         ) from exc
-    try:
-        out.write(json.dumps(manifest).encode())
-    finally:
-        out.close()
 
 
 def _new_vdir(path: str, version: int) -> str:
@@ -300,9 +284,9 @@ def _list_written_files(
 ) -> list[dict]:
     """(bucket, relative-path) entries for every data file Spark wrote
     under this writer's data dir (bucket parsed from the __b= dir)."""
-    fs, _ = hadoop_fs(spark, path)
+    fs, hvdir = hadoop_fs(spark, vdir)
     entries: list[dict] = []
-    it = fs.listFiles(_jpath(spark, vdir), True)
+    it = fs.listFiles(hvdir, True)
     while it.hasNext():
         st = it.next()
         p = st.getPath().toString()
@@ -1157,7 +1141,7 @@ def expire_versions(
     ``grace_ms`` to comfortably exceed their longest write (the
     Iceberg ``expire_snapshots`` older-than contract). The default 0
     keeps single-writer sweeps immediate."""
-    fs, _ = hadoop_fs(spark, path)
+    fs, data_root = hadoop_fs(spark, f"{path}/{_DATA}")
     live = _read_pointer(spark, path)
     versions = _versions(spark, path)
     # GC fence: an in-flight writer normally works AT or ABOVE the
@@ -1176,14 +1160,13 @@ def expire_versions(
     cutoff = _now_ms() - grace_ms
     doomed = [v for v in versions[:-keep] if v != live] if keep > 0 else []
     for v in doomed:
-        fs.delete(_jpath(spark, _manifest_path(path, v)), False)
+        fs.delete(hadoop_path(spark, _manifest_path(path, v)), False)
     retained = set(_versions(spark, path)) - set(doomed)
     referenced: set[str] = set()
     for v in retained:
         referenced.update(
             e["path"] for e in _read_manifest(spark, path, v)["files"]
         )
-    data_root = _jpath(spark, f"{path}/{_DATA}")
     if fs.exists(data_root):
         it = fs.listFiles(data_root, True)
         orphans = []
@@ -1197,9 +1180,9 @@ def expire_versions(
             if grace_ms > 0 and st.getModificationTime() >= cutoff:
                 continue  # young file — a slow writer may own it
             if rel not in referenced:
-                orphans.append(p)
+                orphans.append(st.getPath())
         for p in orphans:
-            fs.delete(_jpath(spark, p), False)
+            fs.delete(p, False)
         # sweep version dirs that emptied out (same fences)
         for st in fs.listStatus(data_root):
             v = _dir_version(st.getPath().getName())

@@ -17,12 +17,9 @@ s3a Hadoop runs the server-side copy and delete itself.
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass
-from pathlib import Path
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import hadoop_fs, hadoop_path
 
 
 @dataclass
@@ -53,31 +50,6 @@ class ZoneStore:
     def curated_path(self, db_base: str, location: str) -> str:
         return f"{self.curated}/{db_base}/{location}"
 
-    def promote_to_raw(self, dataset: str, table: str) -> list[str]:
-        """Move every landed partition of ``table`` to raw-hist.
-
-        Driver-side local-FS implementation of
-        ``promote_to_raw_distributed``, with the same semantics: each
-        partition directory (``file_land_timestamp=...``) replaces any
-        stale copy in raw-hist and is moved with one ``os.replace``, so
-        raw-hist keeps full arrival history.
-        """
-        src = Path(self.land_path(dataset, table))
-        dst = Path(self.raw_hist_path(dataset, table))
-        if not src.exists():
-            raise FileNotFoundError(
-                f"Was expecting data in land but nothing was found in the folder: {src}"
-            )
-        moved: list[str] = []
-        for part in sorted(p for p in src.iterdir() if p.is_dir()):
-            target = dst / part.name
-            target.parent.mkdir(parents=True, exist_ok=True)
-            if target.exists():
-                shutil.rmtree(target)
-            os.replace(part, target)
-            moved.append(str(target))
-        return moved
-
 
 def promote_to_raw_distributed(spark, zones: ZoneStore, dataset: str, table: str) -> list[str]:
     """Land → raw-hist promotion through the session's Hadoop filesystem.
@@ -99,14 +71,13 @@ def promote_to_raw_distributed(spark, zones: ZoneStore, dataset: str, table: str
         raise FileNotFoundError(
             f"Was expecting data in land but nothing was found in the folder: {src}"
         )
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     names = sorted(st.getPath().getName() for st in fs.listStatus(src_root) if st.isDirectory())
     moved = []
     for name in names:
         part, target = f"{src}/{name}", f"{dst}/{name}"
-        fs.delete(hpath(target), True)
-        fs.mkdirs(hpath(dst))
-        if not fs.rename(hpath(part), hpath(target)):
+        fs.delete(hadoop_path(spark, target), True)
+        fs.mkdirs(hadoop_path(spark, dst))
+        if not fs.rename(hadoop_path(spark, part), hadoop_path(spark, target)):
             raise IOError(f"could not move {part} to {target}")
         moved.append(target)
     return moved

@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_example_spark.fsutil import hadoop_fs
+from etl_pipeline_example_spark.fsutil import hadoop_fs, write_bytes
 from etl_pipeline_example_spark.pipeline.versioned import (
     _versions,
     upsert_versioned,
@@ -49,23 +49,12 @@ def _mark_path(path: str, batch_id: int) -> str:
 
 
 def _mark(spark: SparkSession, path: str, batch_id: int) -> None:
-    fs, _ = hadoop_fs(spark, path)
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-        _mark_path(path, batch_id)
-    )
-    out = fs.create(jpath, True)
-    try:
-        out.write(b"done\n")
-    finally:
-        out.close()
+    write_bytes(spark, _mark_path(path, batch_id), b"done\n", overwrite=True)
 
 
 def _marked(spark: SparkSession, path: str, batch_id: int) -> bool:
-    fs, _ = hadoop_fs(spark, path)
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-        _mark_path(path, batch_id)
-    )
-    return bool(fs.exists(jpath))
+    fs, mark = hadoop_fs(spark, _mark_path(path, batch_id))
+    return bool(fs.exists(mark))
 
 
 def stream_versioned_upsert(

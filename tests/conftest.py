@@ -31,6 +31,22 @@ def _release_caches():
     release_similarity_caches()
 
 
+@pytest.fixture()
+def viewfs_path(spark, tmp_path):
+    """A viewfs://<authority>/wh URI mounted onto tmp_path: the stand-in
+    for an object-store root (the same URI → FileSystem resolution an
+    s3a:// deployment goes through). The mount table is snapshotted per
+    AUTHORITY at first FileSystem resolution (Hadoop caches the
+    instance), so each test uses a fresh authority — exactly how one
+    session would address two different buckets."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    auth = "bkt" + tmp_path.name.replace("_", "").replace("-", "").lower()
+    hconf.set(
+        f"fs.viewfs.mounttable.{auth}.link./wh", f"file://{tmp_path}"
+    )
+    return f"viewfs://{auth}/wh"
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -7,6 +7,7 @@ would (URI → FileSystem impl → open/rename/list), with zero extra
 libraries in the sandbox. This pins SURVEY §4's "path-agnostic" claim
 with a test instead of an assertion (round-13 verdict ask #6); a real
 S3 deployment swaps only the scheme and the fs.s3a.* credentials conf.
+The ``viewfs_path`` fixture lives in ``conftest.py``.
 """
 
 from __future__ import annotations
@@ -22,20 +23,6 @@ from etl_pipeline_example_spark.pipeline.versioned import (
     upsert_versioned,
     write_versioned,
 )
-
-
-@pytest.fixture()
-def viewfs_path(spark, tmp_path):
-    """A viewfs://<authority>/wh URI mounted onto tmp_path. The mount
-    table is snapshotted per AUTHORITY at first FileSystem resolution
-    (Hadoop caches the instance), so each test uses a fresh authority —
-    exactly how one session would address two different buckets."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    auth = "bkt" + tmp_path.name.replace("_", "").replace("-", "").lower()
-    hconf.set(
-        f"fs.viewfs.mounttable.{auth}.link./wh", f"file://{tmp_path}"
-    )
-    return f"viewfs://{auth}/wh"
 
 
 def _df(spark, rows):
@@ -177,3 +164,59 @@ def test_zone_promotion_over_viewfs(spark, viewfs_path, tmp_path):
         [(i, f"A{i}") for i in range(12)] * 2
     )
     assert not list((tmp_path / "land" / "d" / "t").iterdir())
+
+
+def _delta_round_trip(spark, path):
+    from etl_pipeline_example_spark.pipeline.deltaexport import (
+        export_delta,
+        export_delta_checkpoint,
+    )
+    from etl_pipeline_example_spark.pipeline.deltaread import read_delta
+
+    export_delta(spark, path)
+    export_delta_checkpoint(spark, path)  # the single-part publish
+    return read_delta(spark, path)
+
+
+def _iceberg_round_trip(spark, path):
+    from etl_pipeline_example_spark.pipeline.icebergexport import export_iceberg
+    from etl_pipeline_example_spark.pipeline.icebergread import read_iceberg
+
+    export_iceberg(spark, path)
+    return read_iceberg(spark, path)
+
+
+def _hudi_round_trip(spark, path):
+    from etl_pipeline_example_spark.pipeline.hudiexport import export_hudi
+    from etl_pipeline_example_spark.pipeline.hudiread import read_hudi
+
+    export_hudi(spark, path, path + "_hudi")
+    return read_hudi(spark, path + "_hudi")
+
+
+@pytest.mark.parametrize(
+    "round_trip",
+    [_delta_round_trip, _iceberg_round_trip, _hudi_round_trip],
+    ids=["delta", "iceberg", "hudi"],
+)
+def test_table_formats_round_trip_over_viewfs(spark, viewfs_path, round_trip):
+    """Each table-format export reads, writes and publishes its log,
+    metadata and data files through the mounted FileSystem, and its
+    reader returns the versioned table's rows. The export after the
+    upsert also runs each exporter's read of its previous export."""
+    path = viewfs_path + "/tbl"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", "val", "ver").collect())
+
+    write_versioned(
+        spark, _df(spark, [(k, f"v{k}", 1) for k in range(20)]), path,
+        key="k", nbuckets=4,
+    )
+    assert rows(round_trip(spark, path)) == rows(read_versioned(spark, path))
+    upsert_versioned(
+        spark, path, _df(spark, [(3, "NEW", 2), (20, "v20", 2)]), "k", "ver"
+    )
+    want = rows(read_versioned(spark, path))
+    assert len(want) == 21 and (3, "NEW", 2) in want
+    assert rows(round_trip(spark, path)) == want

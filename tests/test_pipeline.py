@@ -182,10 +182,10 @@ def test_validation_gate_collects_all_failures(spark, tmp_path):
     assert "1700000001" in msg and "1700000002" in msg
 
 
-def test_promote_missing_land_raises(tmp_path):
+def test_promote_missing_land_raises(spark, tmp_path):
     zones = ZoneStore(str(tmp_path))
     with pytest.raises(FileNotFoundError, match="nothing was found"):
-        zones.promote_to_raw("open_data", "nope")
+        promote_to_raw_distributed(spark, zones, "open_data", "nope")
 
 
 def test_extract_to_land_unpacks_nested(spark, tmp_path):
@@ -202,23 +202,20 @@ def test_extract_to_land_unpacks_nested(spark, tmp_path):
 
 
 def test_distributed_promotion_matches_local(spark, tmp_path):
-    """Both promotion paths must produce identical raw-hist content and
-    clear land."""
-    z1 = ZoneStore(str(tmp_path / "a"))
-    z2 = ZoneStore(str(tmp_path / "b"))
-    for z in (z1, z2):
-        land_records(z, n=20, ts=1700000001)
-        land_records(z, n=20, ts=1700000002)
-    moved_local = z1.promote_to_raw("open_data", "random_records")
-    moved_dist = promote_to_raw_distributed(spark, z2, "open_data", "random_records")
-    assert [Path(p).name for p in moved_local] == [Path(p).name for p in moved_dist]
-    a = sorted(tuple(r) for r in read_jsonl(
-        spark, z1.raw_hist_path("open_data", "random_records")).collect())
-    b = sorted(tuple(r) for r in read_jsonl(
-        spark, z2.raw_hist_path("open_data", "random_records")).collect())
-    assert a == b and len(a) == 40
-    for z in (z1, z2):
-        assert not list(Path(z.land_path("open_data", "random_records")).glob("file_land_*"))
+    """Promotion moves exactly the landed records to raw-hist and clears
+    land."""
+    zones = ZoneStore(str(tmp_path))
+    land_records(zones, n=20, ts=1700000001)
+    land_records(zones, n=20, ts=1700000002)
+    landed = sorted(tuple(r) for r in read_jsonl(
+        spark, zones.land_path("open_data", "random_records")).collect())
+    moved = promote_to_raw_distributed(spark, zones, "open_data", "random_records")
+    assert [Path(p).name for p in moved] == [
+        "file_land_timestamp=1700000001", "file_land_timestamp=1700000002"]
+    raw = sorted(tuple(r) for r in read_jsonl(
+        spark, zones.raw_hist_path("open_data", "random_records")).collect())
+    assert raw == landed and len(raw) == 40
+    assert not list(Path(zones.land_path("open_data", "random_records")).glob("file_land_*"))
 
 
 def _partitions(root: str) -> list[str]:

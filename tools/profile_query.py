@@ -1,8 +1,8 @@
 """Per-query profiler for the optimization rounds (guide §1).
 
-Runs one or more registered queries on the bench session (same env
-contract as bench.py: $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS), with the
-Spark event log enabled, then reports per query:
+Runs one or more registered queries on the engine session (``get_spark``,
+same env contract as bench.py: $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS),
+with the Spark event log enabled, then reports per query:
 
   - wall seconds for the same `.count()` action bench.py times
   - number of Spark jobs the query launched and each job's wall time
@@ -30,6 +30,14 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EVDIR = "/tmp/spark-events-profile"
+# the event log must be on before the JVM starts, so it rides in as
+# spark-submit confs under the engine session's own settings
+EVENT_LOG_CONFS = {
+    "spark.eventLog.enabled": "true",
+    "spark.eventLog.dir": EVDIR,
+    "spark.eventLog.compress": "false",
+    "spark.eventLog.rolling.enabled": "false",
+}
 
 
 def main() -> None:
@@ -38,27 +46,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(EVDIR, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in EVENT_LOG_CONFS.items()] + ["pyspark-shell"]
     )
+    from etl_pipeline_example_spark import get_spark
+
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
