@@ -4,7 +4,10 @@ The streaming twin of ``sketch_moments`` (operators/moments.py), the
 same pairing discipline as cms/hll/kmv: the power sums Σc..Σc⁴ are
 pure additive state, so the whole sketch is one complete-mode
 streaming aggregation with G rows of state (event types), decimal-
-exact — the distribution-shape sketch at its native home. The oracle
+exact — the distribution-shape sketch at its native home. Each sum
+leaves as its exact DECIMAL(38,0) integer rendered as a string, the
+batch twin's boundary (see its docstring for why neither double nor
+decimal output survives the cross-engine hash). The oracle
 is the batch SQL minus the derived ``__merged__`` row (merge-by-
 addition is the BATCH op's certified path; the stream certifies the
 per-group state), so stream/batch parity catches dropped or replayed
@@ -64,10 +67,10 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "grp",
             "n",
-            _guarded("d1").alias("s1"),
-            _guarded("d2").alias("s2"),
-            _guarded("d3").alias("s3"),
-            _guarded("d4").alias("s4"),
+            _guarded("d1").cast("string").alias("s1"),
+            _guarded("d2").cast("string").alias("s2"),
+            _guarded("d3").cast("string").alias("s3"),
+            _guarded("d4").cast("string").alias("s4"),
         )
         .orderBy("grp")
     )
@@ -80,10 +83,10 @@ WITH cents AS (
   FROM events
 )
 SELECT grp, count(*) AS n,
-       CAST(sum(CAST(c AS HUGEINT)) AS DECIMAL(38,0)) AS s1,
-       CAST(sum(CAST(c AS HUGEINT) * c) AS DECIMAL(38,0)) AS s2,
-       CAST(sum(CAST(c AS HUGEINT) * c * c) AS DECIMAL(38,0)) AS s3,
-       CAST(sum(CAST(c AS HUGEINT) * c * c * c) AS DECIMAL(38,0)) AS s4
+       CAST(CAST(sum(CAST(c AS HUGEINT)) AS DECIMAL(38,0)) AS VARCHAR) AS s1,
+       CAST(CAST(sum(CAST(c AS HUGEINT) * c) AS DECIMAL(38,0)) AS VARCHAR) AS s2,
+       CAST(CAST(sum(CAST(c AS HUGEINT) * c * c) AS DECIMAL(38,0)) AS VARCHAR) AS s3,
+       CAST(CAST(sum(CAST(c AS HUGEINT) * c * c * c) AS DECIMAL(38,0)) AS VARCHAR) AS s4
 FROM cents
 GROUP BY 1
 ORDER BY 1

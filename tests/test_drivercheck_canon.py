@@ -87,3 +87,59 @@ def test_none_sorts_before_values():
     rows = [(1.5,), (None,), (0.5,)]
     out = normalize(rows, ["v"])
     assert out[0] == (None,)
+
+
+def test_type_report_applies_the_policy_set():
+    """A column both engines emit as the same decimal matches pairwise
+    but still hashes differently downstream: ``type_report`` must flag
+    every Spark type outside ``ALLOWED``, not only pairwise mismatches."""
+    from types import SimpleNamespace
+
+    from pyspark.sql.types import (
+        ArrayType,
+        DecimalType,
+        FloatType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from tools.drivercheck import ALLOWED, type_report
+
+    assert ALLOWED == {
+        "string", "int", "bigint", "double", "boolean", "date", "timestamp",
+    }
+    sdf = SimpleNamespace(schema=StructType([
+        StructField("n", LongType()),
+        StructField("s", StringType()),
+        StructField("xs", ArrayType(StringType())),
+        StructField("d", DecimalType(38, 0)),
+        StructField("f", FloatType()),
+    ]))
+    arrow = pa.schema([
+        ("n", pa.int64()),
+        ("s", pa.string()),
+        ("xs", pa.list_(pa.string())),
+        ("d", pa.decimal128(38, 0)),
+        ("f", pa.float32()),
+    ])
+    bad = type_report(sdf, arrow)
+    assert [b.split(":")[0] for b in bad] == ["d", "f"], bad
+    ok = SimpleNamespace(schema=StructType(sdf.schema.fields[:3]))
+    assert type_report(ok, arrow.remove(4).remove(3)) == []
+
+
+def test_decimal_values_compare_exactly():
+    """Past 2^53 two different exact integers round to the same double;
+    the compare must keep ``Decimal`` exact, never go through float."""
+    from decimal import Decimal
+
+    from tools.drivercheck import normalize, values_equal
+
+    lo, hi = Decimal(2**53), Decimal(2**53 + 1)
+    assert float(lo) == float(hi)
+    [(a,)], [(b,)] = normalize([(lo,)], ["v"]), normalize([(hi,)], ["v"])
+    assert a == lo and b == hi
+    assert not values_equal(a, b)
+    assert values_equal(a, Decimal(2**53))

@@ -108,7 +108,7 @@ KEYS = """
 # sha256 over json.dumps(sorted((key, fn.__module__, fn.__qualname__)))
 CALLABLES_SHA256 = "bb4e416980310705a392f3c863745bcc4a17f2507bca8aa78bab728a3b127dda"
 # sha256 over json.dumps(sorted(oracle_sql().items()))
-ORACLES_SHA256 = "58556675a50837e765042e301af35d0fab265240b69930329ba17b8817245e97"
+ORACLES_SHA256 = "ce23c112ede01fc22eb92c30cd5a8b842d9f34035fd1c8d1a317e7bc10ff3732"
 
 
 def _sha256(obj) -> str:

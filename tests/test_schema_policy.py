@@ -9,7 +9,8 @@ through a read path) hash-mismatches even when every value agrees — the
 exact bug class that cost 7 driver rows in round 2. Restricting the
 Spark side to the canonical set makes the class unrepresentable: the
 paired DuckDB oracles are written to the same set, and drivercheck
-compares the oracle's Arrow schema against these types per run.
+applies the same ``ALLOWED`` set (defined there, imported here) and
+compares the oracle's Arrow schema against the Spark types per run.
 
 Schema resolution needs only plan analysis (no jobs), so this covers the
 whole registry in seconds.
@@ -19,13 +20,7 @@ from __future__ import annotations
 
 import pytest
 
-ALLOWED = {"string", "int", "bigint", "double", "boolean", "date", "timestamp"}
-
-
-def _check(dt_str: str) -> bool:
-    if dt_str.startswith("array<") and dt_str.endswith(">"):
-        return _check(dt_str[len("array<"):-1])
-    return dt_str in ALLOWED
+from tools.drivercheck import ALLOWED, allowed_type
 
 
 def _registry():
@@ -40,9 +35,10 @@ def test_output_types_are_canonical(spark, sf_dir, name):
     bad = [
         f"{f.name}: {f.dataType.simpleString()}"
         for f in df.schema.fields
-        if not _check(f.dataType.simpleString())
+        if not allowed_type(f.dataType.simpleString())
     ]
     assert not bad, (
         f"{name} emits non-canonical output types (decimal/float/ntz "
-        f"hash differently through Arrow than the DuckDB oracle): {bad}"
+        f"hash differently through Arrow than the DuckDB oracle; allowed: "
+        f"{sorted(ALLOWED)} or arrays of them): {bad}"
     )
