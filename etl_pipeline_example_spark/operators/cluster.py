@@ -21,7 +21,9 @@ blobs near-dup graphs produce, and a long chain of chained near-dups
 can't push it past the cap. Labels are ``localCheckpoint``-ed per round:
 the plan each round is 2 bounded joins + 1 aggregation over
 (node, component), never a lineage that grows with round count (Catalyst re-planning over an
-iterated lineage is the classic silent O(rounds²) driver cost).
+iterated lineage is the classic silent O(rounds²) driver cost); each
+superseded round's checkpoint is freed once the next one is built, so
+only the returned labels stay live.
 Initialization folds the first propagation in (labels start at
 min(self, neighbours)); convergence is detected by the monotone label
 sum (labels only decrease, so an unchanged decimal sum IS the fixed
@@ -53,49 +55,85 @@ from etl_pipeline_example_spark.session import scoped_confs
 
 ITER_CAP = 20
 
-# Static narrow planning for the per-round label jobs when the INPUT is
-# provably small (the graph.py broadcast-gate discipline: a driver-side
-# ``fsutil.dataset_bytes`` call, no job). Profiled (r18): each
-# pointer-doubling round over the tiny cached label/edge frames ran as
-# ~5 separate AQE stage-jobs (one per exchange materialization plus
-# re-planning between them), so ~half the operator's wall was driver
-# scheduling gap, not compute.
-# Under the gate the loop runs with AQE off at a fixed narrow width —
-# one checkpoint job + one probe job per round. Size-adaptive, not a
-# local[32] constant: past the gate (or when the input is missing) the
-# loop keeps AQE's runtime sizing unchanged.
-_TINY_LOOP_INPUT_BYTES = 256 * 1024 * 1024
-_TINY_LOOP_WIDTH = 4
+# The one small-input gate of the graph and dedup keys: the RAW INPUT
+# SIZE of the table the key scans (``fsutil.dataset_bytes``: one
+# driver-side call — no job, no barrier; recursive over part files and
+# ``k=v`` partitions, None when missing). 256 MB of lineitem bounds the
+# co-order edge list to a few tens of MB (baskets are schema-bounded,
+# ≤ 7 lines/order → ≤ 21 pairs/order), and 256 MB of documents or
+# embeddings bounds a dedup pair graph the same way — comfortable to
+# broadcast against the session's 8 g driver, and tiny enough that the
+# label loops below run their rounds statically narrow. Size-adaptive,
+# not a local[32] constant: at scale (or when the input is missing) the
+# gate fails and every caller keeps its shuffled, AQE-sized shape.
+_SMALL_INPUT_BYTES = 256 * 1024 * 1024
 
 
-def _tiny_loop_width(spark: SparkSession, sf_dir: str, table: str) -> int | None:
-    """``_TINY_LOOP_WIDTH`` when ``<sf_dir>/<table>.parquet`` is small
-    enough that the CC label frames are trivially narrow; None (keep
-    AQE) otherwise or when the input is missing."""
+def small_input(spark: SparkSession, sf_dir: str, table: str) -> bool:
+    """True when ``<sf_dir>/<table>.parquet`` exists and is at most
+    ``_SMALL_INPUT_BYTES``."""
     size = dataset_bytes(spark, f"{sf_dir}/{table}.parquet")
-    if size is None or size > _TINY_LOOP_INPUT_BYTES:
-        return None
-    return _TINY_LOOP_WIDTH
+    return size is not None and size <= _SMALL_INPUT_BYTES
+
+
+def both_directions(edges: DataFrame, u: str, v: str, a: str, b: str) -> DataFrame:
+    """(a, b) rows: every (u, v) edge once as (u, v) and once as (v, u).
+
+    One inline explode, not a two-branch union (r17): the union
+    referenced the edge subtree twice, and before a persisted edge
+    build's cache filled both branches raced duplicate copies of it
+    (profiler: two near-identical lineitem self-join jobs in the query
+    head). Same row multiset."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(u).alias(a), F.col(v).alias(b)),
+                F.struct(F.col(v).alias(a), F.col(u).alias(b)),
+            )
+        ).alias("e")
+    ).select(f"e.{a}", f"e.{b}")
 
 
 @contextmanager
-def _static_narrow_planning(spark: SparkSession, width: int | None):
+def _static_narrow_planning(spark: SparkSession, small: bool):
     """Scoped {AQE off, fixed narrow shuffle width, no broadcast joins}
-    for the label loop's tiny per-round jobs; a no-op when ``width`` is
-    None. Broadcast stays off because the r17 A/B measured the
-    broadcast-build job latency exceeding these tiny shuffles."""
-    if width is None:
+    for the label loop's tiny per-round jobs when the input is
+    ``small``; a no-op otherwise.
+
+    Profiled (r18): each pointer-doubling round over the tiny label and
+    edge frames ran as ~5 separate AQE stage-jobs (one per exchange
+    materialization plus re-planning between them), so ~half the
+    operator's wall was driver scheduling gap, not compute. Statically
+    narrow, a round is one checkpoint job + one probe job. Broadcast
+    stays off because the r17 A/B measured the broadcast-build job
+    latency exceeding these tiny shuffles. Plain AQE in its place was
+    within noise at local[4] and slower at local[32] (``graph_cc`` at
+    sf0.1: 7.55 s against 6.60 s median).
+
+    The confs are session-global for the scope's duration, so the loop
+    assumes one query at a time per session: a query run concurrently
+    on another thread of the same session would plan under them too."""
+    if not small:
         yield
         return
     with scoped_confs(
         spark,
         {
             "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": str(width),
+            # a fixed narrow width: the label frames are tiny
+            "spark.sql.shuffle.partitions": "4",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
         },
     ):
         yield
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame: neither
+    ``DataFrame.unpersist`` nor the registry's cache release reaches
+    the checkpointed RDD, so superseded rounds would stay live for the
+    rest of the session."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 class ComponentsNotConverged(RuntimeError):
@@ -107,29 +145,23 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    loop_width: int | None = None,
+    small: bool = False,
 ) -> DataFrame:
     """Components of an undirected graph given one-direction edge rows.
 
     Returns (node, component) with component = min node id reachable.
     Pure DataFrame iteration: per round every node takes the min of its
     own label, its neighbours' labels, and its label's label (pointer
-    doubling — O(log diameter) rounds). ``loop_width``: when the caller
-    proves the input tiny (``_tiny_loop_width``), the per-round jobs run
-    under ``_static_narrow_planning`` at that width; None keeps AQE.
+    doubling — O(log diameter) rounds). ``small``: the caller proved the
+    input small (``small_input``), so the per-round jobs run under
+    ``_static_narrow_planning``; False keeps AQE.
     """
-    # one inline explode, not a two-branch union (r17): the union
-    # referenced the (expensive) pair-graph subtree twice and raced
-    # duplicate copies of it before the persist filled
-    both = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
-    both = tracked_persist(both.distinct())
+    both = both_directions(edges, src, dst, "a", "b").distinct()
+    # under the gate, one partition: a cached frame keeps the width it
+    # was built at (AQE does not coalesce it), so every round re-read
+    # the session's shuffle width as tiny tasks (graph_cc at sf0.1 on a
+    # default 200-partition session: 12.6 s -> 5.3 s)
+    both = tracked_persist(both.coalesce(1) if small else both)
     # initialization folds the first propagation round in: every node
     # starts at min(self, min neighbour) — one groupBy instead of a full
     # join+double round
@@ -143,7 +175,7 @@ def connected_components(
     prev_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
     # the pair graph and init labels above materialized WITH AQE (the
     # heavy part); only the tiny per-round jobs run statically narrow
-    with _static_narrow_planning(edges.sparkSession, loop_width):
+    with _static_narrow_planning(edges.sparkSession, small):
         for _ in range(ITER_CAP):
             # Two-join round (opt round r17): the old shape materialized
             # a `stepped` frame (labels ⋈ neigh) and then pointer-
@@ -178,17 +210,21 @@ def connected_components(
                 .union(labels)
                 .groupBy("node")
                 .agg(F.min("component").alias("component"))
-                .localCheckpoint(eager=loop_width is None)
+                .localCheckpoint(eager=not small)
             )
             new_sum = updated.agg(
                 F.sum(F.col("component").cast("decimal(38,0)"))
             ).collect()[0][0]
+            # the probe materialized `updated`, so the previous round's
+            # checkpoint has no reader left
+            _free_checkpoint(labels)
             labels = updated
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
         else:
             both.unpersist()
+            _free_checkpoint(labels)
             raise ComponentsNotConverged(
                 f"connected_components did not converge within {ITER_CAP} rounds"
             )
@@ -204,10 +240,7 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(
-        pairs,
-        "doc_a",
-        "doc_b",
-        loop_width=_tiny_loop_width(spark, sf_dir, "documents"),
+        pairs, "doc_a", "doc_b", small=small_input(spark, sf_dir, "documents")
     )
     return comp.select(
         F.col("node").alias("doc_id"),

@@ -403,15 +403,15 @@ def semdedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``connected_components`` (O(log diameter) rounds over narrow id
     pairs, aggregate-only convergence probes)."""
     from etl_pipeline_example_spark.operators.cluster import (
-        _tiny_loop_width,
         connected_components,
+        small_input,
     )
 
     labeled = _semdedup_2l_labeled(spark, sf_dir)
     pairs = _semdedup_pairs(labeled).select("vec_a", "vec_b")
     comp = connected_components(
         pairs, "vec_a", "vec_b",
-        loop_width=_tiny_loop_width(spark, sf_dir, "embeddings"),
+        small=small_input(spark, sf_dir, "embeddings"),
     )
     return comp.select(
         F.col("node").alias("vec_id"),

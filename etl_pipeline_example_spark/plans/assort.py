@@ -35,13 +35,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.operators.cluster import both_directions, small_input
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
-from etl_pipeline_example_spark.plans.graph import (
-    _EDGES_SQL,
-    _degrees,
-    _edges,
-    _edges_broadcastable,
-)
+from etl_pipeline_example_spark.plans.graph import _EDGES_SQL, _degrees, _edges
 
 
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,19 +47,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dp = spark.sparkContext.defaultParallelism
     edges = _edges(spark, sf_dir)
     degrees = tracked_persist(_degrees(spark, edges))
-    # one inline explode, not a two-branch unionAll (r17): the union's
-    # two references raced duplicate edge builds before the cache filled
-    directed = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    directed = both_directions(edges, "u", "v", "src", "dst")
     dx = degrees.select(F.col("p").alias("src"), F.col("deg").alias("x"))
     dy = degrees.select(F.col("p").alias("dst"), F.col("deg").alias("y"))
-    if _edges_broadcastable(spark, sf_dir):
+    if small_input(spark, sf_dir, "lineitem"):
         # Both endpoint joins probe the |V|-sized degree table, which
         # the lineitem-size gate bounds the same way it bounds |E|
         # (guide §3.1): broadcasting it turns the two repartition +

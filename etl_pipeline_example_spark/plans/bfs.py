@@ -15,10 +15,10 @@ edge list and min-folds distances — but with the round count FIXED
 (K=3), so the plan is a bounded chain of joins/aggregates, never an
 unbounded iteration: the graphiter discipline (bounded rounds,
 aggregate-only convergence) applied to reachability. The edge set is
-IMPORTED from plans/graphiter (same `_co_edges` spine the certified
-cc/pagerank use — persisted, one build serves the rounds). Seeds are
-the 3 smallest node ids (TakeOrdered — the house top-k pattern, never
-a global sort).
+the co-order spine the certified cc/pagerank use (`plans/graph._edges`
+at graphiter's MIN_CO_ORDERS — persisted, one build serves the
+rounds). Seeds are the 3 smallest node ids (TakeOrdered — the house
+top-k pattern, never a global sort).
 
 Oracle: DuckDB WITH RECURSIVE bounded by ``d < K`` — the UNION
 dedupes (node, d) states and a final min-fold per node yields the
@@ -39,11 +39,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.plans.graph import _edges_broadcastable
-from etl_pipeline_example_spark.plans.graphiter import (
-    _EDGES2_SQL,
-    _co_edges,
-)
+from etl_pipeline_example_spark.operators.cluster import both_directions, small_input
+from etl_pipeline_example_spark.plans.graph import _edges
+from etl_pipeline_example_spark.plans.graphiter import MIN_CO_ORDERS, _EDGES2_SQL
 
 BFS_K = 3
 BFS_SEEDS = 3
@@ -52,22 +50,13 @@ BFS_SEEDS = 3
 def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(layer, n_nodes, sum_node): nodes first reached at each BFS
     depth 0..K from the 3 smallest node ids of the co-order graph."""
-    edges = _co_edges(spark, sf_dir)
-    # one inline explode, not a two-branch union (r17): the union's two
-    # references raced duplicate edge builds before the cache filled;
+    edges = _edges(spark, sf_dir, MIN_CO_ORDERS)
     # nodes derive from bidir (src covers both endpoints), cutting the
     # edge-frame references from four to K+1 reads of the filled cache
-    bidir = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    if _edges_broadcastable(spark, sf_dir):
+    bidir = both_directions(edges, "u", "v", "src", "dst")
+    if small_input(spark, sf_dir, "lineitem"):
         # tiny-frame BFS rounds: one partition beats 32 tasks of ~100-row
-        # partitions per round (the graph_cc r17 width fix); at scale the
+        # partitions per round (the r17 width fix); at scale the
         # gate fails and the cache's dp-wide layout is used unchanged
         bidir = bidir.coalesce(1)
     nodes = bidir.select(F.col("src").alias("node")).distinct()

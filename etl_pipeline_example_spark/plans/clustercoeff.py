@@ -33,13 +33,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.operators.cluster import small_input
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.plans.graph import (
     GRAPH_TRIANGLES_SQL,
     _EDGES_SQL,
     _degrees,
     _edges,
-    _edges_broadcastable,
     _triangles_from,
 )
 
@@ -57,7 +57,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
     degrees = tracked_persist(_degrees(spark, edges))
     tri = _triangles_from(
-        spark, edges, degrees, _edges_broadcastable(spark, sf_dir)
+        spark, edges, degrees, small_input(spark, sf_dir, "lineitem")
     )
     # Σ deg·(deg−1) = 2W accumulates in decimal; the halving happens in
     # the double rendering (exact: both engines halve the identical

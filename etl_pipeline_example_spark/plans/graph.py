@@ -40,22 +40,24 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.fsutil import dataset_bytes
+from etl_pipeline_example_spark.operators.cluster import small_input
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.sources.readers import read_table
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected distinct part-co-order edges as (u, v), u < v.
-    PERSISTED (tracked): the edge list is a self-join and every
-    consumer below reads it at least twice (degrees union, orientation,
-    wedge closure) — without the persist Spark re-runs the join per
-    consumer."""
+def _edges(spark: SparkSession, sf_dir: str, min_orders: int = 1) -> DataFrame:
+    """Undirected part-co-order edges as (u, v), u < v: the pairs
+    ordered together in at least ``min_orders`` distinct orders (1:
+    every distinct pair). PERSISTED (tracked): the edge list is a
+    self-join and every consumer reads it at least twice (degrees,
+    orientation, wedge closure, symmetrised adjacency, label loops) —
+    without the persist Spark re-runs the join per consumer."""
     dp = spark.sparkContext.defaultParallelism
-    # ONE dp-wide exchange on the order key serves the whole chain:
-    # partitioning by a subset of (l_orderkey, l_partkey) satisfies the
-    # distinct's clustering AND co-locates the self-join, so neither
-    # re-shuffles (and nothing runs at the session's default width)
+    # ONE dp-wide exchange on the order key serves the dedup AND the
+    # self-join: partitioning by a subset of (l_orderkey, l_partkey)
+    # satisfies the distinct's clustering and co-locates the join, so
+    # neither re-shuffles; the (u, v) group rides the u-subset exchange
+    # (nothing runs at the session's default width)
     li = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -71,7 +73,10 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("b.l_partkey").alias("v"),
         )
         .repartition(dp, "u")
-        .distinct()
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+        .filter(F.col("n_orders") >= min_orders)
+        .select("u", "v")
     )
 
 
@@ -122,33 +127,19 @@ SELECT degree, count(*) AS n_parts FROM degrees GROUP BY 1 ORDER BY degree
 """
 
 
-# Broadcast the (u, v) edge list into the wedge-closure join when it is
-# provably small.  The gate is the RAW INPUT SIZE of the lineitem scan
-# (``fsutil.dataset_bytes``: one driver-side call — no job, no
-# barrier): baskets are schema-bounded (≤ 7 lines/order → ≤ 21
-# pairs/order), so |E| is linear
-# in lineitem and a ≤ 256 MB lineitem bounds the two-long edge list to
-# a few tens of MB built — comfortable against the session's 8 g driver
-# and Spark's 8 GB broadcast cap.  The wedge side is Σ d_out² (>> |E|),
-# so broadcasting |E| removes the TWO big exchanges the plan otherwise
-# pays: the explicit wedge repartition AND the sort-merge shuffle of
-# the wedge fan-out (guide §3.1).  Size-adaptive, not a local[32]
-# constant: at 100 TB the gate fails and the plan falls back to the
-# shuffled shape unchanged.
-_BCAST_INPUT_BYTES = 256 * 1024 * 1024
-
-
-def _edges_broadcastable(spark: SparkSession, sf_dir: str) -> bool:
-    size = dataset_bytes(spark, f"{sf_dir}/lineitem.parquet")
-    return size is not None and size <= _BCAST_INPUT_BYTES
-
-
 def _triangles_from(
     spark: SparkSession, edges: DataFrame, degrees: DataFrame, bcast: bool
 ) -> DataFrame:
     """Triangle census over a PERSISTED+materialized edge list and its
     persisted degree table (shared with graph_clustering_coeff so the
-    expensive edge build runs once per query, not once per consumer)."""
+    expensive edge build runs once per query, not once per consumer).
+
+    ``bcast``: lineitem passed the small-input gate, which bounds |E| to
+    a few tens of MB, so the edge list's adjacency is broadcast into
+    the closure. The wedge side is Σ d_out² (>> |E|), so this removes
+    the two big exchanges the shuffled shape pays: the explicit wedge
+    repartition and the sort-merge shuffle of the wedge fan-out (guide
+    §3.1)."""
     dp = spark.sparkContext.defaultParallelism
     # orient each edge from the lower-(degree, id) endpoint to the higher
     du = degrees.select(
@@ -235,7 +226,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
     # persisted (|V| rows): consumed by both endpoint joins below
     degrees = tracked_persist(_degrees(spark, edges))
-    return _triangles_from(spark, edges, degrees, _edges_broadcastable(spark, sf_dir))
+    return _triangles_from(
+        spark, edges, degrees, small_input(spark, sf_dir, "lineitem")
+    )
 
 
 GRAPH_TRIANGLES_SQL = f"""

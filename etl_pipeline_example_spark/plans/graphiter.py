@@ -12,7 +12,9 @@ min-support idea as ``q_basket_pairs``).
 ``graph_cc`` — component census via the pointer-doubling min-label
 propagation already certified for near-dup clustering
 (operators/cluster.connected_components — imported, not forked):
-O(log diameter) rounds, each 3 bounded shuffles over (node, label).
+O(log diameter) rounds, each 2 joins + 1 aggregation over (node,
+label), run statically narrow when lineitem passes the small-input
+gate.
 
 ``graph_pagerank`` — 3 damped power-iteration steps computed ENTIRELY
 in integer rank units (U = 10^12 per node, damping 17/20):
@@ -49,47 +51,18 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.plans.graph import _edges_broadcastable
 from etl_pipeline_example_spark.operators.cluster import (
-    ITER_CAP,
-    ComponentsNotConverged,
+    both_directions,
+    connected_components,
+    small_input,
 )
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
-from etl_pipeline_example_spark.sources.readers import read_table
+from etl_pipeline_example_spark.plans.graph import _edges
 
 MIN_CO_ORDERS = 2
 RANK_UNIT = 10**12
 PR_ITERS = 3
 _DAMP_NUM, _DAMP_DEN = 17, 20  # 0.85 exactly, as a ratio
-
-
-def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected (u, v) part pairs co-ordered in ≥ MIN_CO_ORDERS
-    distinct orders, u < v. PERSISTED (tracked): both operators read
-    it repeatedly. One dp-wide exchange on the order key serves the
-    dedup + self-join; the (u, v) group rides the u-subset exchange."""
-    dp = spark.sparkContext.defaultParallelism
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition(dp, "l_orderkey")
-        .distinct()
-    )
-    return tracked_persist(
-        li.alias("a")
-        .join(li.alias("b"), "l_orderkey")
-        .filter(F.expr("a.l_partkey < b.l_partkey"))
-        .select(
-            F.expr("a.l_partkey").alias("u"),
-            F.expr("b.l_partkey").alias("v"),
-        )
-        .repartition(dp, "u")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= MIN_CO_ORDERS)
-        .select("u", "v")
-    )
-
 
 _EDGES2_SQL = f"""
 edges2 AS (
@@ -104,123 +77,17 @@ edges2 AS (
 """
 
 
-def _cc_min_label(edges: DataFrame, dp: int, bcast: bool = False) -> DataFrame:
-    """Min-label propagation with pointer doubling — the loop certified
-    in operators/cluster.connected_components (same semantics, same
-    convergence probe), re-expressed with ``repartition(dp, key)`` at
-    every chain head: the iterated frames are label tables, tiny
-    relative to the corpus, and letting each round fan out to the
-    session's default shuffle width is pure overhead (the
-    plans/graph.py width-bounding discipline)."""
-    # the two directions are disjoint (u < v), so symmetrization needs no
-    # distinct. ONE inline explode instead of a two-branch union: the
-    # union referenced the persisted edge build twice, and before its
-    # cache filled both branches raced duplicate copies of the
-    # lineitem self-join (profiler: two near-identical ~260 ms 67-task
-    # jobs in the query head). Same row multiset.
-    sym_rows = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
-                F.struct(F.col("v").alias("a"), F.col("u").alias("b")),
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
-    # Width follows the gate (r17, guide §2.5 inverted): when the edge
-    # list is broadcast-small the whole label loop is tiny frames, and
-    # the EXPLICIT dp-wide repartitions — added to bound vanilla
-    # 200-wide exchanges — are themselves the overhead (explicit width
-    # is exempt from AQE coalescing; profiler: 32-163 tasks of ~10-row
-    # partitions per round, ~450 ms/round of pure scheduling). Under
-    # the gate, coalesce the edge cache to one partition and let AQE
-    # coalesce each round's tiny aggregation exchange; at scale the
-    # gate fails and the dp-wide keyed shape runs unchanged.
-    both = tracked_persist(
-        sym_rows.coalesce(1) if bcast else sym_rows.repartition(dp, "b")
-    )
-    # NOTE (r17 optimization round): lazy localCheckpoint (eager=False,
-    # probe materializes the checkpoint in the same job) was tried and
-    # MEASURED SLOWER (graph_cc 7.7 s -> 10.7 s at sf0.1): the
-    # checkpoint RDD compiles outside adaptive execution.  Eager stays.
-    labels_src = both if bcast else both.repartition(dp, "a")
-    labels = (
-        labels_src.groupBy(F.col("a").alias("node"))
-        .agg(F.least(F.min("b"), F.col("a")).alias("component"))
-        .localCheckpoint()
-    )
-    prev_sum = labels.agg(
-        F.sum(F.col("component").cast("decimal(38,0)"))
-    ).collect()[0][0]
-    for _ in range(ITER_CAP):
-        # Under the size gate (bcast) every label-sized frame is
-        # BROADCAST into its join (guide §3.1): the per-round exchanges
-        # collapse to the single |E|-sized contribution fan-out, and the
-        # label tables never cross the wire.  Size-adaptive: at scale the
-        # gate fails and the repartition shape below runs unchanged.
-        #
-        # Round shape = 2 joins + 1 union-aggregation (the
-        # operators/cluster.connected_components restructure, r17): the
-        # old neigh→stepped→hop chain referenced the `stepped` subtree
-        # twice (probe side + broadcast hop build), so the full |E|
-        # neighbour aggregation materialized TWICE per round (profiler:
-        # two near-identical ~400 ms 131-task jobs every round).  Both
-        # contributions now derive from the PREVIOUS round's
-        # checkpointed labels — nothing recomputes; same monotone
-        # min-update, same fixed point (min reachable id); doubling on
-        # one-round-older labels can at worst add one cheap round.
-        lab = labels.repartition(dp, "node")
-        neigh_join = (
-            both.join(F.broadcast(labels), both.b == labels.node)
-            if bcast
-            else both.join(lab, both.b == lab.node)
-        )
-        contrib_n = neigh_join.select(F.col("a").alias("node"), "component")
-        hop = labels.select(
-            F.col("node").alias("c_node"), F.col("component").alias("c_comp")
-        )
-        doubled_join = (
-            labels.join(F.broadcast(hop), F.col("component") == F.col("c_node"))
-            if bcast
-            else labels.repartition(dp, "component").join(
-                hop.repartition(dp, "c_node"),
-                F.col("component") == F.col("c_node"),
-            )
-        )
-        contrib_p = doubled_join.select(
-            "node", F.col("c_comp").alias("component")
-        )
-        unioned = contrib_n.union(contrib_p).union(labels)
-        if not bcast:
-            unioned = unioned.repartition(dp, "node")
-        updated = (
-            unioned.groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
-        )
-        new_sum = updated.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        labels = updated
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise ComponentsNotConverged(
-            f"graph_cc did not converge within {ITER_CAP} rounds"
-        )
-    return labels
-
-
 def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(component, n_parts): connected-component census of the repeat-
     co-purchase graph; component = min part key reachable."""
-    dp = spark.sparkContext.defaultParallelism
-    comp = _cc_min_label(
-        _co_edges(spark, sf_dir), dp, bcast=_edges_broadcastable(spark, sf_dir)
+    comp = connected_components(
+        _edges(spark, sf_dir, MIN_CO_ORDERS),
+        "u",
+        "v",
+        small=small_input(spark, sf_dir, "lineitem"),
     )
     return (
-        comp.repartition(dp, "component")
-        .groupBy("component")
+        comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("n_parts"))
         .orderBy("component")
     )
@@ -251,22 +118,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(part, degree, rank_units): integer-unit damped PageRank after
     PR_ITERS power-iteration steps over the repeat-co-purchase graph."""
     dp = spark.sparkContext.defaultParallelism
-    edges = _co_edges(spark, sf_dir)
-    # symmetric adjacency + degrees: persisted, reused every iteration.
-    # One inline explode, not a two-branch unionAll — the union's two
-    # references raced duplicate edge builds before the cache filled
-    # (the _cc_min_label fix; same row multiset).
+    edges = _edges(spark, sf_dir, MIN_CO_ORDERS)
+    # symmetric adjacency + degrees: persisted, reused every iteration
     sym = tracked_persist(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("s"), F.col("v").alias("d")),
-                    F.struct(F.col("v").alias("s"), F.col("u").alias("d")),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .repartition(dp, "s")
+        both_directions(edges, "u", "v", "s", "d").repartition(dp, "s")
     )
     deg = tracked_persist(
         sym.groupBy(F.col("s").alias("p")).agg(

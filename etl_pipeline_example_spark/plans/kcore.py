@@ -35,9 +35,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.operators.cluster import both_directions, small_input
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
-from etl_pipeline_example_spark.plans.graph import _edges_broadcastable
-from etl_pipeline_example_spark.plans.graphiter import _EDGES2_SQL, _co_edges
+from etl_pipeline_example_spark.plans.graph import _edges
+from etl_pipeline_example_spark.plans.graphiter import MIN_CO_ORDERS, _EDGES2_SQL
 
 KCORE_K = 2
 KCORE_ROUNDS = 6
@@ -52,21 +53,11 @@ def graph_kcore2(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the budget, so the flag reads true at every graded scale
     and the bounded answer IS the exact core."""
     dp = spark.sparkContext.defaultParallelism
-    bcast = _edges_broadcastable(spark, sf_dir)
-    edges = _co_edges(spark, sf_dir)
-    # one inline explode, not a two-branch unionAll (r17): the union's
-    # two references raced duplicate edge builds before the cache filled
-    sym_rows = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("c"), F.col("v").alias("n")),
-                F.struct(F.col("v").alias("c"), F.col("u").alias("n")),
-            )
-        ).alias("e")
-    ).select("e.c", "e.n")
+    bcast = small_input(spark, sf_dir, "lineitem")
+    sym_rows = both_directions(_edges(spark, sf_dir, MIN_CO_ORDERS), "u", "v", "c", "n")
     # Under the gate the whole peel iterates tiny frames, and explicit
-    # dp-wide partitioning IS the per-round overhead (the graph_cc r17
-    # width fix: explicit width is exempt from AQE coalescing) — one
+    # dp-wide partitioning IS the per-round overhead (the r17 width
+    # fix: explicit width is exempt from AQE coalescing) — one
     # partition + AQE-coalesced aggregation exchanges; at scale the
     # keyed dp-wide shape runs unchanged.
     sym = tracked_persist(
@@ -91,7 +82,7 @@ def graph_kcore2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.broadcast(alive_df.select(F.col("node").alias("n"))), "n"
             )
         else:
-            # repartition(dp, key) at every chain head (the graphiter
+            # repartition(dp, key) at every chain head (the
             # width-bounding discipline): under a vanilla session each
             # of the two joins + the groupBy would otherwise inherit
             # the 200-partition shuffle default — 6 rounds × ~3

@@ -28,9 +28,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_example_spark.operators.cluster import both_directions, small_input
 from etl_pipeline_example_spark.operators.simcore import tracked_persist
-from etl_pipeline_example_spark.plans.graph import _edges_broadcastable
-from etl_pipeline_example_spark.plans.graphiter import _EDGES2_SQL, _co_edges
+from etl_pipeline_example_spark.plans.graph import _edges
+from etl_pipeline_example_spark.plans.graphiter import MIN_CO_ORDERS, _EDGES2_SQL
 
 NJ_TOP = 20
 
@@ -40,21 +41,12 @@ def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood Jaccard; jaccard = cn / (deg_u + deg_v − cn) as one
     boundary double division."""
     dp = spark.sparkContext.defaultParallelism
-    edges = _co_edges(spark, sf_dir)
-    # one inline explode, not a two-branch unionAll (r17): the union's
-    # two references raced duplicate edge builds before the cache filled
-    bcast = _edges_broadcastable(spark, sf_dir)
-    sym_rows = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("c"), F.col("v").alias("n")),
-                F.struct(F.col("v").alias("c"), F.col("u").alias("n")),
-            )
-        ).alias("e")
-    ).select("e.c", "e.n")
+    edges = _edges(spark, sf_dir, MIN_CO_ORDERS)
+    bcast = small_input(spark, sf_dir, "lineitem")
+    sym_rows = both_directions(edges, "u", "v", "c", "n")
     # under the gate the wedge pass is tiny frames — one partition +
-    # AQE-coalesced exchanges beat explicit dp width (the graph_cc r17
-    # width fix); at scale the keyed dp-wide shape runs unchanged
+    # AQE-coalesced exchanges beat explicit dp width (the r17 width
+    # fix); at scale the keyed dp-wide shape runs unchanged
     sym = tracked_persist(
         sym_rows.coalesce(1) if bcast else sym_rows.repartition(dp, "c")
     )

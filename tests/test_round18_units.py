@@ -130,77 +130,44 @@ def test_pq_round6_nonfinite_passthrough_and_wide_sum():
 
 def test_edges_broadcastable_sums_directory_parts(spark, tmp_path):
     """Round-17 ADVICE: a dataset laid out as a directory of part
-    files must gate on the SUM of the parts, not the dir inode size."""
-    from etl_pipeline_example_spark.plans.graph import (
-        _BCAST_INPUT_BYTES,
-        _edges_broadcastable,
+    files must gate on the SUM of the parts, not the dir inode size.
+    The graph keys gate on the one ``small_input`` check."""
+    from etl_pipeline_example_spark.operators.cluster import (
+        _SMALL_INPUT_BYTES,
+        small_input,
     )
 
     d = tmp_path / "dirset" / "lineitem.parquet"
     d.mkdir(parents=True)
-    half = _BCAST_INPUT_BYTES // 2 + 16
+    half = _SMALL_INPUT_BYTES // 2 + 16
     for name in ("part-0.parquet", "part-1.parquet"):
         (d / name).write_bytes(b"\0" * half)
-    assert not _edges_broadcastable(spark, str(tmp_path / "dirset"))
+    assert not small_input(spark, str(tmp_path / "dirset"), "lineitem")
     small = tmp_path / "small" / "lineitem.parquet"
     small.mkdir(parents=True)
     (small / "part-0.parquet").write_bytes(b"\0" * 1024)
-    assert _edges_broadcastable(spark, str(tmp_path / "small"))
-    assert not _edges_broadcastable(spark, str(tmp_path / "missing"))
-
-
-def test_cc_static_narrow_loop_labels_identical(spark):
-    """The gated static-narrow CC loop (r18) must produce labels
-    bit-identical to the AQE loop, and restore every scoped conf."""
-    from etl_pipeline_example_spark.operators.cluster import (
-        connected_components,
-    )
-
-    # two components incl. a chain that needs pointer doubling
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12)],
-        "src bigint, dst bigint",
-    )
-    before = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    aqe = sorted(
-        tuple(r) for r in connected_components(edges).collect()
-    )
-    narrow = sorted(
-        tuple(r)
-        for r in connected_components(edges, loop_width=4).collect()
-    )
-    assert narrow == aqe
-    assert narrow == [
-        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
-        (10, 10), (11, 10), (12, 10),
-    ]
-    after = {k: spark.conf.get(k) for k in before}
-    assert after == before
+    assert small_input(spark, str(tmp_path / "small"), "lineitem")
+    assert not small_input(spark, str(tmp_path / "missing"), "lineitem")
 
 
 def test_tiny_loop_width_gate(spark, tmp_path):
+    """The dedup keys gate on the same ``small_input`` check: a small
+    single file passes, a big directory of parts and a missing table
+    fail."""
     from etl_pipeline_example_spark.operators.cluster import (
-        _TINY_LOOP_INPUT_BYTES,
-        _TINY_LOOP_WIDTH,
-        _tiny_loop_width,
+        _SMALL_INPUT_BYTES,
+        small_input,
     )
 
     (tmp_path / "documents.parquet").write_bytes(b"\0" * 1024)
-    assert _tiny_loop_width(spark, str(tmp_path), "documents") == _TINY_LOOP_WIDTH
+    assert small_input(spark, str(tmp_path), "documents")
     big = tmp_path / "big" / "documents.parquet"
     big.mkdir(parents=True)
-    half = _TINY_LOOP_INPUT_BYTES // 2 + 16
+    half = _SMALL_INPUT_BYTES // 2 + 16
     (big / "part-0.parquet").write_bytes(b"\0" * half)
     (big / "part-1.parquet").write_bytes(b"\0" * half)
-    assert _tiny_loop_width(spark, str(tmp_path / "big"), "documents") is None
-    assert _tiny_loop_width(spark, str(tmp_path), "missing") is None
+    assert not small_input(spark, str(tmp_path / "big"), "documents")
+    assert not small_input(spark, str(tmp_path), "missing")
 
 
 def test_stream_moments_decimal_boundary(spark, tmp_path):
