@@ -114,18 +114,29 @@ _REGISTER_FIRST = [
 _DEMOTED = ("bpe_encode", "bpe_fertility")
 
 
+def _modules(name: str) -> list:
+    """The module ``name``, or every module of the package ``name`` in
+    sorted order."""
+    top = importlib.import_module(name)
+    if not hasattr(top, "__path__"):
+        return [top]
+    return [
+        importlib.import_module(f"{name}.{m}")
+        for m in sorted(m.name for m in pkgutil.iter_modules(top.__path__))
+    ]
+
+
 def discover(packages: Iterable[str]) -> dict[str, dict]:
     """Merge the module-level ``*_QUERIES`` and ``*_ORACLES`` dicts of every
-    module in ``packages`` (sorted module order; a key keeps its first
-    position) into ``{"_QUERIES": {...}, "_ORACLES": {...}}``.
+    module in ``packages`` (each a package or a single module; sorted
+    module order; a key keeps its first position) into
+    ``{"_QUERIES": {...}, "_ORACLES": {...}}``.
 
     Raises ``ValueError`` when one key is bound to two different values."""
     found: dict[str, dict] = {"_QUERIES": {}, "_ORACLES": {}}
     owner: dict[tuple[str, str], str] = {}
     for package in packages:
-        path = importlib.import_module(package).__path__
-        for name in sorted(m.name for m in pkgutil.iter_modules(path)):
-            module = importlib.import_module(f"{package}.{name}")
+        for module in _modules(package):
             for attr, table in vars(module).items():
                 suffix = attr[attr.rfind("_") :]
                 if suffix not in found or not isinstance(table, dict):

@@ -39,7 +39,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_example_spark.operators.cluster import both_directions, small_input
+from etl_pipeline_example_spark.operators.cluster import (
+    _free_checkpoint,
+    both_directions,
+    small_input,
+)
+from etl_pipeline_example_spark.operators.simcore import tracked_persist
 from etl_pipeline_example_spark.plans.graph import _edges
 from etl_pipeline_example_spark.plans.graphiter import MIN_CO_ORDERS, _EDGES2_SQL
 
@@ -78,12 +83,21 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
             frontier.join(bidir, frontier["node"] == bidir["src"])
             .select(F.col("dst").alias("node"), F.lit(r).alias("d"))
         )
-        dist = (
+        updated = (
             dist.unionByName(reached)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
         ).localCheckpoint()
+        # the eager checkpoint materialized round r, so round r-1's
+        # checkpoint has no reader left (the connected_components rule)
+        _free_checkpoint(dist)
+        dist = updated
         frontier = dist.filter(F.col("d") == r)
+    # the last round moves into a tracked cache, so the next key's start
+    # releases it; the checkpoint under the filled cache is freed now, so
+    # the returned frame is readable until then, not after
+    tracked_persist(dist).count()
+    _free_checkpoint(dist)
     return (
         dist.groupBy(F.col("d").alias("layer"))
         .agg(

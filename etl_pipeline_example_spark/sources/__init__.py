@@ -7,7 +7,7 @@ from etl_pipeline_example_spark.sources.quarantine import (
     quarantine_landed,
     read_jsonl_quarantine,
 )
-from etl_pipeline_example_spark.sources.tables import TESTDATA_TABLES, load_tables, register_views
+from etl_pipeline_example_spark.sources.tables import TESTDATA_TABLES
 
 __all__ = [
     "read_jsonl",
@@ -16,6 +16,4 @@ __all__ = [
     "read_table",
     "read_with_meta",
     "TESTDATA_TABLES",
-    "load_tables",
-    "register_views",
 ]

@@ -1,16 +1,7 @@
-"""Testdata catalog helpers.
-
-One place that knows the benchmark table set so queries and tests agree on
-names. ``register_views`` mirrors the reference job's temp-view pattern
-(reference: glue_jobs/example_job/job.py:40,48 ``createOrReplaceTempView``)
-so every query can be written in SQL against stable names.
-"""
+"""The testdata table names. The oracle connection
+(``tools/drivercheck.oracle_connection``) makes one DuckDB view per name."""
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-from etl_pipeline_example_spark.sources.readers import read_table
 
 TESTDATA_TABLES = [
     "region",
@@ -24,15 +15,3 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    names = names or TESTDATA_TABLES
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

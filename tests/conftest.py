@@ -54,15 +54,8 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.drivercheck import oracle_connection
 
-    con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.sql(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_SMOKE}/{name}.parquet'"
-        )
+    con = oracle_connection(SF_SMOKE)
     yield con
     con.close()

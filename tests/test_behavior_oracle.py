@@ -1,167 +1,35 @@
 """Behavioral event analytics vs DuckDB oracles at sf0.001, plus the
-hand-checkable funnel/retention contracts."""
+hand-checkable funnel/retention contracts. The sweep takes each ``plans``
+key the registry binds to an oracle, except the modules that have their
+own oracle sweep."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_example_spark.plans.abtest import ABTEST_ORACLES, ABTEST_QUERIES
-from etl_pipeline_example_spark.plans.attribution import (
-    ATTRIBUTION_ORACLES,
-    ATTRIBUTION_QUERIES,
-)
-from etl_pipeline_example_spark.plans.backlog import BACKLOG_ORACLES, BACKLOG_QUERIES
-from etl_pipeline_example_spark.plans.balance import BALANCE_ORACLES, BALANCE_QUERIES
-from etl_pipeline_example_spark.plans.bandjoin import BANDJOIN_ORACLES, BANDJOIN_QUERIES
-from etl_pipeline_example_spark.plans.basket import BASKET_ORACLES, BASKET_QUERIES
-from etl_pipeline_example_spark.plans.behavior import BEHAVIOR_ORACLES, BEHAVIOR_QUERIES
-from etl_pipeline_example_spark.plans.benford import BENFORD_ORACLES, BENFORD_QUERIES
-from etl_pipeline_example_spark.plans.bitmapdow import (
-    BITMAPDOW_ORACLES,
-    BITMAPDOW_QUERIES,
-)
-from etl_pipeline_example_spark.plans.bollinger import (
-    BOLLINGER_ORACLES,
-    BOLLINGER_QUERIES,
-)
-from etl_pipeline_example_spark.plans.cdc import CDC_ORACLES, CDC_QUERIES
-from etl_pipeline_example_spark.plans.checksum import CHECKSUM_ORACLES, CHECKSUM_QUERIES
-from etl_pipeline_example_spark.plans.cohort import COHORT_ORACLES, COHORT_QUERIES
-from etl_pipeline_example_spark.plans.concentration import (
-    CONCENTRATION_ORACLES,
-    CONCENTRATION_QUERIES,
-)
-from etl_pipeline_example_spark.plans.concurrency import (
-    CONCURRENCY_ORACLES,
-    CONCURRENCY_QUERIES,
-)
-from etl_pipeline_example_spark.plans.decay import DECAY_ORACLES, DECAY_QUERIES
-from etl_pipeline_example_spark.plans.decile import DECILE_ORACLES, DECILE_QUERIES
-from etl_pipeline_example_spark.plans.dimlift import DIMLIFT_ORACLES, DIMLIFT_QUERIES
-from etl_pipeline_example_spark.plans.distinctcube import (
-    DISTINCTCUBE_ORACLES,
-    DISTINCTCUBE_QUERIES,
-)
-from etl_pipeline_example_spark.plans.diversity import (
-    DIVERSITY_ORACLES,
-    DIVERSITY_QUERIES,
-)
-from etl_pipeline_example_spark.plans.drawdown import DRAWDOWN_ORACLES, DRAWDOWN_QUERIES
-from etl_pipeline_example_spark.plans.drift import DRIFT_ORACLES, DRIFT_QUERIES
-from etl_pipeline_example_spark.plans.engagement import (
-    ENGAGEMENT_ORACLES,
-    ENGAGEMENT_QUERIES,
-)
-from etl_pipeline_example_spark.plans.equidepth import (
-    EQUIDEPTH_ORACLES,
-    EQUIDEPTH_QUERIES,
-)
-from etl_pipeline_example_spark.plans.fifo import FIFO_ORACLES, FIFO_QUERIES
-from etl_pipeline_example_spark.plans.frames import FRAMES_ORACLES, FRAMES_QUERIES
-from etl_pipeline_example_spark.plans.freshness import (
-    FRESHNESS_ORACLES,
-    FRESHNESS_QUERIES,
-)
-from etl_pipeline_example_spark.plans.funcdep import FUNCDEP_ORACLES, FUNCDEP_QUERIES
-from etl_pipeline_example_spark.plans.graph import GRAPH_ORACLES, GRAPH_QUERIES
-from etl_pipeline_example_spark.plans.graphiter import (
-    GRAPHITER_ORACLES,
-    GRAPHITER_QUERIES,
-)
-from etl_pipeline_example_spark.plans.grouppct import GROUPPCT_ORACLES, GROUPPCT_QUERIES
-from etl_pipeline_example_spark.plans.groupreg import GROUPREG_ORACLES, GROUPREG_QUERIES
-from etl_pipeline_example_spark.plans.growth import GROWTH_ORACLES, GROWTH_QUERIES
-from etl_pipeline_example_spark.plans.hhi import HHI_ORACLES, HHI_QUERIES
-from etl_pipeline_example_spark.plans.interp import INTERP_ORACLES, INTERP_QUERIES
-from etl_pipeline_example_spark.plans.intervals import (
-    INTERVALS_ORACLES,
-    INTERVALS_QUERIES,
-)
-from etl_pipeline_example_spark.plans.iqr import IQR_ORACLES, IQR_QUERIES
-from etl_pipeline_example_spark.plans.latest import LATEST_ORACLES, LATEST_QUERIES
-from etl_pipeline_example_spark.plans.linkpred import LINKPRED_ORACLES, LINKPRED_QUERIES
-from etl_pipeline_example_spark.plans.logistics import (
-    LOGISTICS_ORACLES,
-    LOGISTICS_QUERIES,
-)
-from etl_pipeline_example_spark.plans.modeagg import MODEAGG_ORACLES, MODEAGG_QUERIES
-from etl_pipeline_example_spark.plans.nullsafe import NULLSAFE_ORACLES, NULLSAFE_QUERIES
-from etl_pipeline_example_spark.plans.numcorr import NUMCORR_ORACLES, NUMCORR_QUERIES
-from etl_pipeline_example_spark.plans.ohlc import OHLC_ORACLES, OHLC_QUERIES
-from etl_pipeline_example_spark.plans.ordergap import ORDERGAP_ORACLES, ORDERGAP_QUERIES
-from etl_pipeline_example_spark.plans.partialagg import (
-    PARTIALAGG_ORACLES,
-    PARTIALAGG_QUERIES,
-)
-from etl_pipeline_example_spark.plans.patterns import PATTERN_ORACLES, PATTERN_QUERIES
-from etl_pipeline_example_spark.plans.pkaudit import PKAUDIT_ORACLES, PKAUDIT_QUERIES
-from etl_pipeline_example_spark.plans.quantiles import (
-    QUANTILES_ORACLES,
-    QUANTILES_QUERIES,
-)
-from etl_pipeline_example_spark.plans.rangejoin import (
-    RANGEJOIN_ORACLES,
-    RANGEJOIN_QUERIES,
-)
-from etl_pipeline_example_spark.plans.rankfamily import (
-    RANKFAMILY_ORACLES,
-    RANKFAMILY_QUERIES,
-)
-from etl_pipeline_example_spark.plans.recon import RECON_ORACLES, RECON_QUERIES
-from etl_pipeline_example_spark.plans.referential import (
-    REFERENTIAL_ORACLES,
-    REFERENTIAL_QUERIES,
-)
-from etl_pipeline_example_spark.plans.rolling import ROLLING_ORACLES, ROLLING_QUERIES
-from etl_pipeline_example_spark.plans.rollmed import ROLLMED_ORACLES, ROLLMED_QUERIES
-from etl_pipeline_example_spark.plans.saltedagg import (
-    SALTEDAGG_ORACLES,
-    SALTEDAGG_QUERIES,
-)
-from etl_pipeline_example_spark.plans.scd2 import SCD2_ORACLES, SCD2_QUERIES
-from etl_pipeline_example_spark.plans.scd2asof import SCD2ASOF_ORACLES, SCD2ASOF_QUERIES
-from etl_pipeline_example_spark.plans.seasonal import SEASONAL_ORACLES, SEASONAL_QUERIES
-from etl_pipeline_example_spark.plans.segments import SEGMENTS_ORACLES, SEGMENTS_QUERIES
-from etl_pipeline_example_spark.plans.seqgaps import SEQGAPS_ORACLES, SEQGAPS_QUERIES
-from etl_pipeline_example_spark.plans.skyline import SKYLINE_ORACLES, SKYLINE_QUERIES
-from etl_pipeline_example_spark.plans.spine import SPINE_ORACLES, SPINE_QUERIES
-from etl_pipeline_example_spark.plans.sqlfacade import (
-    SQLFACADE_ORACLES,
-    SQLFACADE_QUERIES,
-)
-from etl_pipeline_example_spark.plans.streaks import STREAKS_ORACLES, STREAKS_QUERIES
-from etl_pipeline_example_spark.plans.timerollup import (
-    TIMEROLLUP_ORACLES,
-    TIMEROLLUP_QUERIES,
-)
-from etl_pipeline_example_spark.plans.transitions import (
-    TRANSITIONS_ORACLES,
-    TRANSITIONS_QUERIES,
-)
-from etl_pipeline_example_spark.plans.volumez import VOLUMEZ_ORACLES, VOLUMEZ_QUERIES
-from etl_pipeline_example_spark.plans.wilson import WILSON_ORACLES, WILSON_QUERIES
-from etl_pipeline_example_spark.plans.wmedian import WMEDIAN_ORACLES, WMEDIAN_QUERIES
-from etl_pipeline_example_spark.plans.yoy import YOY_ORACLES, YOY_QUERIES
+from __spark_entry__ import discover
+from tools.drivercheck import oracle_mismatch
 
-from tests.oracle_util import assert_matches_oracle
+_PLANS = "etl_pipeline_example_spark.plans"
+# modules with their own oracle sweep
+_OWN_SWEEP = ("queries", "relational", "tpch_extra", "scale", "parity")
+
+_FOUND = discover([_PLANS])
+_SKIP = discover([f"{_PLANS}.{m}" for m in _OWN_SWEEP])["_QUERIES"]
+ALL_O = _FOUND["_ORACLES"]
+ALL_Q = {k: q for k, q in _FOUND["_QUERIES"].items() if k in ALL_O and k not in _SKIP}
 
 
-@pytest.mark.parametrize("name", sorted({**BEHAVIOR_QUERIES, **PATTERN_QUERIES, **BASKET_QUERIES, **SCD2_QUERIES,
-    **RECON_QUERIES, **SEASONAL_QUERIES, **ENGAGEMENT_QUERIES, **DRIFT_QUERIES,
-    **LOGISTICS_QUERIES, **CONCENTRATION_QUERIES, **RANKFAMILY_QUERIES, **LATEST_QUERIES, **FRAMES_QUERIES, **COHORT_QUERIES, **QUANTILES_QUERIES, **SQLFACADE_QUERIES, **REFERENTIAL_QUERIES, **RANGEJOIN_QUERIES, **IQR_QUERIES, **WMEDIAN_QUERIES, **PKAUDIT_QUERIES, **SPINE_QUERIES, **INTERP_QUERIES, **CHECKSUM_QUERIES, **GRAPH_QUERIES, **WILSON_QUERIES, **DECAY_QUERIES, **BACKLOG_QUERIES, **DRAWDOWN_QUERIES, **BANDJOIN_QUERIES, **EQUIDEPTH_QUERIES, **HHI_QUERIES, **GRAPHITER_QUERIES, **ROLLMED_QUERIES, **FIFO_QUERIES, **BITMAPDOW_QUERIES, **FUNCDEP_QUERIES, **OHLC_QUERIES, **BOLLINGER_QUERIES, **LINKPRED_QUERIES, **CONCURRENCY_QUERIES, **SEQGAPS_QUERIES, **INTERVALS_QUERIES, **GROWTH_QUERIES, **BENFORD_QUERIES, **SALTEDAGG_QUERIES, **ABTEST_QUERIES, **ROLLING_QUERIES, **SCD2ASOF_QUERIES, **BALANCE_QUERIES, **DIMLIFT_QUERIES, **ATTRIBUTION_QUERIES, **TIMEROLLUP_QUERIES, **CDC_QUERIES, **PARTIALAGG_QUERIES, **ORDERGAP_QUERIES, **YOY_QUERIES, **SKYLINE_QUERIES, **MODEAGG_QUERIES, **SEGMENTS_QUERIES, **FRESHNESS_QUERIES, **DECILE_QUERIES, **STREAKS_QUERIES, **DISTINCTCUBE_QUERIES, **GROUPPCT_QUERIES, **NUMCORR_QUERIES, **TRANSITIONS_QUERIES, **GROUPREG_QUERIES, **DIVERSITY_QUERIES, **VOLUMEZ_QUERIES, **NULLSAFE_QUERIES}))
+@pytest.mark.parametrize("name", sorted(ALL_Q))
 def test_behavior_matches_oracle(spark, duck, sf_dir, name):
-    qs = {**BEHAVIOR_QUERIES, **PATTERN_QUERIES, **BASKET_QUERIES, **SCD2_QUERIES,
-    **RECON_QUERIES, **SEASONAL_QUERIES, **ENGAGEMENT_QUERIES, **DRIFT_QUERIES,
-    **LOGISTICS_QUERIES, **CONCENTRATION_QUERIES, **RANKFAMILY_QUERIES, **LATEST_QUERIES, **FRAMES_QUERIES, **COHORT_QUERIES, **QUANTILES_QUERIES, **SQLFACADE_QUERIES, **REFERENTIAL_QUERIES, **RANGEJOIN_QUERIES, **IQR_QUERIES, **WMEDIAN_QUERIES, **PKAUDIT_QUERIES, **SPINE_QUERIES, **INTERP_QUERIES, **CHECKSUM_QUERIES, **GRAPH_QUERIES, **WILSON_QUERIES, **DECAY_QUERIES, **BACKLOG_QUERIES, **DRAWDOWN_QUERIES, **BANDJOIN_QUERIES, **EQUIDEPTH_QUERIES, **HHI_QUERIES, **GRAPHITER_QUERIES, **ROLLMED_QUERIES, **FIFO_QUERIES, **BITMAPDOW_QUERIES, **FUNCDEP_QUERIES, **OHLC_QUERIES, **BOLLINGER_QUERIES, **LINKPRED_QUERIES, **CONCURRENCY_QUERIES, **SEQGAPS_QUERIES, **INTERVALS_QUERIES, **GROWTH_QUERIES, **BENFORD_QUERIES, **SALTEDAGG_QUERIES, **ABTEST_QUERIES, **ROLLING_QUERIES, **SCD2ASOF_QUERIES, **BALANCE_QUERIES, **DIMLIFT_QUERIES, **ATTRIBUTION_QUERIES, **TIMEROLLUP_QUERIES, **CDC_QUERIES, **PARTIALAGG_QUERIES, **ORDERGAP_QUERIES, **YOY_QUERIES, **SKYLINE_QUERIES, **MODEAGG_QUERIES, **SEGMENTS_QUERIES, **FRESHNESS_QUERIES, **DECILE_QUERIES, **STREAKS_QUERIES, **DISTINCTCUBE_QUERIES, **GROUPPCT_QUERIES, **NUMCORR_QUERIES, **TRANSITIONS_QUERIES, **GROUPREG_QUERIES, **DIVERSITY_QUERIES, **VOLUMEZ_QUERIES, **NULLSAFE_QUERIES}
-    os = {**BEHAVIOR_ORACLES, **PATTERN_ORACLES, **BASKET_ORACLES, **SCD2_ORACLES,
-    **RECON_ORACLES, **SEASONAL_ORACLES, **ENGAGEMENT_ORACLES, **DRIFT_ORACLES,
-    **LOGISTICS_ORACLES, **CONCENTRATION_ORACLES, **RANKFAMILY_ORACLES, **LATEST_ORACLES, **FRAMES_ORACLES, **COHORT_ORACLES, **QUANTILES_ORACLES, **SQLFACADE_ORACLES, **REFERENTIAL_ORACLES, **RANGEJOIN_ORACLES, **IQR_ORACLES, **WMEDIAN_ORACLES, **PKAUDIT_ORACLES, **SPINE_ORACLES, **INTERP_ORACLES, **CHECKSUM_ORACLES, **GRAPH_ORACLES, **WILSON_ORACLES, **DECAY_ORACLES, **BACKLOG_ORACLES, **DRAWDOWN_ORACLES, **BANDJOIN_ORACLES, **EQUIDEPTH_ORACLES, **HHI_ORACLES, **GRAPHITER_ORACLES, **ROLLMED_ORACLES, **FIFO_ORACLES, **BITMAPDOW_ORACLES, **FUNCDEP_ORACLES, **OHLC_ORACLES, **BOLLINGER_ORACLES, **LINKPRED_ORACLES, **CONCURRENCY_ORACLES, **SEQGAPS_ORACLES, **INTERVALS_ORACLES, **GROWTH_ORACLES, **BENFORD_ORACLES, **SALTEDAGG_ORACLES, **ABTEST_ORACLES, **ROLLING_ORACLES, **SCD2ASOF_ORACLES, **BALANCE_ORACLES, **DIMLIFT_ORACLES, **ATTRIBUTION_ORACLES, **TIMEROLLUP_ORACLES, **CDC_ORACLES, **PARTIALAGG_ORACLES, **ORDERGAP_ORACLES, **YOY_ORACLES, **SKYLINE_ORACLES, **MODEAGG_ORACLES, **SEGMENTS_ORACLES, **FRESHNESS_ORACLES, **DECILE_ORACLES, **STREAKS_ORACLES, **DISTINCTCUBE_ORACLES, **GROUPPCT_ORACLES, **NUMCORR_ORACLES, **TRANSITIONS_ORACLES, **GROUPREG_ORACLES, **DIVERSITY_ORACLES, **VOLUMEZ_ORACLES, **NULLSAFE_ORACLES}
-    assert_matches_oracle(qs[name](spark, sf_dir), duck, os[name])
+    assert oracle_mismatch(ALL_Q[name](spark, sf_dir), duck, ALL_O[name]) is None
 
 
 def test_funnel_counts_are_monotone(spark, sf_dir):
+    from etl_pipeline_example_spark.plans.behavior import q_window_funnel
+
     rows = sorted(
-        BEHAVIOR_QUERIES["q_window_funnel"](spark, sf_dir).collect(),
+        q_window_funnel(spark, sf_dir).collect(),
         key=lambda r: r["step"],
     )
     counts = [r["n_users"] for r in rows]

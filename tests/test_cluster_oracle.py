@@ -17,7 +17,7 @@ from etl_pipeline_example_spark.operators.cluster import (
 )
 from etl_pipeline_example_spark.operators.simcore import release_similarity_caches
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 def test_connected_components_synthetic(spark):
@@ -35,7 +35,7 @@ def test_connected_components_synthetic(spark):
 @pytest.mark.parametrize("name", sorted(CLUSTER_QUERIES))
 def test_cluster_matches_oracle(spark, duck, sf_dir, name):
     df = CLUSTER_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, CLUSTER_ORACLES[name])
+    assert oracle_mismatch(df, duck, CLUSTER_ORACLES[name]) is None
 
 
 def _chain(spark):

@@ -7,13 +7,13 @@ import pytest
 
 from etl_pipeline_example_spark.operators.corpus import CORPUS_ORACLES, CORPUS_QUERIES
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 @pytest.mark.parametrize("name", sorted(CORPUS_QUERIES))
 def test_corpus_matches_oracle(spark, duck, sf_dir, name):
     df = CORPUS_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, CORPUS_ORACLES[name])
+    assert oracle_mismatch(df, duck, CORPUS_ORACLES[name]) is None
 
 
 def test_pii_scrub_matches_real_pii(spark, duck):
@@ -55,7 +55,7 @@ def test_pii_scrub_matches_real_pii(spark, duck):
         + ", ".join(f"({i}, '{t}')" for i, t in rows)
         + ") AS t(doc_id, text)"
     )
-    assert_matches_oracle(out, con, PII_SCRUB_SQL)
+    assert oracle_mismatch(out, con, PII_SCRUB_SQL) is None
     con.close()
 
 

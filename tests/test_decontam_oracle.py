@@ -13,7 +13,7 @@ from etl_pipeline_example_spark.operators.decontam_fuzzy import (
     DECONTAM_FUZZY_QUERIES,
 )
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 _ALL_Q = {**DECONTAM_QUERIES, **DECONTAM_FUZZY_QUERIES}
 _ALL_O = {**DECONTAM_ORACLES, **DECONTAM_FUZZY_ORACLES}
@@ -22,7 +22,7 @@ _ALL_O = {**DECONTAM_ORACLES, **DECONTAM_FUZZY_ORACLES}
 @pytest.mark.parametrize("name", sorted(_ALL_Q))
 def test_decontam_matches_oracle(spark, duck, sf_dir, name):
     df = _ALL_Q[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, _ALL_O[name])
+    assert oracle_mismatch(df, duck, _ALL_O[name]) is None
 
 
 def test_contamination_minhash_flags_are_cross_slice_and_ranked(spark, sf_dir):
@@ -79,5 +79,5 @@ def test_contamination_flags_known_overlap(spark):
 
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp}/documents.parquet'")
-    assert_matches_oracle(contamination_ngram(spark, tmp), con, CONTAMINATION_SQL)
+    assert oracle_mismatch(contamination_ngram(spark, tmp), con, CONTAMINATION_SQL) is None
     con.close()

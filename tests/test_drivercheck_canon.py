@@ -1,4 +1,5 @@
-"""Unit tests for the drivercheck type canonicalizer.
+"""Unit tests for the drivercheck type canonicalizer and its oracle
+comparator.
 
 The canonicalizer is the local stand-in for the driver's Arrow-level
 hash compare; a traceback here means the tool reports nothing instead of
@@ -143,3 +144,29 @@ def test_decimal_values_compare_exactly():
     assert a == lo and b == hi
     assert not values_equal(a, b)
     assert values_equal(a, Decimal(2**53))
+
+
+def test_oracle_mismatch_flags_decimal_sums(spark):
+    """The r18 form of the moments sums, ``decimal(38,0)`` on both sides,
+    fails the one comparator on its type, before any value is compared.
+    The allowed form, the sum rendered as a string, passes when equal
+    and fails on the last digit past 2^53, where a float compare sees
+    equal values (the exact ``Decimal`` compare itself is pinned by
+    ``test_decimal_values_compare_exactly``)."""
+    import duckdb
+
+    from tools.drivercheck import oracle_mismatch
+
+    n = 2**53
+    assert float(n) == float(n + 1)
+    con = duckdb.connect()
+    dec = f"SELECT CAST({n} AS DECIMAL(38,0)) AS s"
+    for oracle in (dec, f"SELECT CAST({n + 1} AS DECIMAL(38,0)) AS s"):
+        why = oracle_mismatch(spark.sql(dec), con, oracle)
+        assert why == "output types: s: spark=decimal(38,0) not in ALLOWED", why
+
+    as_string = f"SELECT CAST({n} AS STRING) AS s"
+    assert oracle_mismatch(spark.sql(as_string), con, as_string) is None
+    why = oracle_mismatch(spark.sql(as_string), con, f"SELECT CAST({n + 1} AS VARCHAR) AS s")
+    assert why is not None and why.startswith("row 0"), why
+    con.close()

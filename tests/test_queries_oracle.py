@@ -8,10 +8,10 @@ import pytest
 
 from etl_pipeline_example_spark.plans.queries import ANALYTIC_ORACLES, ANALYTIC_QUERIES
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 @pytest.mark.parametrize("name", sorted(ANALYTIC_QUERIES))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     df = ANALYTIC_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, ANALYTIC_ORACLES[name])
+    assert oracle_mismatch(df, duck, ANALYTIC_ORACLES[name]) is None

@@ -10,10 +10,10 @@ from etl_pipeline_example_spark.plans.relational import (
     RELATIONAL_QUERIES,
 )
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 @pytest.mark.parametrize("name", sorted(RELATIONAL_QUERIES))
 def test_relational_matches_oracle(spark, duck, sf_dir, name):
     df = RELATIONAL_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, RELATIONAL_ORACLES[name])
+    assert oracle_mismatch(df, duck, RELATIONAL_ORACLES[name]) is None

@@ -159,10 +159,10 @@ def test_jpegprog_operator_matches_oracle(spark, duck, sf_dir):
         JPEGPROG_ORACLES,
         multimodal_decode_jpeg2,
     )
-    from tests.oracle_util import assert_matches_oracle
+    from tools.drivercheck import oracle_mismatch
 
     df = multimodal_decode_jpeg2(spark, sf_dir)
-    assert_matches_oracle(df, duck, JPEGPROG_ORACLES["multimodal_decode_jpeg2"])
+    assert oracle_mismatch(df, duck, JPEGPROG_ORACLES["multimodal_decode_jpeg2"]) is None
 
 
 def _md5h(s: str) -> int:
@@ -383,12 +383,12 @@ def test_round16_batch_ops_match_oracle(spark, duck, sf_dir):
         SHUFFLEAUDIT_QUERIES,
     )
     from etl_pipeline_example_spark.operators.tfcos import TFCOS_ORACLES, TFCOS_QUERIES
-    from tests.oracle_util import assert_matches_oracle
+    from tools.drivercheck import oracle_mismatch
 
     q = {**KMV_QUERIES, **BURST_QUERIES, **TFCOS_QUERIES, **SHUFFLEAUDIT_QUERIES}
     o = {**KMV_ORACLES, **BURST_ORACLES, **TFCOS_ORACLES, **SHUFFLEAUDIT_ORACLES}
     for name in sorted(q):
-        assert_matches_oracle(q[name](spark, sf_dir), duck, o[name])
+        assert oracle_mismatch(q[name](spark, sf_dir), duck, o[name]) is None
 
 
 def test_bm25_prf_hand_computed_expansion(spark, tmp_path):

@@ -8,10 +8,10 @@ import pytest
 
 from etl_pipeline_example_spark.plans.scale import SCALE_ORACLES, SCALE_QUERIES
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 @pytest.mark.parametrize("name", sorted(SCALE_QUERIES))
 def test_scale_matches_oracle(spark, duck, sf_dir, name):
     df = SCALE_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, SCALE_ORACLES[name])
+    assert oracle_mismatch(df, duck, SCALE_ORACLES[name]) is None

@@ -30,27 +30,27 @@ from etl_pipeline_example_spark.streaming.slidingwin import (
 from etl_pipeline_example_spark.streaming.stateful import STATEFUL_ORACLES, STATEFUL_QUERIES
 from etl_pipeline_example_spark.streaming.topk import TOPK_ORACLES, TOPK_QUERIES
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 def test_stream_events_matches_batch_oracle(spark, duck, sf_dir):
     df = STREAM_QUERIES["stream_events"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_events"])
+    assert oracle_mismatch(df, duck, STREAM_ORACLES["stream_events"]) is None
 
 
 def test_stream_dedup_matches_batch_oracle(spark, duck, sf_dir):
     df = STREAM_QUERIES["stream_dedup"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_dedup"])
+    assert oracle_mismatch(df, duck, STREAM_ORACLES["stream_dedup"]) is None
 
 
 def test_stream_sessions_matches_batch_oracle(spark, duck, sf_dir):
     df = STREAM_QUERIES["stream_sessions"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STREAM_ORACLES["stream_sessions"])
+    assert oracle_mismatch(df, duck, STREAM_ORACLES["stream_sessions"]) is None
 
 
 def test_stream_user_stats_matches_batch_oracle(spark, duck, sf_dir):
     df = STATEFUL_QUERIES["stream_user_stats"](spark, sf_dir)
-    assert_matches_oracle(df, duck, STATEFUL_ORACLES["stream_user_stats"])
+    assert oracle_mismatch(df, duck, STATEFUL_ORACLES["stream_user_stats"]) is None
 
 
 def test_stream_c4_gate_matches_batch_keep_set(spark, duck, sf_dir):
@@ -61,9 +61,8 @@ def test_stream_c4_gate_matches_batch_keep_set(spark, duck, sf_dir):
         STREAM_C4_GATE_SQL,
         stream_c4_gate,
     )
-    from tests.oracle_util import assert_matches_oracle
 
-    assert_matches_oracle(stream_c4_gate(spark, sf_dir), duck, STREAM_C4_GATE_SQL)
+    assert oracle_mismatch(stream_c4_gate(spark, sf_dir), duck, STREAM_C4_GATE_SQL) is None
 
 
 def test_stream_shard_feed_matches_batch_prefix_sum(spark, duck, sf_dir):
@@ -73,7 +72,7 @@ def test_stream_shard_feed_matches_batch_prefix_sum(spark, duck, sf_dir):
     from etl_pipeline_example_spark.streaming.shardfeed import stream_shard_feed
 
     df = stream_shard_feed(spark, sf_dir)
-    assert_matches_oracle(df, duck, SHARDFEED_ORACLES["stream_shard_feed"])
+    assert oracle_mismatch(df, duck, SHARDFEED_ORACLES["stream_shard_feed"]) is None
 
 
 def test_stream_neardup_gate_matches_batch_history_half(spark, duck, sf_dir):
@@ -83,7 +82,7 @@ def test_stream_neardup_gate_matches_batch_history_half(spark, duck, sf_dir):
     from etl_pipeline_example_spark.streaming.neargate import stream_neardup_gate
 
     df = stream_neardup_gate(spark, sf_dir)
-    assert_matches_oracle(df, duck, NEARGATE_ORACLES["stream_neardup_gate"])
+    assert oracle_mismatch(df, duck, NEARGATE_ORACLES["stream_neardup_gate"]) is None
 
 
 def test_stream_neardup_gate_indexed_entry_matches_oracle(spark, duck, sf_dir):
@@ -97,12 +96,12 @@ def test_stream_neardup_gate_indexed_entry_matches_oracle(spark, duck, sf_dir):
     )
 
     df = stream_neardup_gate_indexed_entry(spark, sf_dir)
-    assert_matches_oracle(df, duck, NEARGATE_INDEX_ORACLES["stream_neardup_gate_indexed"])
+    assert oracle_mismatch(df, duck, NEARGATE_INDEX_ORACLES["stream_neardup_gate_indexed"]) is None
 
 
 def test_stream_dq_quarantine_matches_batch(spark, duck, sf_dir):
     df = DQGATE_QUERIES["stream_dq_quarantine"](spark, sf_dir)
-    assert_matches_oracle(df, duck, DQGATE_ORACLES["stream_dq_quarantine"])
+    assert oracle_mismatch(df, duck, DQGATE_ORACLES["stream_dq_quarantine"]) is None
 
 
 def test_stream_dq_quarantine_flags_every_violated_rule(spark, tmp_path):
@@ -232,12 +231,12 @@ def test_stream_versioned_sink_commits_versions_exactly_once(
 
 def test_stream_sliding_matches_batch_oracle(spark, duck, sf_dir):
     df = SLIDINGWIN_QUERIES["stream_sliding"](spark, sf_dir)
-    assert_matches_oracle(df, duck, SLIDINGWIN_ORACLES["stream_sliding"])
+    assert oracle_mismatch(df, duck, SLIDINGWIN_ORACLES["stream_sliding"]) is None
 
 
 def test_stream_topk_matches_batch_oracle(spark, duck, sf_dir):
     df = TOPK_QUERIES["stream_topk"](spark, sf_dir)
-    assert_matches_oracle(df, duck, TOPK_ORACLES["stream_topk"])
+    assert oracle_mismatch(df, duck, TOPK_ORACLES["stream_topk"]) is None
 
 
 def test_stream_sliding_double_counts_each_event(spark, tmp_path):
@@ -274,12 +273,12 @@ def test_stream_sliding_double_counts_each_event(spark, tmp_path):
 
 def test_stream_ohlc_matches_batch_oracle(spark, duck, sf_dir):
     df = OHLC_STREAM_QUERIES["stream_ohlc"](spark, sf_dir)
-    assert_matches_oracle(df, duck, OHLC_STREAM_ORACLES["stream_ohlc"])
+    assert oracle_mismatch(df, duck, OHLC_STREAM_ORACLES["stream_ohlc"]) is None
 
 
 def test_stream_first_seen_matches_batch_oracle(spark, duck, sf_dir):
     df = FIRSTSEEN_STREAM_QUERIES["stream_first_seen"](spark, sf_dir)
-    assert_matches_oracle(df, duck, FIRSTSEEN_STREAM_ORACLES["stream_first_seen"])
+    assert oracle_mismatch(df, duck, FIRSTSEEN_STREAM_ORACLES["stream_first_seen"]) is None
 
 
 def test_stream_first_seen_hand_computed(spark, tmp_path):

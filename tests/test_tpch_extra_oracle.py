@@ -10,10 +10,10 @@ from etl_pipeline_example_spark.plans.tpch_extra import (
     TPCH_EXTRA_QUERIES,
 )
 
-from tests.oracle_util import assert_matches_oracle
+from tools.drivercheck import oracle_mismatch
 
 
 @pytest.mark.parametrize("name", sorted(TPCH_EXTRA_QUERIES))
 def test_tpch_extra_matches_oracle(spark, duck, sf_dir, name):
     df = TPCH_EXTRA_QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, TPCH_EXTRA_ORACLES[name])
+    assert oracle_mismatch(df, duck, TPCH_EXTRA_ORACLES[name]) is None

@@ -21,7 +21,13 @@ column must resolve to a type in ``ALLOWED`` (or an array of one): a
 decimal, float or NTZ column hashes differently from the oracle through
 Arrow or pandas even when both engines emit the same type and values.
 Values compare exactly, ``Decimal`` against ``Decimal``; only floats get
-the tolerance below.
+the tolerance below, and only when the CLI runs without
+``DRIVERCHECK_STRICT=1``.
+
+``oracle_mismatch`` is the one oracle comparator: this CLI and the test
+suite's oracle checks (over ``oracle_connection``) both judge a key with
+it, and the repo benchmark's verify step uses its ``normalize`` and
+``values_equal``.
 """
 
 from __future__ import annotations
@@ -175,19 +181,19 @@ def normalize(rows, columns):
     return sorted(out, key=lambda t: tuple(_sort_key(x) for x in t))
 
 
-# DRIVERCHECK_STRICT=1 switches the float compare to bit-exact equality,
-# matching the driver's value-hash gate: the default 1e-9 relative
-# tolerance exists to triage, but a sub-tolerance cross-engine drift
-# would pass here and still FAIL the driver, so the pre-round sweep runs
-# strict.
+# DRIVERCHECK_STRICT=1 switches the CLI's float compare to bit-exact
+# equality, matching the driver's value-hash gate: the default 1e-9
+# relative tolerance exists to triage, but a sub-tolerance cross-engine
+# drift would pass here and still FAIL the driver, so the pre-round sweep
+# runs strict.
 STRICT = os.environ.get("DRIVERCHECK_STRICT", "") == "1"
 
 
-def values_equal(a, b):
+def values_equal(a, b, strict=STRICT):
     if isinstance(a, float) and isinstance(b, float):
         if math.isnan(a) and math.isnan(b):
             return True
-        if STRICT:
+        if strict:
             return a == b
         return abs(a - b) <= 1e-9 * max(1.0, abs(b))
     return a == b
@@ -210,11 +216,56 @@ def type_report(sdf, arrow_schema):
     return bad
 
 
+def oracle_connection(sf_dir):
+    """An in-memory DuckDB connection with one view per testdata table of
+    ``sf_dir``, the names the oracles query."""
+    import duckdb
+
+    from etl_pipeline_example_spark.sources.tables import TESTDATA_TABLES
+
+    con = duckdb.connect()
+    for name in TESTDATA_TABLES:
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    return con
+
+
+def oracle_mismatch(sdf, con, sql, strict=True, stats=None):
+    """Why the Spark frame ``sdf`` differs from the DuckDB oracle ``sql``
+    run on ``con``, or None when they match.
+
+    Checks in order: the column set, the output types (``type_report``),
+    the row count, then every value of the sorted rows (``values_equal``;
+    ``strict`` makes floats bit-exact). When ``stats`` is a dict it
+    receives ``rows`` and the seconds of the Spark collect and of the
+    oracle run, ``spark_s`` and ``oracle_s``."""
+    t0 = time.perf_counter()
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    t1 = time.perf_counter()
+    atable = con.sql(sql).arrow()
+    if stats is not None:
+        stats.update(rows=len(srows), spark_s=t1 - t0, oracle_s=time.perf_counter() - t1)
+    dcols = atable.schema.names
+    if sorted(scols) != sorted(dcols):
+        return f"columns {sorted(scols)} vs {sorted(dcols)}"
+    tbad = type_report(sdf, atable.schema)
+    if tbad:
+        return f"output types: {'; '.join(tbad)}"
+    drows = list(zip(*(c.to_pylist() for c in atable.columns)))
+    if len(srows) != len(drows):
+        return f"rows {len(srows)} vs {len(drows)}"
+    a = normalize(srows, scols)
+    b = normalize(drows, dcols)
+    for i, (ra, rb) in enumerate(zip(a, b)):
+        if not all(values_equal(va, vb, strict) for va, vb in zip(ra, rb)):
+            return f"row {i}\n  spark={ra}\n  duck ={rb}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
@@ -225,12 +276,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    con = oracle_connection(sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -238,60 +284,30 @@ def main() -> int:
     for key, fn in qs.items():
         if only and key not in only:
             continue
-        t0 = time.time()
+        stats = {}
         try:
+            t0 = time.perf_counter()
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            build_s = time.perf_counter() - t0
+            if key not in oracles:
+                print(f"ROWS {key}: {len(sdf.collect())} rows (no oracle)")
+                continue
+            why = oracle_mismatch(sdf, con, oracles[key], STRICT, stats)
         except Exception as exc:  # noqa: BLE001
             print(f"ERR  {key}: {type(exc).__name__}: {exc}")
             failed.append(key)
             continue
-        if key not in oracles:
-            print(f"ROWS {key}: {len(srows)} rows (no oracle)")
-            continue
-        rel = con.sql(oracles[key])
-        atable = rel.arrow()
-        dcols = atable.schema.names
-        drows = [tuple(_norm_arrow(v) for v in row) for row in zip(*(c.to_pylist() for c in atable.columns))] if atable.num_columns else []
-        dt = time.time() - t0
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL {key}: columns {sorted(scols)} vs {sorted(dcols)}")
-            failed.append(key)
-            continue
-        tbad = type_report(sdf, atable.schema)
-        if tbad:
-            print(f"FAIL {key}: output types: {'; '.join(tbad)}")
-            failed.append(key)
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL {key}: rows {len(srows)} vs {len(drows)}")
-            failed.append(key)
-            continue
-        a = normalize(srows, scols)
-        b = normalize(drows, list(dcols))
-        bad = None
-        for i, (ra, rb) in enumerate(zip(a, b)):
-            for va, vb in zip(ra, rb):
-                if not values_equal(va, vb):
-                    bad = (i, ra, rb)
-                    break
-            if bad:
-                break
-        if bad:
-            print(f"FAIL {key}: row {bad[0]}\n  spark={bad[1]}\n  duck ={bad[2]}")
+        if why:
+            print(f"FAIL {key}: {why}")
             failed.append(key)
         else:
-            print(f"PASS {key}: {len(srows)} rows in {dt:.1f}s")
+            print(
+                f"PASS {key}: {stats['rows']} rows; spark "
+                f"{build_s + stats['spark_s']:.1f}s, oracle {stats['oracle_s']:.1f}s"
+            )
     print(f"\n{'FAILED: ' + ', '.join(failed) if failed else 'ALL PASS'}")
     spark.stop()
     return 1 if failed else 0
-
-
-def _norm_arrow(v):
-    # to_pylist() yields Decimal for decimal128, datetime for timestamps —
-    # run them through the same normalizer as the Spark side.
-    return _norm(v)
 
 
 if __name__ == "__main__":
